@@ -37,10 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .io.tableio import Manifest, read_table
-from .operators.dedup import DedupResult, dedup
 from .operators.enrich import enrich
-from .operators.scoring import with_dimensions, with_policy
-from .pipeline import RESULT_COLUMNS, PipelineResult
+from .pipeline import PipelineResult, score_and_report
 
 
 class CheckpointedRun(NamedTuple):
@@ -124,31 +122,8 @@ def run_checkpointed(
     enriched = read_table(spark, enriched_dir, manifest).drop(
         "batch", "batch_id"
     )
-    dd: DedupResult = dedup(enriched)
-    scored = (
-        enriched.join(dd.flags, "clip_id", "left")
-        .fillna({"is_dup": False})
-        .withColumn(
-            "status", F.when(F.col("decode_ok"), "success").otherwise("error")
-        )
-        .withColumn("processed_at", F.lit(run_ts))
-    )
-    scored = with_policy(with_dimensions(scored, include_evidence))
-    results = scored.select(*RESULT_COLUMNS)
-    run_metrics = (
-        scored.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count("*").alias("n_clips"),
-            F.sum(F.col("keep").cast("long")).alias("n_keep"),
-            F.sum((~F.col("keep")).cast("long")).alias("n_drop"),
-            F.sum((F.col("status") == "error").cast("long")).alias("n_error"),
-            F.sum(F.col("is_dup").cast("long")).alias("n_duplicates"),
-            F.avg("overall_quality_score").alias("avg_overall"),
-        )
-        .withColumn("run_ts", F.lit(run_ts))
-    )
     return CheckpointedRun(
-        PipelineResult(results, dd.duplicate_pairs, dd.similarity_pairs, run_metrics),
+        score_and_report(enriched, run_ts, include_evidence),
         manifest.lineage_df(spark),
         ran,
         skipped,

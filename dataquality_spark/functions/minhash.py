@@ -103,10 +103,10 @@ def signature_frame(texts) -> dict[str, list]:
     float32[256]) — a BinaryType column crosses the Arrow boundary and the
     JVM row format as one memcpy instead of 64/256 boxed elements, which
     measurably dominates the enrich stage cost at scale.  ``tok_hashes``
-    (sorted distinct CRC32 token hashes, int64) is what the dedup cogroup
-    verifier consumes — exact set-Jaccard becomes a numpy ``intersect1d``
-    over sorted ints, and the shuffled payload is ~8 B/token instead of the
-    token strings themselves.
+    (sorted distinct CRC32 token hashes, int64) is what the dedup exact
+    verifier consumes — exact set-Jaccard becomes a native
+    ``array_intersect`` over ints, and the shuffled payload is ~8 B/token
+    instead of the token strings themselves.
     """
     toks_col: list[list[str]] = []
     th_col: list[list[int]] = []

@@ -36,8 +36,10 @@ payload growing only as the pair count shrinks:
    exact on every surviving pair — LSH banding and the estimate prefilter
    affect recall only (SURVEY §7.3), and both sit multiple sigma below what
    a true duplicate (cos >= 0.95 implies near-identical token sets) can
-   evade.  (A double-cogroup variant that ships each array once per bucket
-   is kept for pathological amplification; see ``_exact_jaccard_cogroup``.)
+   evade.
+
+Stages 3-5 are one helper (:func:`_verify`) shared by :func:`dedup` and
+:func:`dedup_increment`; the two differ only in candidate generation.
 
 ``similarity_pairs`` reporting — a deliberate, documented deviation: the
 reference appends EVERY compared pair to its report unconditionally before
@@ -49,8 +51,9 @@ gate values where the exact path ran (cos >= 0.95 survivors) and the
 guaranteed present (the verified set is unioned in, not left-joined), so
 the two outputs can never disagree.
 
-AQE skew-join handles residual band-bucket skew; the explicit salting knob
-is the coarse bucket count of the cogroup.
+Hot band buckets are defused by BUCKET_CAP star edges (see
+:func:`_band_windows`); AQE skew-join handles residual skew in the payload
+attach joins.
 """
 
 from __future__ import annotations
@@ -182,17 +185,17 @@ def _exact_jaccard_native(pairs: DataFrame, tokens: DataFrame) -> DataFrame:
     ``array_intersect``/``size`` compute |A∩B| and |A∪B| inside
     whole-stage codegen.
 
-    This replaced the round-2 double-cogroup (``applyInPandas``) verify:
-    that design shipped the ENTIRE tokens table through the Arrow boundary
-    twice to save re-shipping arrays once per pair — but the pairs reaching
-    this stage are the cos>=0.95 survivors of a star-capped LSH funnel, so
-    the per-pair amplification is small and bounded (BUCKET_CAP) while the
-    tokens side is the whole corpus.  Profiled at 640k clips / 8 pinned
-    cores the cogroup cost ~26 s of wall; the join form prunes the tokens
+    Why joins and not a cogroup (``applyInPandas``) that ships each token
+    array once per bucket instead of once per pair: the cogroup sends the
+    ENTIRE tokens table through the Arrow boundary twice, while the pairs
+    reaching this stage are the cos>=0.95 survivors of a star-capped LSH
+    funnel, so the per-pair amplification is small and bounded
+    (BUCKET_CAP).  Profiled at 640k clips / 8 pinned cores the cogroup
+    cost ~26 s of wall; the join form prunes the tokens
     scan to participating ids (AQE broadcasts the small pairs side) and
     keeps the set math in codegen — no Python in the loop at all.
-    Intersection semantics are identical: per-clip hash arrays are
-    distinct, and ``array_intersect`` returns distinct elements."""
+    Per-clip hash arrays are distinct, and ``array_intersect`` returns
+    distinct elements, so the intersection size is exact."""
     ta = tokens.select(
         F.col("clip_id").alias("id_a"), F.col("tok_hashes").alias("a_h")
     )
@@ -208,94 +211,152 @@ def _exact_jaccard_native(pairs: DataFrame, tokens: DataFrame) -> DataFrame:
     )
 
 
-def _exact_jaccard_cogroup(pairs: DataFrame, tokens: DataFrame,
-                           buckets: int) -> DataFrame:
-    """Exact token-set Jaccard for (id_a, id_b[, cos]) pairs via two cogroup
-    passes; each rep's token-hash array ships once per bucket, not once per
-    pair.  ``tokens`` carries ``tok_hashes`` — the sorted distinct uint64
-    token hashes already computed for MinHash — so the per-pair set math is
-    a numpy ``intersect1d`` over sorted int arrays (no Python ``set``
-    objects, no string hashing in the hot path).
+def _members(enriched: DataFrame, groups: DataFrame) -> DataFrame:
+    """Every clip with its eligibility and exact group (rep_id, group_size)."""
+    return (
+        enriched.select("clip_id", "t_hash", "lang", "n_tokens")
+        .withColumn("eligible", _eligible_col())
+        .join(groups, "t_hash")
+    )
 
-    Kept as the reference implementation for the pathological corpus where
-    near-everything is a candidate pair (amplification >> BUCKET_CAP would
-    favor ship-once-per-bucket); the decision path uses
-    :func:`_exact_jaccard_native` — see its docstring for the measured
-    trade."""
 
-    def attach_a(cand: pd.DataFrame, feats: pd.DataFrame) -> pd.DataFrame:
-        if cand.empty:
-            return pd.DataFrame(columns=["id_a", "id_b", "cos", "a_hashes"])
-        sel = feats.set_index("clip_id").loc[cand["id_a"].values]
-        return pd.DataFrame(
-            {
-                "id_a": cand["id_a"].values,
-                "id_b": cand["id_b"].values,
-                "cos": cand["cos"].values,
-                "a_hashes": sel["tok_hashes"].values,
-            }
+def _rep_feats(enriched: DataFrame, groups: DataFrame) -> DataFrame:
+    """Slim dedup features of the eligible group representatives — the
+    only rows that enter LSH candidate generation."""
+    return (
+        enriched.join(
+            groups.select(F.col("rep_id").alias("clip_id"), "group_size"),
+            "clip_id",
+            "left_semi",
         )
+        .filter(_eligible_col())
+        .select("clip_id", "lang", "tok_hashes", "bow", "bands", "minhash_sig")
+    )
 
-    def jac_b(cand: pd.DataFrame, feats: pd.DataFrame) -> pd.DataFrame:
-        cols = ["id_a", "id_b", "cos", "jaccard"]
-        if cand.empty:
-            return pd.DataFrame(columns=cols)
-        sel = feats.set_index("clip_id").loc[cand["id_b"].values]
-        a_h, b_h = cand["a_hashes"].values, sel["tok_hashes"].values
-        n = len(cand)
-        # Fully vectorized per-pair set intersection: tag every hash with
-        # its pair index, lexsort ONE concatenated (pair, hash) array, and
-        # count adjacent duplicates — a hash appears at most once per side
-        # (arrays are distinct per clip), so each adjacent-equal run is
-        # exactly one intersection hit.  One sort for the whole bucket
-        # replaces a Python loop of per-pair ``np.intersect1d`` calls.
-        la = np.fromiter((len(x) for x in a_h), dtype=np.int64, count=n)
-        lb = np.fromiter((len(x) for x in b_h), dtype=np.int64, count=n)
-        idx = np.arange(n, dtype=np.int64)
-        pair_ids = np.concatenate([np.repeat(idx, la), np.repeat(idx, lb)])
-        hashes = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in a_h]
-            + [np.asarray(x, dtype=np.int64) for x in b_h]
-        ) if pair_ids.size else np.empty(0, dtype=np.int64)
-        order = np.lexsort((hashes, pair_ids))
-        sp, sh = pair_ids[order], hashes[order]
-        dup = (sp[1:] == sp[:-1]) & (sh[1:] == sh[:-1])
-        inter = np.bincount(sp[1:][dup], minlength=n).astype(np.float64)
-        union = (la + lb).astype(np.float64) - inter
-        jac = np.divide(inter, union, out=np.zeros(n), where=union > 0)
-        return pd.DataFrame(
-            {
-                "id_a": cand["id_a"].values,
-                "id_b": cand["id_b"].values,
-                "cos": cand["cos"].values,
-                "jaccard": jac,
-            }
+
+def _star_edges(members: DataFrame) -> DataFrame:
+    """Exact duplicates as linear star edges (rep, member)."""
+    return (
+        members.filter(
+            F.col("eligible") & (F.col("group_size") >= 2)
+            & (F.col("clip_id") != F.col("rep_id"))
         )
-
-    cand_a = pairs.withColumn("bucket", F.pmod(F.xxhash64("id_a"), F.lit(buckets)))
-    tok_bk = tokens.withColumn("bucket", F.pmod(F.xxhash64("clip_id"), F.lit(buckets)))
-    attached = (
-        cand_a.groupBy("bucket")
-        .cogroup(tok_bk.groupBy("bucket"))
-        .applyInPandas(
-            attach_a,
-            schema="id_a string, id_b string, cos double, a_hashes array<bigint>",
+        .select(
+            F.col("rep_id").alias("clip_1"),
+            F.col("clip_id").alias("clip_2"),
+            F.lit(100.0).alias("metadata_similarity"),
+            F.lit(100.0).alias("similarity"),
+            F.lit(True).alias("is_duplicate"),
         )
     )
-    attached_b = attached.withColumn(
-        "bucket", F.pmod(F.xxhash64("id_b"), F.lit(buckets))
+
+
+def _band_windows(exploded: DataFrame) -> DataFrame:
+    """Per-bucket size and leader over exploded (clip_id, lang, band_idx,
+    band_hash) rows.
+
+    Duplicate-cluster skew defusal (north rule): a planted hot cluster
+    puts thousands of near-identical clips into ONE band bucket, and the
+    all-pairs self-join would emit C(k,2) rows from a single non-splittable
+    join key (one task emitting 10^7+ pairs serializes the whole stage —
+    measured: 8-core wall time doubled at 640k clips).  Buckets over
+    BUCKET_CAP therefore emit linear star edges (bucket leader, member)
+    instead of all pairs: at that size the bucket is a tight duplicate
+    cluster (random band collisions measured p99.9 = 35 members), every
+    member matches the leader, and the flags/transitive semantics match
+    the exact-group star-edge deviation documented above.  Buckets at or
+    under the cap keep exact all-pairs.
+
+    Size/leader come from a WINDOW over the band key, not a groupBy +
+    join-back: one exchange instead of three, and the band self-join then
+    reuses the window's hash partitioning (both sides derive from the
+    same frame), so candidate generation runs exchange-free after the
+    single band-key shuffle.  Giving up AQE skew-splitting on that join is
+    safe BY CONSTRUCTION: only bsize <= BUCKET_CAP rows enter it, so the
+    worst key's join work is bounded at C(cap, 2) per band — the cap, not
+    AQE, is the skew defusal here."""
+    bw = Window.partitionBy("band_idx", "band_hash", "lang")
+    return exploded.withColumn("bsize", F.count("*").over(bw)).withColumn(
+        "leader", F.min("clip_id").over(bw)
+    )
+
+
+def _verify(cand: DataFrame, feats: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Funnel stages 3-5 over candidate pairs (id_a < id_b): signature
+    estimate prefilter -> cosine -> native exact verify.
+
+    Returns ``(cos_pairs, verified_dups)``: every estimate survivor with
+    its est_jaccard and cos, and the pairs passing the exact P5 rule in
+    the duplicate-pair shape.  Both are persisted — ``cos_pairs`` feeds
+    the verify and the similarity report, ``verified_dups`` the pairs, the
+    report and the flags."""
+    # --- stage 3: signature-estimate prefilter (512 B blobs) --------------
+    with_sigs = _attach_both(cand, feats.select("clip_id", "minhash_sig"),
+                             "minhash_sig")
+    survivors = _estimate_pairs(with_sigs).filter(
+        F.col("est_jaccard") >= EST_PREFILTER
+    )
+
+    # --- stage 4: vectorized cosine (1 KB blobs) ---------------------------
+    with_bows = _attach_both(survivors, feats.select("clip_id", "bow"), "bow")
+    cos_pairs = cached(_cosine_pairs(with_bows))
+
+    # --- stage 5: exact gate on the cos-qualified few ----------------------
+    dup_elig = cos_pairs.filter(F.col("cos") >= DUP_COS_MIN).select(
+        "id_a", "id_b", "cos"
+    )
+    exact = _exact_jaccard_native(
+        dup_elig, feats.select("clip_id", "tok_hashes")
+    )
+    # P6: lang equality is guaranteed by the band join key -> 0.5 + 0.5*jac
+    verified_dups = (
+        exact.withColumn("gate", F.lit(0.5) + F.lit(0.5) * F.col("jaccard"))
+        .filter(F.col("gate") >= DUP_GATE_MIN)
+        .select(
+            F.col("id_a").alias("clip_1"),
+            F.col("id_b").alias("clip_2"),
+            # C7 percent formatting — metadata.py:595-596
+            F.round(F.col("gate") * 100.0, 2).alias("metadata_similarity"),
+            F.round(F.col("cos") * 100.0, 2).alias("similarity"),
+            F.lit(True).alias("is_duplicate"),
+        )
+    )
+    return cos_pairs, cached(verified_dups)
+
+
+def _flags(members: DataFrame, verified_dups: DataFrame) -> DataFrame:
+    """(clip_id, is_dup, dup_of) for ``members``: a clip is a duplicate
+    when its exact group has >= 2 members or its representative is in a
+    verified near-dup pair (symmetric attachment, metadata.py:608-617)."""
+    near_rep_ids = (
+        verified_dups.select(
+            F.explode(F.array("clip_1", "clip_2")).alias("rep_id")
+        )
+        .distinct()
+        .withColumn("rep_near_dup", F.lit(True))
     )
     return (
-        attached_b.groupBy("bucket")
-        .cogroup(tok_bk.groupBy("bucket"))
-        .applyInPandas(
-            jac_b, schema="id_a string, id_b string, cos double, jaccard double"
+        members.join(near_rep_ids, "rep_id", "left")
+        .withColumn(
+            "is_dup",
+            F.col("eligible")
+            & (
+                (F.col("group_size") >= 2)
+                | F.coalesce(F.col("rep_near_dup"), F.lit(False))
+            ),
         )
+        .withColumn(
+            "dup_of",
+            F.when(
+                F.col("is_dup") & (F.col("clip_id") != F.col("rep_id")),
+                F.col("rep_id"),
+            ),
+        )
+        .select("clip_id", "is_dup", "dup_of")
     )
 
 
-def dedup_increment(enriched_all: DataFrame, new_ids: DataFrame,
-                    buckets: int = 64) -> DedupResult:
+def dedup_increment(enriched_all: DataFrame, new_ids: DataFrame) -> DedupResult:
     """Incremental near-dup detection: flag a NEW slice of clips against
     the full corpus without recomputing corpus×corpus pairs.
 
@@ -322,9 +383,7 @@ def dedup_increment(enriched_all: DataFrame, new_ids: DataFrame,
     groups = cached(exact_groups(enriched_all))
 
     members = (
-        enriched_all.select("clip_id", "t_hash", "lang", "n_tokens")
-        .withColumn("eligible", _eligible_col())
-        .join(groups, "t_hash")
+        _members(enriched_all, groups)
         .join(new_marked, "clip_id", "left")
         .fillna({"is_new": False})
     )
@@ -336,47 +395,24 @@ def dedup_increment(enriched_all: DataFrame, new_ids: DataFrame,
     )
 
     # exact star edges touching a new row (member new, or rep itself new)
-    exact_pairs = (
-        members.join(rep_new, "rep_id", "left")
-        .filter(
-            F.col("eligible") & (F.col("group_size") >= 2)
-            & (F.col("clip_id") != F.col("rep_id"))
-            & (F.col("is_new") | F.coalesce("rep_is_new", F.lit(False)))
-        )
-        .select(
-            F.col("rep_id").alias("clip_1"),
-            F.col("clip_id").alias("clip_2"),
-            F.lit(100.0).alias("metadata_similarity"),
-            F.lit(100.0).alias("similarity"),
-            F.lit(True).alias("is_duplicate"),
+    exact_pairs = _star_edges(
+        members.join(rep_new, "rep_id", "left").filter(
+            F.col("is_new") | F.coalesce("rep_is_new", F.lit(False))
         )
     )
 
-    feats = (
-        enriched_all.join(
-            groups.select(F.col("rep_id").alias("clip_id")),
-            "clip_id", "left_semi",
-        )
-        .filter(_eligible_col())
-        .select("clip_id", "lang", "tok_hashes", "bow", "bands",
-                "minhash_sig")
+    feats = cached(
+        _rep_feats(enriched_all, groups)
         .join(new_marked, "clip_id", "left")
         .fillna({"is_new": False})
     )
-    feats = cached(feats)
-    exploded = feats.select(
-        "clip_id", "lang", "is_new",
-        F.posexplode("bands").alias("band_idx", "band_hash"),
-    )
     # Same BUCKET_CAP skew defusal as the full path: a hot band bucket in
     # the corpus would otherwise make the new-side × all-side join emit
-    # |new-in-bucket| × |bucket| rows from one non-splittable key.  Same
-    # window-over-band-key formulation as dedup(): one exchange, and the
-    # band join below reuses the partitioning (cap bounds the worst key).
-    bw = Window.partitionBy("band_idx", "band_hash", "lang")
-    exploded = exploded.withColumn("bsize", F.count("*").over(bw)).withColumn(
-        "leader", F.min("clip_id").over(bw)
-    )
+    # |new-in-bucket| × |bucket| rows from one non-splittable key.
+    exploded = _band_windows(feats.select(
+        "clip_id", "lang", "is_new",
+        F.posexplode("bands").alias("band_idx", "band_hash"),
+    ))
     small = exploded.filter(F.col("bsize") <= BUCKET_CAP)
     leaders_new = (
         exploded.select(F.col("leader").alias("clip_id")).distinct()
@@ -417,137 +453,32 @@ def dedup_increment(enriched_all: DataFrame, new_ids: DataFrame,
         .select("id_a", "id_b")
     )
 
-    slim = feats.select("clip_id", "minhash_sig", "bow", "tok_hashes")
-    with_sigs = _attach_both(cand, slim.select("clip_id", "minhash_sig"),
-                             "minhash_sig")
-    survivors = _estimate_pairs(with_sigs).filter(
-        F.col("est_jaccard") >= EST_PREFILTER
-    )
-    with_bows = _attach_both(survivors, slim.select("clip_id", "bow"), "bow")
-    cos_pairs = cached(_cosine_pairs(with_bows))
-    dup_elig = cos_pairs.filter(F.col("cos") >= DUP_COS_MIN).select(
-        "id_a", "id_b", "cos"
-    )
-    exact = _exact_jaccard_native(
-        dup_elig, slim.select("clip_id", "tok_hashes")
-    )
-    verified_dups = cached(
-        exact.withColumn("gate", F.lit(0.5) + F.lit(0.5) * F.col("jaccard"))
-        .filter(F.col("gate") >= DUP_GATE_MIN)
-        .select(
-            F.col("id_a").alias("clip_1"),
-            F.col("id_b").alias("clip_2"),
-            F.round(F.col("gate") * 100.0, 2).alias("metadata_similarity"),
-            F.round(F.col("cos") * 100.0, 2).alias("similarity"),
-            F.lit(True).alias("is_duplicate"),
-        )
-    )
-
-    near_rep_ids = (
-        verified_dups.select(
-            F.explode(F.array("clip_1", "clip_2")).alias("rep_id")
-        )
-        .distinct()
-        .withColumn("rep_near_dup", F.lit(True))
-    )
-    flags = (
-        members.filter(F.col("is_new"))
-        .join(near_rep_ids, "rep_id", "left")
-        .withColumn(
-            "is_dup",
-            F.col("eligible")
-            & (
-                (F.col("group_size") >= 2)
-                | F.coalesce(F.col("rep_near_dup"), F.lit(False))
-            ),
-        )
-        .withColumn(
-            "dup_of",
-            F.when(
-                F.col("is_dup") & (F.col("clip_id") != F.col("rep_id")),
-                F.col("rep_id"),
-            ),
-        )
-        .select("clip_id", "is_dup", "dup_of")
-    )
-
+    _, verified_dups = _verify(cand, feats)
+    flags = _flags(members.filter(F.col("is_new")), verified_dups)
     duplicate_pairs = exact_pairs.unionByName(verified_dups).orderBy(
         F.desc("similarity"), "clip_1", "clip_2"
     )
     return DedupResult(flags, duplicate_pairs, duplicate_pairs)
 
 
-def dedup(enriched: DataFrame, buckets: int = 64,
-          verify: str = "native") -> DedupResult:
-    # groups feeds members AND feats; feats feeds the band explode, the
-    # sig/bow attach joins, and the cogroup passes — without a persist each
-    # consumer re-runs the upstream agg/joins (measured ~2x on the whole
-    # dedup stage). Slim columns only; MEMORY_AND_DISK spills at scale.
+def dedup(enriched: DataFrame) -> DedupResult:
+    # groups feeds members AND feats; feats feeds the band explode and the
+    # sig/bow/token attach joins — without a persist each consumer re-runs
+    # the upstream agg/joins (measured ~2x on the whole dedup stage). Slim
+    # columns only; MEMORY_AND_DISK spills at scale.
     # Every persist goes through caching.cached() so callers can
     # caching.release_all() once outputs are materialized (paired
     # persist/unpersist lifecycle — bench, scaling job, catalog runner and
     # the pytest fixture all release).
     groups = cached(exact_groups(enriched))
-
-    members = (
-        enriched.select("clip_id", "t_hash", "lang", "n_tokens")
-        .withColumn("eligible", _eligible_col())
-        .join(groups, "t_hash")
-    )
-
-    # --- exact duplicates: linear star edges (rep, member) ----------------
-    exact_pairs = (
-        members.filter(
-            F.col("eligible") & (F.col("group_size") >= 2)
-            & (F.col("clip_id") != F.col("rep_id"))
-        )
-        .select(
-            F.col("rep_id").alias("clip_1"),
-            F.col("clip_id").alias("clip_2"),
-            F.lit(100.0).alias("metadata_similarity"),
-            F.lit(100.0).alias("similarity"),
-            F.lit(True).alias("is_duplicate"),
-        )
-    )
+    members = _members(enriched, groups)
+    exact_pairs = _star_edges(members)
 
     # --- LSH candidates over representatives ------------------------------
-    feats = (
-        enriched.join(
-            groups.select(F.col("rep_id").alias("clip_id"), "group_size"),
-            "clip_id",
-            "left_semi",
-        )
-        .filter(_eligible_col())
-        .select("clip_id", "lang", "tok_hashes", "bow", "bands", "minhash_sig")
-    )
-    feats = cached(feats)
-    exploded = feats.select(
+    feats = cached(_rep_feats(enriched, groups))
+    exploded = _band_windows(feats.select(
         "clip_id", "lang", F.posexplode("bands").alias("band_idx", "band_hash")
-    )
-    # Duplicate-cluster skew defusal (north rule): a planted hot cluster
-    # puts thousands of near-identical clips into ONE band bucket, and the
-    # all-pairs self-join would emit C(k,2) rows from a single non-splittable
-    # join key (one task emitting 10^7+ pairs serializes the whole stage —
-    # measured: 8-core wall time doubled at 640k clips).  Buckets over
-    # BUCKET_CAP therefore emit linear star edges (bucket leader, member)
-    # instead of all pairs: at that size the bucket is a tight duplicate
-    # cluster (random band collisions measured p99.9 = 35 members), every
-    # member matches the leader, and the flags/transitive semantics match
-    # the exact-group star-edge deviation documented above.  Buckets at or
-    # under the cap keep exact all-pairs.
-    #
-    # Per-bucket size/leader come from a WINDOW over the band key, not a
-    # groupBy + join-back: one exchange instead of three, and the self-join
-    # below then reuses the window's hash partitioning (both sides derive
-    # from the same frame), so candidate generation runs exchange-free
-    # after the single band-key shuffle.  Giving up AQE skew-splitting on
-    # that join is safe BY CONSTRUCTION: only bsize <= BUCKET_CAP rows
-    # enter it, so the worst key's join work is bounded at C(cap, 2) per
-    # band — the cap, not AQE, is the skew defusal here.
-    bw = Window.partitionBy("band_idx", "band_hash", "lang")
-    exploded = exploded.withColumn("bsize", F.count("*").over(bw)).withColumn(
-        "leader", F.min("clip_id").over(bw)
-    )
+    ))
     small = exploded.filter(F.col("bsize") <= BUCKET_CAP)
     big_edges = (
         exploded.filter(
@@ -581,49 +512,7 @@ def dedup(enriched: DataFrame, buckets: int = 64,
         .filter(F.col("n_bands") >= MIN_SHARED_BANDS)
         .select("id_a", "id_b")
     )
-
-    # --- stage 3: signature-estimate prefilter (512 B blobs) --------------
-    with_sigs = _attach_both(cand, feats.select("clip_id", "minhash_sig"),
-                             "minhash_sig")
-    survivors = _estimate_pairs(with_sigs).filter(
-        F.col("est_jaccard") >= EST_PREFILTER
-    )
-
-    # --- stage 4: vectorized cosine (1 KB blobs) ---------------------------
-    with_bows = _attach_both(survivors, feats.select("clip_id", "bow"), "bow")
-    cos_pairs = cached(_cosine_pairs(with_bows))
-
-    # --- stage 5: exact gate on the cos-qualified few ----------------------
-    dup_elig = cos_pairs.filter(F.col("cos") >= DUP_COS_MIN).select(
-        "id_a", "id_b", "cos"
-    )
-    # verify="native" (default): codegen array_intersect joins — measured
-    # faster at every tested scale because the pairs side is tiny.
-    # verify="cogroup": the north-star's cogroup-based detection — ships
-    # each token array once per bucket; the right trade only when pair
-    # amplification dwarfs the corpus (tests prove bit-equal outputs).
-    if verify == "cogroup":
-        exact = _exact_jaccard_cogroup(
-            dup_elig, feats.select("clip_id", "tok_hashes"), buckets
-        )
-    else:
-        exact = _exact_jaccard_native(
-            dup_elig, feats.select("clip_id", "tok_hashes")
-        )
-    # P6: lang equality is guaranteed by the band join key -> 0.5 + 0.5*jac
-    verified_dups = (
-        exact.withColumn("gate", F.lit(0.5) + F.lit(0.5) * F.col("jaccard"))
-        .filter(F.col("gate") >= DUP_GATE_MIN)
-        .select(
-            F.col("id_a").alias("clip_1"),
-            F.col("id_b").alias("clip_2"),
-            # C7 percent formatting — metadata.py:595-596
-            F.round(F.col("gate") * 100.0, 2).alias("metadata_similarity"),
-            F.round(F.col("cos") * 100.0, 2).alias("similarity"),
-            F.lit(True).alias("is_duplicate"),
-        )
-    )
-    verified_dups = cached(verified_dups)
+    cos_pairs, verified_dups = _verify(cand, feats)
 
     # --- P5 reporting: gate >= 0.7 pairs with their cosine -----------------
     report = (
@@ -661,34 +550,7 @@ def dedup(enriched: DataFrame, buckets: int = 64,
         .orderBy(F.desc("similarity"), "clip_1", "clip_2")  # O2
     )
 
-    # --- flags -------------------------------------------------------------
-    near_rep_ids = (
-        verified_dups.select(
-            F.explode(F.array("clip_1", "clip_2")).alias("rep_id")
-        )
-        .distinct()
-        .withColumn("rep_near_dup", F.lit(True))
-    )
-    flags = (
-        members.join(near_rep_ids, "rep_id", "left")
-        .withColumn(
-            "is_dup",
-            F.col("eligible")
-            & (
-                (F.col("group_size") >= 2)
-                | F.coalesce(F.col("rep_near_dup"), F.lit(False))
-            ),
-        )
-        .withColumn(
-            "dup_of",
-            F.when(
-                F.col("is_dup") & (F.col("clip_id") != F.col("rep_id")),
-                F.col("rep_id"),
-            ),
-        )
-        .select("clip_id", "is_dup", "dup_of")
-    )
-
+    flags = _flags(members, verified_dups)
     duplicate_pairs = exact_pairs.unionByName(verified_dups).orderBy(
         F.desc("similarity"), "clip_1", "clip_2"
     )  # O3

@@ -100,7 +100,7 @@ def enrich_batch(pdf: pd.DataFrame, langid_model, char_lm) -> pd.DataFrame:
             ).astype(np.int64),
             # NOTE: the raw token strings are deliberately NOT emitted —
             # every downstream consumer (MinHash banding, exact-Jaccard
-            # cogroup, scoring) works on the sorted distinct ``tok_hashes``;
+            # verify, scoring) works on the sorted distinct ``tok_hashes``;
             # an array<string> column per row would ride the repartition
             # shuffle, the cache, and every Arrow boundary for nothing.
             "tok_hashes": sigf["tok_hashes"],

@@ -5,7 +5,7 @@ as a Spark DataFrame DAG — SURVEY §3.1).
 Stages:
     clips --(salted repartition by clip_id hash)--> enrich (one fused
     mapInPandas: decode/langid/ppl/scrub/minhash) --> dedup (exact-group
-    collapse + LSH banding + cogroup verify) --> 17-dimension scoring +
+    collapse + LSH banding + native exact verify) --> 17-dimension scoring +
     keep/drop policy (pure native exprs, WholeStageCodegen) --> results,
     duplicate_pairs, similarity_pairs, run_metrics.
 """
@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .caching import cached
-from .operators.dedup import DedupResult, dedup
+from .operators.dedup import dedup
 from .operators.enrich import enrich
 from .operators.scoring import with_dimensions, with_policy
 
@@ -38,43 +38,28 @@ class PipelineResult(NamedTuple):
     run_metrics: DataFrame
 
 
-def run_pipeline(
-    clips: DataFrame,
-    run_ts: dt.datetime,
-    partitions: int | None = None,
-    include_evidence: bool = True,
-    dedup_buckets: int = 64,
-) -> PipelineResult:
-    spark = clips.sparkSession
-    if partitions is None:
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    enriched = enrich(clips, run_ts)
-    # Salted repartition by clip_id hash (north rule): spreads duplicate
-    # clusters (co-located in input files) evenly before the dedup joins.
-    # Deliberately AFTER enrich: the map-only enrich stage consumes `bytes`
-    # in place on the scan partitions, so the audio payload — the dominant
-    # volume at 100 TB — never enters a shuffle; only slim enriched columns
-    # are redistributed.
-    enriched = enriched.repartition(
-        partitions, F.pmod(F.xxhash64("clip_id"), F.lit(partitions))
-    )
-    # Reused by the dedup joins AND the scoring/report path — persist once.
-    # (registered: callers caching.release_all() after materializing sinks)
-    enriched = cached(enriched)
-
-    dd: DedupResult = dedup(enriched, buckets=dedup_buckets)
-
-    scored = enriched.join(dd.flags, "clip_id", "left").fillna(
-        {"is_dup": False}
-    )
+def score_rows(frame: DataFrame, run_ts: dt.datetime,
+               include_evidence: bool) -> DataFrame:
+    """status → 17 dimensions → keep/drop policy over enriched rows that
+    already carry ``is_dup``. Batch, checkpointed and streaming runs all
+    score through here."""
     # F2 error-row routing: decode failure is recorded, not dropped —
     # status column pattern (metadata.py:284-299).
-    scored = scored.withColumn(
+    scored = frame.withColumn(
         "status", F.when(F.col("decode_ok"), "success").otherwise("error")
     ).withColumn("processed_at", F.lit(run_ts))
+    return with_policy(with_dimensions(scored, include_evidence))
 
-    scored = with_policy(with_dimensions(scored, include_evidence))
+
+def score_and_report(enriched: DataFrame, run_ts: dt.datetime,
+                     include_evidence: bool = True) -> PipelineResult:
+    """dedup → flags join → :func:`score_rows` → results + run_metrics,
+    over an already-enriched frame."""
+    dd = dedup(enriched)
+    scored = score_rows(
+        enriched.join(dd.flags, "clip_id", "left").fillna({"is_dup": False}),
+        run_ts, include_evidence,
+    )
     results = scored.select(*RESULT_COLUMNS)
 
     # Run-level metrics (reference consolidated record, metadata.py:639-677):
@@ -92,3 +77,28 @@ def run_pipeline(
         .withColumn("run_ts", F.lit(run_ts))
     )
     return PipelineResult(results, dd.duplicate_pairs, dd.similarity_pairs, run_metrics)
+
+
+def run_pipeline(
+    clips: DataFrame,
+    run_ts: dt.datetime,
+    partitions: int | None = None,
+    include_evidence: bool = True,
+) -> PipelineResult:
+    spark = clips.sparkSession
+    if partitions is None:
+        partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    enriched = enrich(clips, run_ts)
+    # Salted repartition by clip_id hash (north rule): spreads duplicate
+    # clusters (co-located in input files) evenly before the dedup joins.
+    # Deliberately AFTER enrich: the map-only enrich stage consumes `bytes`
+    # in place on the scan partitions, so the audio payload — the dominant
+    # volume at 100 TB — never enters a shuffle; only slim enriched columns
+    # are redistributed.
+    enriched = enriched.repartition(
+        partitions, F.pmod(F.xxhash64("clip_id"), F.lit(partitions))
+    )
+    # Reused by the dedup joins AND the scoring/report path — persist once.
+    # (registered: callers caching.release_all() after materializing sinks)
+    return score_and_report(cached(enriched), run_ts, include_evidence)

@@ -2714,10 +2714,10 @@ _q(
     fn=_clips_dup_pairs,
     oracle=_duck_clips_pairs_oracle(enriched_path(N_PAIRS)),
     doc="Clips near-dup pair list (P5 reporting shape: file_1/file_2/"
-        "similarity percent, metadata.py:592-597) from the LSH + cogroup "
-        "path. Oracle: DuckDB recomputes the exact star edges AND the "
-        "exhaustive gated near-dup pairs with the same rounded percent "
-        "values over the pure-Python enriched parquet.",
+        "similarity percent, metadata.py:592-597) from the LSH + native "
+        "exact-verify path. Oracle: DuckDB recomputes the exact star edges "
+        "AND the exhaustive gated near-dup pairs with the same rounded "
+        "percent values over the pure-Python enriched parquet.",
     tags=("clips", "dedup"),
 )
 

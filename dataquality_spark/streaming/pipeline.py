@@ -12,10 +12,11 @@ source stream:
   is the autoloader pattern (file-notification source / Iceberg
   incremental scan) with the identical downstream plan.
 * **per-clip stages are engine-shared**: :func:`score_clips` calls the
-  exact batch operators (``operators.enrich`` mapInPandas + native-expr
-  scoring) — mapInPandas and WholeStageCodegen expression trees run
-  unchanged under micro-batch execution, so batch and stream outputs are
-  bit-identical per row (asserted in tests/test_streaming.py).
+  exact batch operators (``operators.enrich`` mapInPandas + the batch
+  pipeline's native-expr ``score_rows``) — mapInPandas and
+  WholeStageCodegen expression trees run unchanged under micro-batch
+  execution, so batch and stream outputs are bit-identical per row
+  (asserted in tests/test_streaming.py).
 * **stateful ops**: exact-dup suppression via
   ``dropDuplicatesWithinWatermark`` on the transcript hash (state expires
   with the event-time watermark instead of growing forever — the
@@ -53,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.enrich import enrich
-from ..operators.scoring import with_dimensions, with_policy
+from ..pipeline import score_rows
 
 CLIPS_STREAM_DDL = (
     "clip_id string, bytes binary, sr_hz int, dur_ms int, "
@@ -95,11 +96,10 @@ def score_clips(clips: DataFrame, run_ts: dt.datetime) -> DataFrame:
     joins (see module docstring); exact duplicates are handled by
     :func:`dedup_stream` upstream or the periodic batch dedup downstream.
     """
-    scored = enrich(clips, run_ts).withColumn("is_dup", F.lit(False))
-    scored = scored.withColumn(
-        "status", F.when(F.col("decode_ok"), "success").otherwise("error")
-    ).withColumn("processed_at", F.lit(run_ts))
-    scored = with_policy(with_dimensions(scored, include_evidence=False))
+    scored = score_rows(
+        enrich(clips, run_ts).withColumn("is_dup", F.lit(False)),
+        run_ts, include_evidence=False,
+    )
     return scored.select(*STREAM_RESULT_COLUMNS)
 
 

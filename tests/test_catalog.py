@@ -28,6 +28,7 @@ SUBSET = [
     "doc_pack_sequences",
     "tpch_q5_local_supplier_volume",
     "events_value_drift",
+    "clips_duplicate_pairs",
 ]
 
 

@@ -106,17 +106,51 @@ def test_connected_components_raises_at_iteration_cap(spark):
         connected_components(edges, nodes, max_iters=1)
 
 
-def test_native_and_cogroup_verify_bit_equal(spark):
-    """The north-star's cogroup-based verify and the default codegen
-    array_intersect verify are interchangeable: same pairs, same gate and
-    similarity values to the last bit (both compute exact set Jaccard on
-    the same sorted-distinct hash arrays)."""
-    from dataquality_spark.datagen.clips import clips_pdf
-    pdf = clips_pdf(300)
-    enriched = enrich(spark.createDataFrame(pdf), DEFAULT_RUN_TS).persist()
-    cols = ["clip_1", "clip_2", "metadata_similarity", "similarity"]
-    a = (dedup(enriched, verify="native").duplicate_pairs.toPandas()[cols]
-         .sort_values(cols[:2], ignore_index=True))
-    b = (dedup(enriched, verify="cogroup").duplicate_pairs.toPandas()[cols]
-         .sort_values(cols[:2], ignore_index=True))
-    pd.testing.assert_frame_equal(a, b)
+def test_funnel_invariant_to_shuffle_partitions(spark):
+    """Band leaders (min clip_id), BUCKET_CAP windows and star edges are
+    order-sensitive in principle: the full and incremental funnels must
+    give identical flags and pairs at any shuffle partition count."""
+    from pyspark.sql import functions as F
+
+    from dataquality_spark.caching import release_all
+    from dataquality_spark.operators.dedup import dedup_increment
+
+    enriched = enrich(
+        spark.createDataFrame(clips_pdf(300)), DEFAULT_RUN_TS
+    ).persist()
+    new_ids = enriched.filter(F.col("clip_id") >= "clip_000000000200").select(
+        "clip_id"
+    )
+
+    def frames():
+        full = dedup(enriched)
+        inc = dedup_increment(enriched, new_ids)
+        out = {
+            "flags": full.flags,
+            "duplicate_pairs": full.duplicate_pairs,
+            "similarity_pairs": full.similarity_pairs,
+            "increment_flags": inc.flags,
+        }
+        got = {}
+        for name, df in out.items():
+            pdf = df.toPandas()
+            got[name] = pdf.sort_values(list(pdf.columns), ignore_index=True)
+        release_all()
+        return got
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    try:
+        runs = []
+        for n in (1, 4, 13):
+            spark.conf.set(key, str(n))
+            runs.append(frames())
+    finally:
+        spark.conf.set(key, saved)
+        enriched.unpersist()
+    base = runs[0]
+    assert base["flags"]["is_dup"].any() and len(base["duplicate_pairs"])
+    assert base["increment_flags"]["is_dup"].any()
+    for other in runs[1:]:
+        for name, pdf in base.items():
+            pd.testing.assert_frame_equal(pdf, other[name], obj=name)

@@ -3,7 +3,8 @@
 The BASELINE.json gate: keep/drop F1 >= 0.99 vs reference-rule labels,
 scrubbed-transcript equality per clip, plus full action/score agreement.
 The oracle runs the O(n^2) reference dataflow; the pipeline runs the
-LSH/cogroup DAG — agreement here is the whole point of the build.
+LSH + native exact-verify DAG — agreement here is the whole point of the
+build.
 """
 
 import pandas as pd
