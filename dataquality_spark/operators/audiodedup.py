@@ -8,6 +8,11 @@ a banded equi-join on (n_words, chunk_idx, chunk_hash) — never all-pairs
 — and verification is a NATIVE zip_with/bit_count hamming expression, so
 no Python runs anywhere past the fingerprint map.
 
+Both matchers read the same fingerprint frame: the offset-invariant
+matcher derives its bigram posting keys natively from ``words``, so a
+clip's payload crosses into Python and is decoded exactly once per
+persisted fingerprint frame.
+
 100 TB shape:
 * the audio bytes are consumed on the scan partitions and never shuffle —
   only ~100-byte fingerprint rows move;
@@ -38,23 +43,16 @@ def audio_fingerprints(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
     """clip_id/bytes -> (fp_id, n_words, words array<int>, chunks
     array<bigint>) slim fingerprint rows; undecodable and silent clips
     are dropped (error routing happens upstream in the enrich pass)."""
-    import numpy as np
     import pandas as pd
-
-    from ..functions.audio import decode_wav_pcm16
 
     def fps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for cid, raw in zip(pdf[id_col], pdf["bytes"]):
-                try:
-                    dec = decode_wav_pcm16(bytes(raw))
-                except ValueError:
+                got = af.voiced_fingerprint(raw)
+                if got is None:
                     continue
-                x = dec.pcm.astype(np.float64) / 32767.0
-                if not x.size or float(np.sqrt(np.mean(x * x))) <= af.VAD_RMS_THRESH:
-                    continue  # silence gate: all-zero fingerprints collide
-                words = af.band_fingerprint(x, dec.sr_hz)
+                words = got[1]
                 rows.append((
                     cid,
                     int(words.size),
@@ -136,58 +134,12 @@ OFF_MIN_WORDS = 14     # min aligned overlap (words); 13 possible votes
 OFF_MAX_HAMMING = 0.05  # verify: bit-flip budget at the aligned overlap
 
 
-def bigram_fp_row(pcm, sr: int):
-    """Shared pcm16 -> (n_words, words, bigrams) packing for the
-    offset-invariant matcher.  ONE definition of the bigram key — the
-    operator's fingerprint pass and the catalog query's variant fan-out
-    (queries.py _clips_offset_align_dups) both call this, so the key
-    scheme cannot silently diverge between them.  Returns None when the
-    clip yields fewer than 2 fingerprint words."""
-    import numpy as np
-
-    x = np.asarray(pcm).astype(np.float64) / 32767.0
-    w = af.band_fingerprint(x, sr).astype(np.int64)
-    if w.size < 2:
-        return None
-    big = (w[:-1] << 16) | w[1:]
-    return int(w.size), [int(v) for v in w], [int(v) for v in big]
-
-
 def offset_fingerprints(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
-    """clip_id/bytes -> (fp_id, n_words, words, bigrams) rows for the
-    offset-invariant matcher.  `bigrams[j] = words[j]<<16 | words[j+1]`
-    is the inverted-index key: a single 16-bit word is too collision-
-    prone to index (65k distinct values over billions of frames), the
-    32-bit bigram carries enough noise-driven temporal structure to make
-    buckets sparse.  Zero-zero bigrams (digital silence) are dropped up
-    front — they are the audio analog of stop-words and would otherwise
-    form one quadratic bucket out of every silent leader."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.audio import decode_wav_pcm16
-
-    def fps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cid, raw in zip(pdf[id_col], pdf["bytes"]):
-                try:
-                    dec = decode_wav_pcm16(bytes(raw))
-                except ValueError:
-                    continue
-                x = dec.pcm.astype(np.float64) / 32767.0
-                if not x.size or float(np.sqrt(np.mean(x * x))) <= af.VAD_RMS_THRESH:
-                    continue
-                row = bigram_fp_row(dec.pcm, dec.sr_hz)
-                if row is None:
-                    continue
-                rows.append((cid, *row))
-            yield pd.DataFrame(rows, columns=["fp_id", "n_words", "words", "bigrams"])
-
-    return clips.select(F.col(id_col).alias(id_col), "bytes").mapInPandas(
-        fps,
-        schema="fp_id string, n_words int, words array<int>, bigrams array<bigint>",
-    )
+    """The fingerprint frame the offset-invariant matcher reads: exactly
+    ``audio_fingerprints(clips)``, so when that frame is persisted the
+    matcher's internal ``cached()`` resolves to it and both matchers
+    share one decode."""
+    return audio_fingerprints(clips, id_col)
 
 
 def offset_align_pairs(
@@ -202,7 +154,15 @@ def offset_align_pairs(
     Stages (all equi-joins / keyed aggregations — no all-pairs, no
     global window):
 
-    1. posting list: posexplode(bigrams) -> (fp_id, pos, key);
+    1. posting list: (fp_id, pos, key) with
+       ``key = words[pos] << 16 | words[pos + 1]``, derived natively
+       from ``words`` (rows with ``n_words < 2`` post nothing).  A single
+       16-bit word is too collision-prone to index (65k distinct values
+       over billions of frames); the 32-bit bigram carries enough
+       noise-driven temporal structure to make buckets sparse.  Zero
+       keys (digital silence) are dropped — the audio analog of
+       stop-words, which would otherwise form one quadratic bucket out
+       of every silent leader;
     2. df-cap: keys appearing in > bigram_cap postings are dropped (hot
        boilerplate features — jingles, dial tones — would otherwise
        create a near-quadratic bucket; a true copy pair still has
@@ -215,22 +175,29 @@ def offset_align_pairs(
        overlap as a native zip_with/bit_count expression inside
        whole-stage codegen.
 
-    100 TB: bytes never reach this operator (offset_fingerprints
+    100 TB: bytes never reach this operator (the fingerprint map
     consumed them on the scan partitions); postings are 3-column slim
     rows; every join is an equi-join AQE can re-plan for skew; the
     df-cap bounds the worst bucket.  ``fp`` is consumed FOUR times
     (postings twice via the self-join, df-cap counts, both verify
-    sides), so it is persisted here through caching.cached() — when it
-    is a decode+FFT mapInPandas fan-out, an unpersisted plan would
-    recompute that work per consumer.  Released by the standard
-    release_all lifecycle.  Returns (clip_1, clip_2, offset_words,
-    overlap_words, hamming)."""
+    sides), so it is persisted here through caching.cached().  When the
+    caller already holds ``cached(audio_fingerprints(clips))``, this
+    resolves to that live frame and the offset matcher decodes nothing;
+    otherwise it persists the fingerprint map once.  Released by the
+    standard release_all lifecycle.  Returns (clip_1, clip_2,
+    offset_words, overlap_words, hamming)."""
     from ..caching import cached
 
     fp = cached(fp)
-    posts = fp.select(
-        "fp_id", F.posexplode("bigrams").alias("pos", "key")
-    ).filter(F.col("key") != 0)
+    bigrams = F.expr(
+        "zip_with(slice(words, 1, n_words - 1), slice(words, 2, n_words - 1), "
+        "(x, y) -> shiftleft(CAST(x AS BIGINT), 16) | CAST(y AS BIGINT))"
+    )
+    posts = (
+        fp.filter(F.col("n_words") >= 2)
+        .select("fp_id", F.posexplode(bigrams).alias("pos", "key"))
+        .filter(F.col("key") != 0)
+    )
 
     key_ok = posts.groupBy("key").count().filter(F.col("count") <= bigram_cap)
     posts = posts.join(key_ok.select("key"), "key")

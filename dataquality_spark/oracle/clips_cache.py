@@ -369,19 +369,13 @@ def fp_pair_row(clip_id: str, raw: bytes) -> tuple:
     import numpy as np
 
     from ..functions import audiofeat as af
-    from ..functions.audio import decode_wav_pcm16
 
     suffix = clip_id.split("_")[1]
-    try:
-        dec = decode_wav_pcm16(bytes(raw))
-    except ValueError:
+    got = af.voiced_fingerprint(raw)
+    if got is None:
         return (clip_id, f"dupc_{suffix}", 0.0, 0)
-    x = dec.pcm.astype(np.float64) / 32767.0
-    voiced = float(np.sqrt(np.mean(x * x))) > af.VAD_RMS_THRESH if x.size else False
-    if not voiced:
-        return (clip_id, f"dupc_{suffix}", 0.0, 0)
+    dec, fa = got
     xs = scaled_pcm16(dec.pcm).astype(np.float64) / 32767.0
-    fa = af.band_fingerprint(x, dec.sr_hz)
     fb = af.band_fingerprint(xs, dec.sr_hz)
     return (clip_id, f"dupc_{suffix}", af.hamming_frac(fa, fb), 1)
 

@@ -4317,12 +4317,7 @@ def _clips_offset_align_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .datagen.clips import DEFAULT_RUN_TS, clips_df
     from .functions import audiofeat as af
-    from .functions.audio import decode_wav_pcm16
-    from .operators.audiodedup import (
-        OFF_MAX_HAMMING,
-        bigram_fp_row,
-        offset_align_pairs,
-    )
+    from .operators.audiodedup import OFF_MAX_HAMMING, offset_align_pairs
     from .oracle.clips_cache import shifted_scaled_pcm16
 
     def fps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -4331,29 +4326,21 @@ def _clips_offset_align_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for cid, raw in zip(pdf["clip_id"], pdf["bytes"]):
-                try:
-                    dec = decode_wav_pcm16(bytes(raw))
-                except ValueError:
+                got = af.voiced_fingerprint(raw)
+                if got is None:
                     continue
-                x = dec.pcm.astype(np.float64) / 32767.0
-                if not x.size or float(np.sqrt(np.mean(x * x))) <= af.VAD_RMS_THRESH:
-                    continue
+                dec, w = got
                 suffix = cid.split("_")[1]
-                s = 4 + int(suffix) % 5
-                variants = (
-                    (cid, dec.pcm),
-                    (f"shft_{suffix}", shifted_scaled_pcm16(dec.pcm, s)),
-                )
-                for fid, pcm in variants:
-                    row = bigram_fp_row(pcm, dec.sr_hz)
-                    if row is not None:
-                        rows.append((fid, *row))
-            yield pd.DataFrame(rows, columns=["fp_id", "n_words", "words", "bigrams"])
+                shifted = shifted_scaled_pcm16(dec.pcm, 4 + int(suffix) % 5)
+                w2 = af.band_fingerprint(shifted.astype(np.float64) / 32767.0,
+                                         dec.sr_hz)
+                for fid, words in ((cid, w), (f"shft_{suffix}", w2)):
+                    rows.append((fid, int(words.size), [int(v) for v in words]))
+            yield pd.DataFrame(rows, columns=["fp_id", "n_words", "words"])
 
     clips = clips_df(spark, N_OFFSET, run_ts=DEFAULT_RUN_TS)
     fp = clips.select("clip_id", "bytes").mapInPandas(
-        fps,
-        schema="fp_id string, n_words int, words array<int>, bigrams array<bigint>",
+        fps, schema="fp_id string, n_words int, words array<int>"
     )
     pairs = offset_align_pairs(fp)
     return pairs.select(

@@ -12,6 +12,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """Driver heap sized to the host: a quarter of RAM, clamped to
+    1-8 GiB, so the default never asks for more heap than the host has."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    return f"{min(8192, max(1024, kb // 1024 // 4))}m"
+
+
 def get_spark(
     app_name: str = "dataquality_spark",
     master: str | None = None,
@@ -36,7 +45,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -91,15 +91,10 @@ def _corpus_fps(n: int) -> tuple[dict, dict]:
 def _spark_pairs(spark, fps: dict, **kw) -> list:
     from dataquality_spark.operators.audiodedup import offset_align_pairs
 
-    rows = []
-    for cid, w in fps.items():
-        w64 = w.astype(np.int64)
-        big = (w64[:-1] << 16) | w64[1:]
-        rows.append((cid, int(w.size), [int(v) for v in w64],
-                     [int(v) for v in big]))
+    rows = [(cid, int(w.size), [int(v) for v in w]) for cid, w in fps.items()]
     fp = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["fp_id", "n_words", "words", "bigrams"]),
-        schema="fp_id string, n_words int, words array<int>, bigrams array<bigint>",
+        pd.DataFrame(rows, columns=["fp_id", "n_words", "words"]),
+        schema="fp_id string, n_words int, words array<int>",
     )
     return sorted(
         (r.clip_1, r.clip_2, r.offset_words, r.overlap_words, r.hamming)
@@ -152,6 +147,25 @@ def test_negative_offset_detected(spark):
     assert off == -6
     assert ov == int(w.size)
     assert h <= 0.05
+
+
+def test_short_fingerprints_post_nothing(spark):
+    """0-word and 1-word fingerprints have no bigram: they post no key,
+    fail no task, and leave a real shifted pair beside them unchanged."""
+    from dataquality_spark.datagen.clips import row_for
+    from dataquality_spark.functions.audio import decode_wav_pcm16
+    from dataquality_spark.oracle.clips_cache import shifted_scaled_pcm16
+
+    dec = decode_wav_pcm16(bytes(row_for(40)["bytes"]))
+    w = af.band_fingerprint(dec.pcm.astype(np.float64) / 32767.0, dec.sr_hz)
+    shifted = shifted_scaled_pcm16(dec.pcm, 5)
+    w2 = af.band_fingerprint(shifted.astype(np.float64) / 32767.0, dec.sr_hz)
+    pair = {"orig": w, "shft": w2}
+    want = _spark_pairs(spark, pair)
+    assert len(want) == 1
+    short = {"a_empty": np.empty(0, dtype=np.uint16),
+             "a_one": w[:1].copy(), "z_one": w2[5:6].copy()}
+    assert _spark_pairs(spark, {**pair, **short}) == want
 
 
 def test_bigram_cap_drops_hot_keys(spark):

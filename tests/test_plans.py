@@ -21,6 +21,19 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _outside_cache(plan: str) -> str:
+    """Plan text minus the stored plan printed under each
+    InMemoryRelation: a cache hit prints that plan but does not run it."""
+    kept, depth = [], None
+    for line in plan.splitlines():
+        col = len(line) - len(line.lstrip(" :+-"))
+        if depth is not None and col > depth:
+            continue
+        depth = col if "InMemoryRelation" in line else None
+        kept.append(line)
+    return "\n".join(kept)
+
+
 def test_tpch_q1_pushes_filter_to_scan(spark):
     plan = _plan(CATALOG["tpch_q1_pricing_summary"].run(spark, SF_DIR))
     # the l_shipdate predicate must reach the parquet reader
@@ -109,6 +122,30 @@ def test_audio_fingerprint_dedup_plan_shape(spark):
         assert not re.search(r"\bbytes#", inp), (
             f"audio bytes entered a shuffle: {inp[:120]}"
         )
+
+
+def test_audio_matchers_share_one_decode(spark):
+    """With the chunk matcher's fingerprint frame persisted, the offset
+    matcher must read that frame instead of decoding the audio again: its
+    plan scans the in-memory relation, holds no Python map operator, and
+    persists nothing of its own. A fingerprint map that stops being
+    plan-equal across builds (e.g. a new closure variable changing its
+    pickled bytes) fails here."""
+    from dataquality_spark.caching import cached, release_all
+    from dataquality_spark.datagen.clips import clips_df
+    from dataquality_spark.operators.audiodedup import (
+        audio_fingerprints,
+        offset_align_pairs,
+        offset_fingerprints,
+    )
+
+    clips = clips_df(spark, 60)
+    cached(audio_fingerprints(clips))
+    plan = _outside_cache(_plan(offset_align_pairs(offset_fingerprints(clips))))
+    assert "InMemoryTableScan" in plan
+    assert "MapInPandas" not in plan
+    assert "PythonMapInArrow" not in plan
+    assert release_all() == 1  # the one shared fingerprint frame
 
 
 def test_exact_verify_is_jvm_native(spark):
