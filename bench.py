@@ -64,26 +64,10 @@ def _host_load() -> dict:
     return {"loadavg": load, "other_running_procs": running}
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _, files in os.walk(path):
-        for fn in files:
-            if not fn.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, fn))
-    return total
-
-
-def _force(df) -> int:
-    """Fully execute a DataFrame without driver-side collection cost."""
-    df.write.format("noop").mode("overwrite").save()
-    return 0
-
-
 def main() -> None:
-    from dataquality_spark.datagen.clips import DEFAULT_RUN_TS, write_clips_parquet
-    from dataquality_spark.pipeline import run_pipeline
+    from dataquality_spark import harness
+    from dataquality_spark.caching import release_all
     from dataquality_spark.queries import CATALOG
-    from dataquality_spark.session import get_spark
 
     load_at_start = _host_load()
 
@@ -105,39 +89,13 @@ def main() -> None:
         )
         subprocess.run([sys.executable, "-c", code], check=True)
 
-    # Scan splits sized to THIS input and core count: at sf0.1 the clips
-    # table is ~540 MB, and the 128m default packs it into ~6 splits — an
-    # enrich stage capped at 6 of 32 cores. One file per split (files are
-    # single row groups at this size) restores full-width scans; openCost
-    # is dropped so the sizing math is the file bytes themselves.
-    split = max(2 << 20, min(128 << 20, _dir_bytes(CLIPS_CACHE) // N_FILES))
-    spark = get_spark(app_name="bench", master=f"local[{CPUS}]",
-                      shuffle_partitions=CPUS,
-                      extra_conf={
-                          "spark.sql.files.maxPartitionBytes": str(split),
-                          "spark.sql.files.openCostInBytes": str(1 << 20),
-                          # The scoring CASE trees make uncapped plan-string
-                          # renders cost driver-seconds per AQE stage
-                          # materialization (event-log measured); benchmark
-                          # sessions never read explain output, so cap it.
-                          "spark.sql.maxPlanStringLength": "8192",
-                      })
+    spark = harness.timed_session("bench", CLIPS_CACHE, CPUS)
+    split = spark.conf.get("spark.sql.files.maxPartitionBytes")
 
     timings: dict[str, float] = {}
 
     # --- warmup: spin up executor threads, Python workers, codegen -------
-    from dataquality_spark.caching import release_all
-
-    # Generated 512-row slice, NOT clips.limit(512): a GlobalLimit over
-    # the scan launches every split and shuffles rows from each.
-    from dataquality_spark.datagen.clips import clips_df
-
-    warm = run_pipeline(
-        clips_df(spark, 512), DEFAULT_RUN_TS,
-        include_evidence=False,
-    )
-    _force(warm.results)
-    release_all()
+    harness.warm_up(spark)
 
     # --- flagship: clips quality-filter pipeline -------------------------
     # best-of-REPEATS: this virtualized host shows 2-3x wall variance from
@@ -151,38 +109,7 @@ def main() -> None:
     # min over N is monotone in N, so extra repeats only cost bench wall.
     repeats = max(1, int(os.environ.get("BENCH_REPEATS", "6")))
     clips = spark.read.parquet(CLIPS_CACHE)
-    repeat_secs: list[float] = []
-    import threading
-
-    # Sink threads must not swallow failures — a dropped exception would
-    # record a silently-short wall as a valid repeat.
-    _sink_errs: list[BaseException] = []
-
-    def _sink(df):
-        try:
-            _force(df)
-        except BaseException as e:  # noqa: BLE001 — re-raised after join
-            _sink_errs.append(e)
-
-    for _ in range(repeats):
-        t0 = time.time()
-        res = run_pipeline(clips, DEFAULT_RUN_TS, include_evidence=False)
-        # duplicate_pairs first (materializes the dedup funnel caches),
-        # then the two independent sinks CONCURRENTLY: each query's
-        # serial driver phases (AQE replan rounds between tiny stages —
-        # the dominant fixed cost at this corpus size) overlap the
-        # other's task execution. Same pattern as tools/scaling_job.py.
-        _force(res.duplicate_pairs)
-        ths = [threading.Thread(target=_sink, args=(d,))
-               for d in (res.results, res.run_metrics)]
-        for th in ths:
-            th.start()
-        for th in ths:
-            th.join()
-        if _sink_errs:
-            raise _sink_errs[0]
-        repeat_secs.append(round(time.time() - t0, 3))
-        release_all()
+    repeat_secs = [round(harness.timed_pass(clips), 3) for _ in range(repeats)]
     clip_sec = min(repeat_secs)
     timings["clips_pipeline"] = round(clip_sec, 3)
     clips_per_sec = round(N_CLIPS / clip_sec, 1)
@@ -204,12 +131,12 @@ def main() -> None:
     # 4 waves, and ONE wave of fat splits measures ~40% faster on the
     # offset matcher (A/B: 128/64/32-split ladder, both directions).
     spark.conf.set("spark.sql.files.maxPartitionBytes",
-                   str(max(2 << 20, _dir_bytes(CLIPS_CACHE) // CPUS)))
+                   str(max(2 << 20, harness.input_bytes(CLIPS_CACHE) // CPUS)))
     audio_clips = spark.read.parquet(CLIPS_CACHE)
 
     t0 = time.time()
     fp = cached(audio_fingerprints(audio_clips))
-    _force(fingerprint_pairs(fp))
+    harness.force(fingerprint_pairs(fp))
     timings["audio_fingerprint_dedup"] = round(time.time() - t0, 3)
 
     # --- offset-invariant audio dedup (time-shifted copy recovery) ------
@@ -225,18 +152,18 @@ def main() -> None:
     )
 
     t0 = time.time()
-    _force(offset_align_pairs(offset_fingerprints(audio_clips)))
+    harness.force(offset_align_pairs(offset_fingerprints(audio_clips)))
     timings["audio_offset_align_dedup"] = round(time.time() - t0, 3)
     release_all()
     # restore the flagship/catalog split sizing
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", split)
 
     # --- catalog headline queries ---------------------------------------
     for name, q in CATALOG.items():
         if "bench" not in q.tags or name.startswith("clips_"):
             continue
         t0 = time.time()
-        _force(q.run(spark, SF_DIR))
+        harness.force(q.run(spark, SF_DIR))
         timings[name] = round(time.time() - t0, 3)
     release_all()
 

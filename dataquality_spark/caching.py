@@ -13,7 +13,9 @@ Wire-up points:
 * ``queries.QueryDef.run`` releases the previous query's caches before
   building the next one (the driver's run-collect-run-collect loop means
   the previous result has always been materialized by then).
-* ``bench.py`` / ``tools/scaling_job.py`` release after each timed sink.
+* ``harness.timed_pass`` (behind ``bench.py`` and ``tools/scaling_job.py``)
+  releases after each timed sink pass; ``bench.py`` also releases after
+  its audio matchers and its catalog queries.
 * pytest releases via an autouse fixture (``tests/conftest.py``).
 
 Releasing early is safe — an unpersisted lazy frame recomputes instead of

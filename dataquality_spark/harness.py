@@ -1,0 +1,102 @@
+"""One timed run of the clips pipeline, shared by ``bench.py`` and the
+spark-submit scaling job ``tools/scaling_job.py``.
+
+Both time the same thing — read → enrich → dedup → policy → noop sinks,
+with input generation and cold planning left out — so the session shape,
+the warm-up and the sink pass are declared here once.  The module sits
+inside the package because the scaling job ships only
+``dataquality_spark/`` to ``--py-files``.
+"""
+
+from __future__ import annotations
+
+import os
+import time
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import DataFrame, SparkSession
+
+from .caching import release_all
+from .datagen.clips import DEFAULT_RUN_TS, clips_df
+from .pipeline import PipelineResult, run_pipeline
+from .session import get_spark
+
+WARM_CLIPS = 512
+
+
+def input_bytes(path: str) -> int:
+    """On-disk size of a parquet directory, without Spark's ``_SUCCESS``
+    and ``.crc`` side files (local FS here; on a cluster this is one
+    FileSystem.getContentSummary call)."""
+    total = 0
+    for root, _, files in os.walk(path):
+        for fn in files:
+            if not fn.startswith(("_", ".")):
+                total += os.path.getsize(os.path.join(root, fn))
+    return total
+
+
+def timed_session(app_name: str, input_path: str, cores: int,
+                  master: str | None = None) -> SparkSession:
+    """``get_spark`` with one shuffle partition per core and scan splits
+    sized to the input at ``cores``; ``master`` defaults to
+    ``local[cores]``."""
+    # Four splits per core, so the map-only enrich stage balances without
+    # fragmenting: at sf0.1 the clips table is ~540 MB, and the 128m
+    # default packs it into ~6 splits — an enrich stage capped at 6 of 32
+    # cores. At 640k clips, fixed 16m splits cost ~33% of the enrich
+    # stage's wall at 8 cores (per-task Arrow stream setup), so large
+    # inputs grow toward the 128m default. openCost is dropped so the
+    # sizing math is the file bytes themselves; the 2m floor keeps tiny
+    # inputs from splitting per row group.
+    split = max(2 << 20, min(128 << 20, input_bytes(input_path) // (4 * cores)))
+    return get_spark(app_name=app_name, master=master or f"local[{cores}]",
+                     shuffle_partitions=cores,
+                     extra_conf={
+                         "spark.sql.files.maxPartitionBytes": str(split),
+                         "spark.sql.files.openCostInBytes": str(1 << 20),
+                         # The scoring CASE trees make uncapped plan-string
+                         # renders cost driver-seconds per AQE stage
+                         # materialization (event-log measured); timed
+                         # sessions never read explain output, so cap it.
+                         "spark.sql.maxPlanStringLength": "8192",
+                     })
+
+
+def force(df: DataFrame) -> None:
+    """Fully execute a DataFrame without driver-side collection cost."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def sink_pass(res: PipelineResult) -> None:
+    """Materialize the pipeline's sinks and re-raise the first failure."""
+    # duplicate_pairs first: it materializes the dedup funnel into the
+    # shared caches. The two remaining sinks then run concurrently — each
+    # query's serial driver phases (AQE replan rounds between tiny stages,
+    # the dominant fixed cost at sandbox sizes) overlap the other's task
+    # execution. A failed sink must fail the run: a silently short wall
+    # would inflate throughput.
+    force(res.duplicate_pairs)
+    with ThreadPoolExecutor(2) as pool:
+        sinks = [pool.submit(force, df) for df in (res.results, res.run_metrics)]
+    for s in sinks:
+        s.result()
+
+
+def timed_pass(clips: DataFrame) -> float:
+    """Run the pipeline over ``clips`` through :func:`sink_pass`; returns
+    the wall in seconds. The run's caches are released afterwards."""
+    t0 = time.perf_counter()
+    sink_pass(run_pipeline(clips, DEFAULT_RUN_TS, include_evidence=False))
+    wall = time.perf_counter() - t0
+    release_all()
+    return wall
+
+
+def warm_up(spark: SparkSession) -> None:
+    """One untimed pass that starts the Python workers, builds the scorer
+    models and compiles the plan, so cold planning (a per-process
+    constant) stays out of the timed passes."""
+    # Generated, not clips.limit(512): a GlobalLimit over the scan
+    # launches every input split and shuffles rows from each.
+    timed_pass(clips_df(spark, WARM_CLIPS))

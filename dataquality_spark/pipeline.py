@@ -82,12 +82,9 @@ def score_and_report(enriched: DataFrame, run_ts: dt.datetime,
 def run_pipeline(
     clips: DataFrame,
     run_ts: dt.datetime,
-    partitions: int | None = None,
     include_evidence: bool = True,
 ) -> PipelineResult:
-    spark = clips.sparkSession
-    if partitions is None:
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    partitions = int(clips.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     enriched = enrich(clips, run_ts)
     # Salted repartition by clip_id hash (north rule): spreads duplicate

@@ -22,7 +22,7 @@ def frames(spark):
     pdf = clips_pdf(N)
     truth = label_frame(pdf, DEFAULT_RUN_TS).set_index("clip_id").sort_index()
     clips = spark.createDataFrame(pdf)
-    res = run_pipeline(clips, DEFAULT_RUN_TS, partitions=8, include_evidence=True)
+    res = run_pipeline(clips, DEFAULT_RUN_TS, include_evidence=True)
     got = (
         res.results.select(
             "clip_id", "is_dup", "overall_quality_score", "recommended_action",

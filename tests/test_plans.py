@@ -70,7 +70,7 @@ def test_pipeline_never_shuffles_audio_bytes(spark):
 
     from dataquality_spark.plan_utils import exchange_inputs, formatted_plan
 
-    res = run_pipeline(clips_df(spark, 50), DEFAULT_RUN_TS, partitions=4)
+    res = run_pipeline(clips_df(spark, 50), DEFAULT_RUN_TS)
     plan = formatted_plan(res.results, execute=True)
     inputs = exchange_inputs(plan)
     assert inputs, "no Exchange operators found in formatted plan"
@@ -161,7 +161,7 @@ def test_exact_verify_is_jvm_native(spark):
     from dataquality_spark.datagen.clips import DEFAULT_RUN_TS, clips_df
     from dataquality_spark.pipeline import run_pipeline
 
-    res = run_pipeline(clips_df(spark, 50), DEFAULT_RUN_TS, partitions=4)
+    res = run_pipeline(clips_df(spark, 50), DEFAULT_RUN_TS)
     plan = _plan(res.duplicate_pairs)
     assert "FlatMapCoGroupsInPandas" not in plan
     # every Python boundary in the plan is one of the four known passes

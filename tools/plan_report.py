@@ -83,7 +83,7 @@ def main() -> None:
     ]
 
     # flagship pipeline
-    res = run_pipeline(clips_df(spark, 200), DEFAULT_RUN_TS, partitions=8)
+    res = run_pipeline(clips_df(spark, 200), DEFAULT_RUN_TS)
     plan = formatted_plan(res.results, execute=True)
     bytes_in_exchange = any(
         re.search(r"\bbytes#", inp) for inp in exchange_inputs(plan)

@@ -1,13 +1,14 @@
 """spark-submit job for the two-parallelism scaling evidence (north rule:
-N vs 4N executors; sandbox stand-in is local[8] vs local[32] on identical
+N vs 4N executors; sandbox stand-in is local[N] vs local[4N] on identical
 input — same total work, 4x the cores).
 
 Usage:
     spark-submit --master local[N] --py-files dataquality_spark.zip \
         tools/scaling_job.py <clips_parquet> <cores> <out_json>
 
-Times ONLY the pipeline (read -> enrich -> dedup -> policy -> noop sinks);
-input materialization is excluded.
+Times ONLY the pipeline (read -> enrich -> dedup -> policy -> noop sinks)
+through ``dataquality_spark.harness``, the same session, warm-up and sink
+pass as bench.py; input materialization is excluded.
 """
 
 from __future__ import annotations
@@ -17,120 +18,37 @@ import os
 import sys
 import time
 
-from pyspark.sql import SparkSession
+from pyspark import SparkConf, SparkContext
 
-
-def _input_bytes(path: str) -> int:
-    """Total on-disk size of the input (local FS here; on a cluster this
-    is one FileSystem.getContentSummary call)."""
-    total = 0
-    for root, _, files in os.walk(path):
-        for fn in files:
-            if not fn.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, fn))
-    return total
+from dataquality_spark import harness
 
 
 def main() -> None:
     clips_path, cores, out_json = sys.argv[1], int(sys.argv[2]), sys.argv[3]
-    # Scan splits sized to the JOB: target ~4 input splits per core so the
-    # map-only enrich stage balances without fragmenting. Profiling on the
-    # 640k corpus showed fixed 16m splits cost ~33% of the enrich stage's
-    # wall at 8 cores (1283 tasks x per-task Arrow stream setup + Python
-    # worker batch churn) vs letting splits grow toward the 128m default;
-    # the floor keeps small inputs parallel enough to fill the cores.
-    split = max(16 << 20, min(128 << 20, _input_bytes(clips_path) // (4 * cores)))
-    spark = (
-        SparkSession.builder.appName(f"scaling_{cores}")
-        .config("spark.sql.shuffle.partitions", str(max(4 * cores, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # ~27 KB/clip: 2048-row Arrow batches keep the per-batch working
-        # set (~55 MB of binary audio + pandas copies) cache-friendly;
-        # the 10000 default measured ~9-13% slower on the enrich stage.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.files.maxPartitionBytes", str(split))
-        # Likewise shrink AQE's coalesce target: at sandbox SF the shuffles
-        # are tens of MB, and the 64m default coalesces them into 1-2
-        # partitions — stragglers that serialize the whole stage. At
-        # production shuffle sizes the default is correct; the principle is
-        # partitions sized to the job (SURVEY §4).
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-        # Headless batch job: no UI listener, and cap plan-string renders —
-        # the scoring CASE trees make uncapped plan descriptions cost
-        # driver-seconds per AQE stage materialization (see session.py).
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.maxPlanStringLength", "8192")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-
-    from dataquality_spark.datagen.clips import DEFAULT_RUN_TS
-    from dataquality_spark.pipeline import run_pipeline
+    # Keep the master spark-submit was given: get_spark otherwise sets
+    # local[$SPARK_GRAFT_CPUS].
+    SparkContext._ensure_initialized()
+    master = SparkConf().get("spark.master")
+    spark = harness.timed_session(f"scaling_{cores}", clips_path, cores, master)
 
     clips = spark.read.parquet(clips_path)
     n = clips.count()  # warm the input listing/footers; not part of timing
-
-    # Warm codegen/planner/Python workers on a 512-row generated slice
-    # (excluded from timing, like bench.py): cold planning costs ~5s and is
-    # a per-process constant that a production job pays once per cluster,
-    # not per run. Generated, NOT clips.limit(512): a GlobalLimit over the
-    # big scan launches every input split and shuffles up to 512 rows from
-    # EACH (~40s of untimed wall at 8 cores for zero warmup value).
-    from dataquality_spark.datagen.clips import clips_df
-
-    warm = run_pipeline(clips_df(spark, 512), DEFAULT_RUN_TS,
-                        include_evidence=False, partitions=max(4 * cores, 8))
-    warm.results.write.format("noop").mode("overwrite").save()
-    warm.duplicate_pairs.write.format("noop").mode("overwrite").save()
-    warm.run_metrics.write.format("noop").mode("overwrite").save()
-    from dataquality_spark.caching import release_all
-    release_all()
+    harness.warm_up(spark)
 
     t0 = time.time()
-    res = run_pipeline(clips, DEFAULT_RUN_TS, include_evidence=False,
-                       partitions=max(4 * cores, 8))
-    # duplicate_pairs first: it materializes the whole dedup funnel into
-    # the shared caches. The two remaining sinks then run CONCURRENTLY —
-    # each query's serial driver phases (AQE replan rounds between tiny
-    # stages) overlap the other's task execution, so the executor cores
-    # stay busy. Same pattern as concurrent jobs on a real cluster
-    # (scheduler interleaves at stage granularity).
-    res.duplicate_pairs.write.format("noop").mode("overwrite").save()
-    import threading
-
-    # A sink failure must fail the RUN: threads swallow exceptions by
-    # default, and a silently-short wall would inflate throughput.
-    errs: list[BaseException] = []
-
-    def _sink(df):
-        try:
-            df.write.format("noop").mode("overwrite").save()
-        except BaseException as e:  # noqa: BLE001 — re-raised after join
-            errs.append(e)
-
-    ts = [threading.Thread(target=_sink, args=(d,))
-          for d in (res.results, res.run_metrics)]
-    for th in ts:
-        th.start()
-    for th in ts:
-        th.join()
-    if errs:
-        raise errs[0]
-    t1 = time.time()
-    wall = t1 - t0
-    release_all()
+    wall = harness.timed_pass(clips)
+    t1 = t0 + wall
 
     # t_task_start/end let the window analyzer pin the TIMED span from
     # the record itself (mtimes drift under copies/touch and can ingest
-    # stale artifacts); run_id ties the file to one harness invocation.
+    # stale artifacts); run_id ties the file to one harness invocation;
+    # master and defaultParallelism show the cores the run got.
     out = {"cores": cores, "n_clips": n, "wall_sec": round(wall, 2),
            "clips_per_sec": round(n / wall, 1),
            "t_task_start": round(t0, 3), "t_task_end": round(t1, 3),
-           "run_id": os.environ.get("SCALING_RUN_ID", "")}
+           "run_id": os.environ.get("SCALING_RUN_ID", ""),
+           "master": spark.sparkContext.master,
+           "defaultParallelism": spark.sparkContext.defaultParallelism}
     with open(out_json, "w") as f:
         json.dump(out, f)
     print(json.dumps(out))
