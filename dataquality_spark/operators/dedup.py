@@ -5,7 +5,7 @@ files — metadata-similarity gate >= 0.7, then embedding cosine >= 0.95
 (``backend/app/services/metadata.py:514-624``).  At 10^12 rows that is
 impossible; this operator keeps the *decision rule* exact while making the
 *search* scale.  The funnel, cheapest-per-pair first, with the per-pair
-payload growing only as the pair count shrinks:
+payload attached only after banding has shrunk the pair count:
 
 1. **Exact-group collapse** (skew defusal): group by transcript content hash
    with a map-side-combinable ``min/count`` agg — the pathological "5% of all
@@ -19,16 +19,20 @@ payload growing only as the pair count shrinks:
    shuffle — and equi-self-join on the band key.  ``lang`` rides in the join
    key because the reference's gate needs 0.5*exact-type-match and 0.5 < 0.7
    makes cross-lang duplicates impossible (P6, metadata.py:213-243).
-3. **Signature-estimate prefilter**: candidates attach ONLY the packed
-   64-perm MinHash blobs (512 B/side) via plain equi-joins (Catalyst picks
-   broadcast/shuffle-hash; AQE splits skew) and a vectorized Arrow pass
-   estimates Jaccard as the fraction of agreeing slots.  est sigma
-   ~= sqrt(J(1-J)/64) ~= 0.06; pairs under EST_PREFILTER cannot reach the
-   exact gate (J >= 0.4) and are dropped — ~70% of candidates at test SF.
-4. **Vectorized cosine** on survivors: attach the 1 KB hashed-BoW blobs,
-   one numpy einsum over each Arrow batch.  Only pairs with cos >=
-   DUP_COS_MIN — the rule's rarest predicate — continue.
-5. **Native exact verification** on those few: two equi-joins attach each
+3. **Estimate prefilter and cosine in one pass**: two equi-joins attach
+   each side's packed 64-perm MinHash signature (512 B) and hashed-BoW
+   vector (1 KB) together (Catalyst picks broadcast/shuffle-hash; AQE
+   splits skew), and ONE vectorized Arrow pass computes, per pair, the
+   Jaccard estimate (the fraction of agreeing signature slots) and the
+   float64 einsum cosine.  est sigma ~= sqrt(J(1-J)/64) ~= 0.06; pairs
+   under EST_PREFILTER cannot reach the exact gate (J >= 0.4) and are
+   dropped.  The BoW is not held back for estimate survivors only: after
+   the MIN_SHARED_BANDS filter the estimate drops few candidates
+   (measured 7 of 1,371 at 5,000 clips, 95 of 20,280 at 20,000), so a
+   second attach round would cost two joins and a Python crossing for
+   no saved traffic.  Only pairs with cos >= DUP_COS_MIN — the rule's
+   rarest predicate — continue.
+4. **Native exact verification** on those few: two equi-joins attach each
    side's sorted-distinct token-hash array and ``array_intersect``/``size``
    compute exact set Jaccard inside whole-stage codegen — zero Python, and
    the tokens scan prunes to participating ids (AQE broadcasts the small
@@ -38,7 +42,7 @@ payload growing only as the pair count shrinks:
    a true duplicate (cos >= 0.95 implies near-identical token sets) can
    evade.
 
-Stages 3-5 are one helper (:func:`_verify`) shared by :func:`dedup` and
+Stages 3-4 are one helper (:func:`_verify`) shared by :func:`dedup` and
 :func:`dedup_increment`; the two differ only in candidate generation.
 
 ``similarity_pairs`` reporting — a deliberate, documented deviation: the
@@ -48,8 +52,9 @@ and cannot exist at scale.  This operator reports the pairs whose
 (estimated or exact) gate reaches the 0.7 decision threshold, with exact
 gate values where the exact path ran (cos >= 0.95 survivors) and the
 64-slot signature estimate elsewhere.  Every ``is_duplicate`` pair is
-guaranteed present (the verified set is unioned in, not left-joined), so
-the two outputs can never disagree.
+guaranteed present (the verified pairs are a subset of the estimate
+survivors the report left-joins them onto, and are kept regardless of
+their estimated gate), so the two outputs can never disagree.
 
 Hot band buckets are defused by BUCKET_CAP star edges (see
 :func:`_band_windows`); AQE skew-join handles residual skew in the payload
@@ -116,69 +121,50 @@ def exact_groups(enriched: DataFrame) -> DataFrame:
     )
 
 
-def _attach_both(pairs: DataFrame, feat: DataFrame, col: str) -> DataFrame:
-    """pairs(id_a, id_b, ...) x feat(clip_id, <col>) -> + <col>_a, <col>_b
-    via two equi-joins (Catalyst picks the strategy, AQE handles skew)."""
-    fa = feat.select(F.col("clip_id").alias("id_a"), F.col(col).alias(f"{col}_a"))
-    fb = feat.select(F.col("clip_id").alias("id_b"), F.col(col).alias(f"{col}_b"))
-    return pairs.join(fa, "id_a").join(fb, "id_b")
+def _attach_both(pairs: DataFrame, feats: DataFrame, cols: list[str]) -> DataFrame:
+    """pairs(id_a, id_b, ...) x feats(clip_id, *cols) -> + <col>_a, <col>_b
+    for each col, via two equi-joins (Catalyst picks the strategy, AQE
+    handles skew)."""
+    def side(s: str) -> DataFrame:
+        return feats.select(F.col("clip_id").alias(f"id_{s}"),
+                            *(F.col(c).alias(f"{c}_{s}") for c in cols))
+
+    return pairs.join(side("a"), "id_a").join(side("b"), "id_b")
 
 
-def _estimate_pairs(pairs: DataFrame) -> DataFrame:
-    """Vectorized MinHash-agreement estimate over (sig_a, sig_b) blobs."""
+def _est_cos_pairs(pairs: DataFrame) -> DataFrame:
+    """One vectorized Arrow pass over each pair's (sig, bow) blobs: the
+    MinHash-agreement estimate of Jaccard and the hashed-BoW cosine."""
 
-    def est(batches):
+    def est_cos(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            a = np.frombuffer(b"".join(pdf["minhash_sig_a"]), dtype="<u8").reshape(len(pdf), -1)
-            b = np.frombuffer(b"".join(pdf["minhash_sig_b"]), dtype="<u8").reshape(len(pdf), -1)
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].values,
-                    "id_b": pdf["id_b"].values,
-                    "est_jaccard": (a == b).mean(axis=1),
-                }
-            )
-
-    return pairs.mapInPandas(
-        est, schema="id_a string, id_b string, est_jaccard double"
-    )
-
-
-def _cosine_pairs(pairs: DataFrame) -> DataFrame:
-    """Vectorized cosine over (bow_a, bow_b) blobs; carries est_jaccard."""
-
-    def cos(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # float64 accumulation: keeps the dot bit-comparable with the
-            # float64 list-arithmetic the DuckDB oracle runs on the same
-            # float32 vector values (clips_duplicate_pairs correctness gate).
-            a = (
-                np.frombuffer(b"".join(pdf["bow_a"]), dtype="<f4")
-                .reshape(len(pdf), -1).astype(np.float64)
-            )
-            b = (
-                np.frombuffer(b"".join(pdf["bow_b"]), dtype="<f4")
-                .reshape(len(pdf), -1).astype(np.float64)
+            sig_a, sig_b, bow_a, bow_b = (
+                np.frombuffer(b"".join(pdf[col]), dtype=dtype).reshape(len(pdf), -1)
+                for col, dtype in (("minhash_sig_a", "<u8"), ("minhash_sig_b", "<u8"),
+                                   ("bow_a", "<f4"), ("bow_b", "<f4"))
             )
             yield pd.DataFrame(
                 {
                     "id_a": pdf["id_a"].values,
                     "id_b": pdf["id_b"].values,
-                    "est_jaccard": pdf["est_jaccard"].values,
-                    "cos": np.einsum("ij,ij->i", a, b),
+                    "est_jaccard": (sig_a == sig_b).mean(axis=1),
+                    # float64 accumulation: keeps the dot bit-comparable with
+                    # the float64 list-arithmetic the DuckDB oracle runs on
+                    # the same float32 vector values (clips_duplicate_pairs
+                    # correctness gate).
+                    "cos": np.einsum("ij,ij->i", bow_a.astype(np.float64),
+                                     bow_b.astype(np.float64)),
                 }
             )
 
     return pairs.mapInPandas(
-        cos, schema="id_a string, id_b string, est_jaccard double, cos double"
+        est_cos, schema="id_a string, id_b string, est_jaccard double, cos double"
     )
 
 
-def _exact_jaccard_native(pairs: DataFrame, tokens: DataFrame) -> DataFrame:
+def _exact_jaccard_native(pairs: DataFrame, feats: DataFrame) -> DataFrame:
     """Exact token-set Jaccard for (id_a, id_b, cos) pairs, entirely
     JVM-side: two equi-joins attach each side's ``tok_hashes`` (sorted
     distinct token hashes, already computed for MinHash), then native
@@ -196,15 +182,10 @@ def _exact_jaccard_native(pairs: DataFrame, tokens: DataFrame) -> DataFrame:
     keeps the set math in codegen — no Python in the loop at all.
     Per-clip hash arrays are distinct, and ``array_intersect`` returns
     distinct elements, so the intersection size is exact."""
-    ta = tokens.select(
-        F.col("clip_id").alias("id_a"), F.col("tok_hashes").alias("a_h")
-    )
-    tb = tokens.select(
-        F.col("clip_id").alias("id_b"), F.col("tok_hashes").alias("b_h")
-    )
-    j = pairs.join(ta, "id_a").join(tb, "id_b")
-    inter = F.size(F.array_intersect("a_h", "b_h")).cast("double")
-    union = F.size("a_h").cast("double") + F.size("b_h").cast("double") - inter
+    j = _attach_both(pairs, feats, ["tok_hashes"])
+    a_h, b_h = F.col("tok_hashes_a"), F.col("tok_hashes_b")
+    inter = F.size(F.array_intersect(a_h, b_h)).cast("double")
+    union = F.size(a_h).cast("double") + F.size(b_h).cast("double") - inter
     return j.select(
         "id_a", "id_b", "cos",
         F.when(union > 0, inter / union).otherwise(F.lit(0.0)).alias("jaccard"),
@@ -282,32 +263,26 @@ def _band_windows(exploded: DataFrame) -> DataFrame:
 
 
 def _verify(cand: DataFrame, feats: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Funnel stages 3-5 over candidate pairs (id_a < id_b): signature
-    estimate prefilter -> cosine -> native exact verify.
+    """Funnel stages 3-4 over candidate pairs (id_a < id_b): one attach of
+    both blobs and one Arrow pass for the estimate and cosine, the
+    estimate prefilter, then the native exact verify.
 
     Returns ``(cos_pairs, verified_dups)``: every estimate survivor with
     its est_jaccard and cos, and the pairs passing the exact P5 rule in
-    the duplicate-pair shape.  Both are persisted — ``cos_pairs`` feeds
-    the verify and the similarity report, ``verified_dups`` the pairs, the
-    report and the flags."""
-    # --- stage 3: signature-estimate prefilter (512 B blobs) --------------
-    with_sigs = _attach_both(cand, feats.select("clip_id", "minhash_sig"),
-                             "minhash_sig")
-    survivors = _estimate_pairs(with_sigs).filter(
-        F.col("est_jaccard") >= EST_PREFILTER
+    the duplicate-pair shape (a subset of ``cos_pairs``).  Both are
+    persisted — ``cos_pairs`` feeds the verify and the similarity report,
+    ``verified_dups`` the pairs, the report and the flags."""
+    # --- stage 3: estimate + cosine in one pass (512 B + 1 KB per side) ----
+    with_blobs = _attach_both(cand, feats, ["minhash_sig", "bow"])
+    cos_pairs = cached(
+        _est_cos_pairs(with_blobs).filter(F.col("est_jaccard") >= EST_PREFILTER)
     )
 
-    # --- stage 4: vectorized cosine (1 KB blobs) ---------------------------
-    with_bows = _attach_both(survivors, feats.select("clip_id", "bow"), "bow")
-    cos_pairs = cached(_cosine_pairs(with_bows))
-
-    # --- stage 5: exact gate on the cos-qualified few ----------------------
+    # --- stage 4: exact gate on the cos-qualified few ----------------------
     dup_elig = cos_pairs.filter(F.col("cos") >= DUP_COS_MIN).select(
         "id_a", "id_b", "cos"
     )
-    exact = _exact_jaccard_native(
-        dup_elig, feats.select("clip_id", "tok_hashes")
-    )
+    exact = _exact_jaccard_native(dup_elig, feats)
     # P6: lang equality is guaranteed by the band join key -> 0.5 + 0.5*jac
     verified_dups = (
         exact.withColumn("gate", F.lit(0.5) + F.lit(0.5) * F.col("jaccard"))
@@ -438,15 +413,16 @@ def dedup_increment(enriched_all: DataFrame, new_ids: DataFrame) -> DedupResult:
         (F.col("a.band_idx") == F.col("b.band_idx"))
         & (F.col("a.band_hash") == F.col("b.band_hash"))
         & (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.clip_id") != F.col("b.clip_id")),
+        # a new×new pair is emitted once, from its smaller id's side
+        & (~F.col("b.is_new") | (F.col("a.clip_id") < F.col("b.clip_id"))),
     ).select(
         F.least("a.clip_id", "b.clip_id").alias("id_a"),      # A8 normalize
         F.greatest("a.clip_id", "b.clip_id").alias("id_b"),
         F.col("a.band_idx").alias("band_idx"),
     )
     cand = (
+        # small and big buckets are disjoint: no (pair, band) is emitted twice
         raw_pairs.unionByName(big_edges)
-        .dropDuplicates(["id_a", "id_b", "band_idx"])  # new×new double-emit
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_bands"))
         .filter(F.col("n_bands") >= MIN_SHARED_BANDS)
@@ -515,36 +491,32 @@ def dedup(enriched: DataFrame) -> DedupResult:
     cos_pairs, verified_dups = _verify(cand, feats)
 
     # --- P5 reporting: gate >= 0.7 pairs with their cosine -----------------
-    report = (
-        cos_pairs.filter(F.lit(0.5) + F.lit(0.5) * F.col("est_jaccard")
-                         >= DUP_GATE_MIN)
-        .select(
-            F.col("id_a").alias("clip_1"),
-            F.col("id_b").alias("clip_2"),
-            F.round((F.lit(0.5) + F.lit(0.5) * F.col("est_jaccard")) * 100.0, 2)
-            .alias("est_gate_pct"),
-            F.round(F.col("cos") * 100.0, 2).alias("similarity"),
-        )
-    )
-    # FULL outer join: a verified duplicate whose signature-ESTIMATED gate
-    # fell under 0.7 (possible for repetitive transcripts: exact set-Jaccard
-    # just above 0.4 while the estimate dips below) must still appear here —
-    # duplicate_pairs and similarity_pairs can never disagree on membership.
+    # verified_dups is derived from cos_pairs, so a LEFT join keeps every
+    # verified pair — including one whose signature-ESTIMATED gate fell
+    # under 0.7 (possible for repetitive transcripts: exact set-Jaccard
+    # just above 0.4 while the estimate dips below): duplicate_pairs and
+    # similarity_pairs can never disagree on membership.
+    est_gate = F.lit(0.5) + F.lit(0.5) * F.col("est_jaccard")
     similarity_pairs = (
-        report.join(
+        cos_pairs.select(
+            F.col("id_a").alias("clip_1"), F.col("id_b").alias("clip_2"),
+            "est_jaccard", "cos",
+        )
+        .join(
             verified_dups.select(
                 "clip_1", "clip_2",
                 F.col("metadata_similarity").alias("exact_gate_pct"),
-                F.col("similarity").alias("exact_sim_pct"),
                 "is_duplicate",
             ),
             ["clip_1", "clip_2"],
-            "full_outer",
+            "left",
         )
+        .filter((est_gate >= DUP_GATE_MIN) | F.col("is_duplicate").isNotNull())
         .select(
             "clip_1", "clip_2",
-            F.coalesce("exact_gate_pct", "est_gate_pct").alias("metadata_similarity"),
-            F.coalesce("similarity", "exact_sim_pct").alias("similarity"),
+            F.coalesce("exact_gate_pct", F.round(est_gate * 100.0, 2))
+            .alias("metadata_similarity"),
+            F.round(F.col("cos") * 100.0, 2).alias("similarity"),
             F.coalesce("is_duplicate", F.lit(False)).alias("is_duplicate"),
         )
         .orderBy(F.desc("similarity"), "clip_1", "clip_2")  # O2

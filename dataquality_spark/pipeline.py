@@ -63,19 +63,20 @@ def score_and_report(enriched: DataFrame, run_ts: dt.datetime,
     results = scored.select(*RESULT_COLUMNS)
 
     # Run-level metrics (reference consolidated record, metadata.py:639-677):
-    # A2 counters + keep/drop/dup rates, computed per partition for lineage.
-    run_metrics = (
-        scored.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count("*").alias("n_clips"),
-            F.sum(F.col("keep").cast("long")).alias("n_keep"),
-            F.sum((~F.col("keep")).cast("long")).alias("n_drop"),
-            F.sum((F.col("status") == "error").cast("long")).alias("n_error"),
-            F.sum(F.col("is_dup").cast("long")).alias("n_duplicates"),
-            F.avg("overall_quality_score").alias("avg_overall"),
-        )
-        .withColumn("run_ts", F.lit(run_ts))
-    )
+    # A2 counters + keep/drop/dup rates as ONE row per run — a global agg,
+    # so the record never depends on the partition count, and the counts
+    # read 0 (not null) on an empty run.
+    def n_true(cond: F.Column) -> F.Column:
+        return F.coalesce(F.sum(cond.cast("long")), F.lit(0).cast("long"))
+
+    run_metrics = scored.agg(
+        F.count("*").alias("n_clips"),
+        n_true(F.col("keep")).alias("n_keep"),
+        n_true(~F.col("keep")).alias("n_drop"),
+        n_true(F.col("status") == "error").alias("n_error"),
+        n_true(F.col("is_dup")).alias("n_duplicates"),
+        F.avg("overall_quality_score").alias("avg_overall"),
+    ).withColumn("run_ts", F.lit(run_ts))
     return PipelineResult(results, dd.duplicate_pairs, dd.similarity_pairs, run_metrics)
 
 

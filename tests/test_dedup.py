@@ -130,6 +130,7 @@ def test_funnel_invariant_to_shuffle_partitions(spark):
             "duplicate_pairs": full.duplicate_pairs,
             "similarity_pairs": full.similarity_pairs,
             "increment_flags": inc.flags,
+            "increment_pairs": inc.duplicate_pairs,
         }
         got = {}
         for name, df in out.items():

@@ -149,13 +149,13 @@ def test_audio_matchers_share_one_decode(spark):
 
 
 def test_exact_verify_is_jvm_native(spark):
-    """Stage 5 of the dedup funnel (exact set-Jaccard on cos>=0.95
-    survivors) must stay in whole-stage codegen: two equi-joins +
-    array_intersect, no cogroup/applyInPandas round-trip. The duplicate
-    pairs plan is allowed exactly two Python-boundary operators — the
-    signature-estimate and cosine mapInPandas passes (plus the datagen
-    and enrich passes upstream) — and no FlatMapCoGroupsInPandas
-    anywhere."""
+    """The dedup funnel crosses into Python once: one mapInPandas pass
+    computes the signature estimate and the cosine together, and the
+    exact set-Jaccard verify on its cos>=0.95 survivors stays in
+    whole-stage codegen (two equi-joins + array_intersect, no
+    cogroup/applyInPandas round-trip). So the duplicate pairs plan holds
+    exactly one dedup Python-boundary operator (plus the datagen and
+    enrich passes upstream) and no FlatMapCoGroupsInPandas anywhere."""
     import re as _re
 
     from dataquality_spark.datagen.clips import DEFAULT_RUN_TS, clips_df
@@ -164,6 +164,7 @@ def test_exact_verify_is_jvm_native(spark):
     res = run_pipeline(clips_df(spark, 50), DEFAULT_RUN_TS)
     plan = _plan(res.duplicate_pairs)
     assert "FlatMapCoGroupsInPandas" not in plan
-    # every Python boundary in the plan is one of the four known passes
-    names = set(_re.findall(r"MapInPandas (\w+)\(", plan))
-    assert names <= {"gen", "run", "est", "cos"}, names
+    # every Python boundary in the plan is one of the three known passes
+    names = _re.findall(r"MapInPandas (\w+)\(", plan)
+    assert set(names) <= {"gen", "run", "est_cos"}, names
+    assert names.count("est_cos") == 1, names
