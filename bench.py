@@ -127,9 +127,12 @@ def main() -> None:
 
     # Split sizing per stage shape: the flagship's fused enrich wants 4
     # task-waves per core (balancing), but the audio-dedup family's DSP is
-    # one vectorized Arrow pass over the scan — per-task setup dominates at
-    # 4 waves, and ONE wave of fat splits measures ~40% faster on the
-    # offset matcher (A/B: 128/64/32-split ladder, both directions).
+    # one vectorized Arrow pass over the scan — per-task setup dominated at
+    # 4 waves, and ONE wave of fat splits measured ~40% faster on the
+    # offset matcher (A/B: 128/64/32-split ladder, both directions). Most
+    # of that setup was the Python worker re-reading pyspark.zip and the
+    # spark-core jar before each task, which workerd.py removes; this
+    # sizing needs re-measuring without it.
     spark.conf.set("spark.sql.files.maxPartitionBytes",
                    str(max(2 << 20, harness.input_bytes(CLIPS_CACHE) // CPUS)))
     audio_clips = spark.read.parquet(CLIPS_CACHE)

@@ -45,10 +45,12 @@ def timed_session(app_name: str, input_path: str, cores: int,
     # fragmenting: at sf0.1 the clips table is ~540 MB, and the 128m
     # default packs it into ~6 splits — an enrich stage capped at 6 of 32
     # cores. At 640k clips, fixed 16m splits cost ~33% of the enrich
-    # stage's wall at 8 cores (per-task Arrow stream setup), so large
-    # inputs grow toward the 128m default. openCost is dropped so the
-    # sizing math is the file bytes themselves; the 2m floor keeps tiny
-    # inputs from splitting per row group.
+    # stage's wall at 8 cores, so large inputs grow toward the 128m
+    # default. Most of that per-task cost was the Python worker re-reading
+    # pyspark.zip and the spark-core jar before each task, which
+    # workerd.py removes; these sizes need re-measuring without it.
+    # openCost is dropped so the sizing math is the file bytes themselves;
+    # the 2m floor keeps tiny inputs from splitting per row group.
     split = max(2 << 20, min(128 << 20, input_bytes(input_path) // (4 * cores)))
     return get_spark(app_name=app_name, master=master or f"local[{cores}]",
                      shuffle_partitions=cores,

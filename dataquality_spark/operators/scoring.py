@@ -213,8 +213,8 @@ def with_dimensions(df: DataFrame, include_evidence: bool = True) -> DataFrame:
     plus flat ``score_<name>`` ints (kept flat for cheap downstream math)."""
     scores = dimension_score_exprs()
     ev = dimension_evidence_exprs() if include_evidence else {}
-    for name, expr in scores.items():
-        df = df.withColumn(f"score_{name}", expr.cast("int"))
+    df = df.withColumns({f"score_{name}": expr.cast("int")
+                         for name, expr in scores.items()})
     fields = []
     for name in DIMENSIONS:
         inner = [F.col(f"score_{name}").alias("score")]
@@ -239,8 +239,7 @@ def with_policy(df: DataFrame) -> DataFrame:
         .when(F.col("overall_quality_score") >= ACTION_QUARANTINE, "QUARANTINE")
         .otherwise("DISCARD")
     )
-    df = df.withColumn("recommended_action", action)
-    return df.withColumn("keep", F.col("recommended_action") == "KEEP")
+    return df.withColumns({"recommended_action": action, "keep": action == "KEEP"})
 
 
 # --------------------------------------------------------------- oracle side

@@ -45,9 +45,10 @@ def score_rows(frame: DataFrame, run_ts: dt.datetime,
     score through here."""
     # F2 error-row routing: decode failure is recorded, not dropped —
     # status column pattern (metadata.py:284-299).
-    scored = frame.withColumn(
-        "status", F.when(F.col("decode_ok"), "success").otherwise("error")
-    ).withColumn("processed_at", F.lit(run_ts))
+    scored = frame.withColumns({
+        "status": F.when(F.col("decode_ok"), "success").otherwise("error"),
+        "processed_at": F.lit(run_ts),
+    })
     return with_policy(with_dimensions(scored, include_evidence))
 
 

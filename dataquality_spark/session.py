@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory or zip this package was imported from.
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _driver_memory() -> str:
     """Driver heap sized to the host: a quarter of RAM, clamped to
@@ -47,6 +50,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _driver_memory())
         .config("spark.ui.enabled", "false")
+        # Python workers fork from this engine's daemon (workerd.py). It
+        # starts before --py-files reach sys.path, so the engine root goes
+        # on the workers' PYTHONPATH.
+        .config("spark.python.daemon.module", "dataquality_spark.workerd")
+        .config("spark.executorEnv.PYTHONPATH", _ENGINE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
