@@ -31,8 +31,6 @@ CLIP_THRESHOLD = 32700
 # RMS (in float [-1,1] units) below which a clip counts as silent.
 SILENCE_RMS = 1e-4
 
-SUPPORTED_CODECS = ("pcm_s16le", "pcm_mulaw")
-
 # --- G.711 mu-law companding (public ITU-T standard; pure numpy) ----------
 # Classic Sun/G.711 segmented encoder: bias 0x84, 8 exponent segments,
 # 4-bit mantissa, complemented output byte. Decode error for speech-level

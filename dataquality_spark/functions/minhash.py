@@ -128,11 +128,6 @@ def signature_frame(texts) -> dict[str, list]:
     }
 
 
-def unpack_sig(blob: bytes) -> np.ndarray:
-    """Inverse of the ``signature_frame`` minhash packing."""
-    return np.frombuffer(blob, dtype="<u8")
-
-
 def unpack_bow(blob: bytes) -> np.ndarray:
     """Inverse of the ``signature_frame`` bow packing."""
     return np.frombuffer(blob, dtype="<f4")

@@ -28,11 +28,6 @@ def tokenize(text: str) -> list[str]:
     return [t for t in _TOKEN_RE.split(text.lower()) if t]
 
 
-def token_hash(token: str) -> int:
-    """Stable 32-bit hash of a token (CRC32 over UTF-8)."""
-    return zlib.crc32(token.encode("utf-8"))
-
-
 def token_hashes(tokens: list[str]) -> np.ndarray:
     """Distinct stable 32-bit hashes of a token list (set semantics)."""
     if not tokens:

@@ -94,11 +94,6 @@ MIN_SHARED_BANDS = 2
 # pairs (duplicate-cluster skew defusal; see the candidate-generation site).
 BUCKET_CAP = 128
 
-_PAIR_SCHEMA = (
-    "clip_1 string, clip_2 string, metadata_similarity double, "
-    "similarity double, is_duplicate boolean"
-)
-
 
 class DedupResult(NamedTuple):
     flags: DataFrame        # clip_id, is_dup, dup_of (rep id or null)

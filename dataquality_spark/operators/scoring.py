@@ -55,13 +55,6 @@ CLIP_ID_RE = re.compile(r"^clip_\d{12}$")
 EXPECTED_LANG = "en"
 CREDIBILITY_DEFAULT = 80
 
-_SIGNALS = [  # columns the scoring stage consumes (produced by enrich+dedup)
-    "decode_ok", "is_silent", "clip_ratio", "n_samples", "header_sr_hz",
-    "n_chars", "n_tokens", "n_distinct", "alpha_space_ratio", "lang",
-    "lang_conf", "ppl", "pii_hits", "toxic_hits", "age_days", "is_dup",
-    "sr_hz", "dur_ms", "codec", "clip_id",
-]
-
 
 # ---------------------------------------------------------------- Spark side
 

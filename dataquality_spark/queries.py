@@ -89,18 +89,6 @@ def _polyhash(d: str, c: str) -> str:
     return f"list_reduce(list_prepend(0::BIGINT, {chars}), (acc, cc) -> (acc*31 + cc) % {MOD})"
 
 
-def _shingles(d: str, t: str) -> str:
-    """Distinct word 3-gram shingle strings over a token array ``t``."""
-    if d == "spark":
-        inner = f"transform(sequence(1, size({t}) - 2), i -> concat_ws(' ', slice({t}, i, 3)))"
-        return f"case when size({t}) < 3 then array() else array_distinct({inner}) end"
-    inner = (
-        f"list_transform(generate_series(1, (len({t}) - 2)::BIGINT), "
-        f"i -> array_to_string(list_slice({t}, i, i + 2), ' '))"
-    )
-    return f"case when len({t}) < 3 then [] else list_distinct({inner}) end"
-
-
 def _explode(d: str, arr: str, alias: str) -> str:
     return f"explode({arr}) as {alias}" if d == "spark" else f"unnest({arr}) as {alias}"
 
@@ -181,7 +169,7 @@ def _sql_doc_shingle_rows(d: str) -> str:
     )
 
 
-def _sql_jaccard_from_pairs(d: str, cand: str, thresh: float, extra_cols: str = "") -> str:
+def _sql_jaccard_from_pairs(cand: str, thresh: float) -> str:
     """Given a candidate-pair CTE named ``cand(id_a, id_b)`` defined in the
     enclosing WITH, append exact-Jaccard verification over shingle sets."""
     return (
@@ -190,7 +178,7 @@ def _sql_jaccard_from_pairs(d: str, cand: str, thresh: float, extra_cols: str = 
         f"  FROM {cand} c JOIN sh a ON a.doc_id = c.id_a JOIN sh b ON b.doc_id = c.id_b AND a.h = b.h "
         f"  GROUP BY c.id_a, c.id_b) "
         f"SELECT inter.id_a, inter.id_b, "
-        f"  (CAST(i AS DOUBLE) / CAST(x.n + y.n - i AS DOUBLE)) AS jaccard{extra_cols} "
+        f"  (CAST(i AS DOUBLE) / CAST(x.n + y.n - i AS DOUBLE)) AS jaccard "
         f"FROM inter JOIN sz x ON inter.id_a = x.doc_id JOIN sz y ON inter.id_b = y.doc_id "
         f"WHERE (CAST(i AS DOUBLE) / CAST(x.n + y.n - i AS DOUBLE)) >= {thresh} "
         f"ORDER BY id_a, id_b"
@@ -362,7 +350,7 @@ def _sql_shingle_jaccard(d: str) -> str:
         f"cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b "
         f"  FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id "
         f"  GROUP BY a.doc_id, b.doc_id), "
-        + _sql_jaccard_from_pairs(d, "cand", JACCARD_PAIR_MIN)
+        + _sql_jaccard_from_pairs("cand", JACCARD_PAIR_MIN)
     )
 
 
@@ -427,7 +415,6 @@ def _fn_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 _q(
     "doc_shingle_jaccard_pairs",
     fn=_fn_shingle_jaccard,
-    spark_sql=_sql_shingle_jaccard("spark"),
     oracle=_sql_shingle_jaccard("duck"),
     doc="n-gram Jaccard near-dup: inverted-index equi-join on word-3-gram "
         "shingle hashes generates candidates (only pairs sharing a shingle "
@@ -481,7 +468,7 @@ def _sql_minhash_band_pairs(d: str) -> str:
         f"  FROM bands a JOIN bands b ON a.band_idx = b.band_idx "
         f"  AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id "
         f"  GROUP BY a.doc_id, b.doc_id), "
-        + _sql_jaccard_from_pairs(d, "cand", MINHASH_VERIFY_MIN)
+        + _sql_jaccard_from_pairs("cand", MINHASH_VERIFY_MIN)
     )
 
 
@@ -524,7 +511,6 @@ def _fn_minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _q(
     "doc_minhash_band_pairs",
     fn=_fn_minhash_band_pairs,
-    spark_sql=_sql_minhash_band_pairs("spark"),
     oracle=_sql_minhash_band_pairs("duck"),
     doc="MinHash+LSH near-dup end-to-end: band the 8-slot signature into 4 "
         "bands of 2, equi-join on (band_idx, band_hash) for candidates, "
@@ -1154,7 +1140,6 @@ def _fn_max_pair_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
 _q(
     "doc_max_pair_similarity",
     fn=_fn_max_pair_sim,
-    spark_sql=_sql_max_pair_sim("spark"),
     oracle=_sql_max_pair_sim("duck"),
     doc="A7 max similarity per document over the near-dup pair list "
         "(routes.py:374-378), with A8's symmetric explode of unordered "
@@ -2127,7 +2112,6 @@ def _fn_probe_dup_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _q(
     "doc_probe_dup_lookup",
     fn=_fn_probe_dup_lookup,
-    spark_sql=_sql_probe_dup_lookup("spark"),
     oracle=_sql_probe_dup_lookup("duck"),
     doc="Point lookup + one-vs-all duplicate probe (the reference's GET "
         "/file-content flow, routes.py:265-315 + find_duplicates "
@@ -4738,7 +4722,7 @@ def entry(spark: SparkSession) -> DataFrame:
     _register(spark, sf_dir)
     policy = spark.sql(_sql_quality_policy("spark"))
     members = spark.sql(_sql_dedup_members("spark"))
-    sims = spark.sql(_sql_max_pair_sim("spark"))
+    sims = _fn_max_pair_sim(spark, sf_dir)
     out = (
         policy.join(members.select("doc_id", "group_size", "is_exact_dup"), "doc_id")
         .join(sims.select("doc_id", "max_jaccard"), "doc_id", "left")

@@ -69,7 +69,9 @@ def test_catalog_matches_oracle(spark, duck, name):
 def test_every_query_has_doc_and_callable():
     for name, q in CATALOG.items():
         assert q.doc, name
-        assert q.fn or q.spark_sql, name
+        # Exactly one runnable path: QueryDef.run prefers fn, so SQL set
+        # beside it would never run.
+        assert (q.fn is None) != (q.spark_sql is None), name
 
 
 def test_every_query_has_an_oracle():

@@ -1,8 +1,11 @@
 """The timed-run harness behind bench.py and the spark-submit scaling job:
-a failed sink must fail the pass, and a warmed, timed pass must report a
-wall and leave no cached frame behind."""
+a failed sink must fail the pass, a warmed, timed pass must report a
+wall and leave no cached frame behind, and the scaling job's record must
+keep its task-span fields."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,6 +14,8 @@ from dataquality_spark import harness
 from dataquality_spark.caching import release_all
 from dataquality_spark.datagen.clips import clips_df
 from dataquality_spark.pipeline import PipelineResult
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_sink_pass_reraises_a_failed_concurrent_sink(spark):
@@ -27,3 +32,13 @@ def test_warm_up_then_timed_pass_releases_every_frame(spark):
     wall = harness.timed_pass(clips_df(spark, 64))
     assert wall > 0
     assert release_all() == 0
+
+
+def test_scaling_job_writes_its_task_span_fields():
+    # Source-level check (running scaling_job needs spark-submit): the
+    # job's record keeps the timed span and invocation id that the
+    # archived scaling_r0*.jsonl records carry.
+    job_src = open(os.path.join(REPO, "tools", "scaling_job.py")).read()
+    for field in ("t_task_start", "t_task_end", "wall_sec", "run_id"):
+        assert f'"{field}"' in job_src
+    assert "SCALING_RUN_ID" in job_src

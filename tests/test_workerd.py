@@ -12,9 +12,10 @@ import textwrap
 
 import pytest
 
-from tools.run_scaling_sim import SPARK_SUBMIT, build_zip
+from tools.scaling_job import build_zip
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SPARK_SUBMIT = os.environ.get("SPARK_SUBMIT", "/opt/spark/bin/spark-submit")
 SPARK_HOME = os.environ.get("SPARK_HOME", "")
 SPARK_LIB = os.path.join(SPARK_HOME, "python", "lib")
 SPARK_ZIPS = sorted(glob.glob(os.path.join(SPARK_LIB, "*.zip")))

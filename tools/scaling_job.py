@@ -3,7 +3,8 @@ N vs 4N executors; sandbox stand-in is local[N] vs local[4N] on identical
 input — same total work, 4x the cores).
 
 Usage:
-    spark-submit --master local[N] --py-files dataquality_spark.zip \
+    python3 -c "from tools.scaling_job import build_zip; build_zip('dq.zip')"
+    spark-submit --master local[N] --py-files dq.zip \
         tools/scaling_job.py <clips_parquet> <cores> <out_json>
 
 Times ONLY the pipeline (read -> enrich -> dedup -> policy -> noop sinks)
@@ -17,10 +18,25 @@ import json
 import os
 import sys
 import time
+import zipfile
 
 from pyspark import SparkConf, SparkContext
 
 from dataquality_spark import harness
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def build_zip(path: str) -> None:
+    """Package the library for spark-submit --py-files (the deployment
+    mode the north rule names)."""
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
+        pkg = os.path.join(REPO, "dataquality_spark")
+        for root, _, files in os.walk(pkg):
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    z.write(full, os.path.relpath(full, REPO))
 
 
 def main() -> None:
@@ -39,9 +55,8 @@ def main() -> None:
     wall = harness.timed_pass(clips)
     t1 = t0 + wall
 
-    # t_task_start/end let the window analyzer pin the TIMED span from
-    # the record itself (mtimes drift under copies/touch and can ingest
-    # stale artifacts); run_id ties the file to one harness invocation;
+    # t_task_start/end pin the TIMED span in the record itself (file
+    # mtimes drift under copies); run_id ties the file to one invocation;
     # master and defaultParallelism show the cores the run got.
     out = {"cores": cores, "n_clips": n, "wall_sec": round(wall, 2),
            "clips_per_sec": round(n / wall, 1),
