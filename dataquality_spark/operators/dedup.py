@@ -42,8 +42,11 @@ payload attached only after banding has shrunk the pair count:
    a true duplicate (cos >= 0.95 implies near-identical token sets) can
    evade.
 
-Stages 3-4 are one helper (:func:`_verify`) shared by :func:`dedup` and
-:func:`dedup_increment`; the two differ only in candidate generation.
+One body (:func:`_dedup`) runs every stage for both :func:`dedup` and
+:func:`dedup_increment`: the full run is the increment with every clip
+new.  Its flag step returns the input rows with ``is_dup``/``dup_of``
+attached, read off the one join of the rows to their exact groups, so the
+pipeline scores them without joining flags back.
 
 ``similarity_pairs`` reporting — a deliberate, documented deviation: the
 reference appends EVERY compared pair to its report unconditionally before
@@ -96,9 +99,14 @@ BUCKET_CAP = 128
 
 
 class DedupResult(NamedTuple):
-    flags: DataFrame        # clip_id, is_dup, dup_of (rep id or null)
+    flagged: DataFrame      # input rows + is_dup (not null), dup_of (rep or null)
     duplicate_pairs: DataFrame   # clip_1 < clip_2, sims (0-100, 2dp)
     similarity_pairs: DataFrame  # gate >= 0.7 pairs + cosine (P5 reporting)
+
+    @property
+    def flags(self) -> DataFrame:
+        """clip_id, is_dup, dup_of: the slim projection of ``flagged``."""
+        return self.flagged.select("clip_id", "is_dup", "dup_of")
 
 
 def _eligible_col() -> F.Column:
@@ -107,12 +115,11 @@ def _eligible_col() -> F.Column:
     return (F.col("lang") != LANG_UNKNOWN) & (F.col("n_tokens") > 0)
 
 
-def exact_groups(enriched: DataFrame) -> DataFrame:
-    """t_hash -> (rep_id, group_size); map-side combinable, skew-safe."""
-    return (
-        enriched.select("t_hash", "clip_id")
-        .groupBy("t_hash")
-        .agg(F.min("clip_id").alias("rep_id"), F.count("*").alias("group_size"))
+def exact_groups(enriched: DataFrame, *aggs: F.Column) -> DataFrame:
+    """t_hash -> (rep_id, group_size, *aggs); map-side combinable,
+    skew-safe. The representative is the group's min clip_id."""
+    return enriched.groupBy("t_hash").agg(
+        F.min("clip_id").alias("rep_id"), F.count("*").alias("group_size"), *aggs
     )
 
 
@@ -187,49 +194,10 @@ def _exact_jaccard_native(pairs: DataFrame, feats: DataFrame) -> DataFrame:
     )
 
 
-def _members(enriched: DataFrame, groups: DataFrame) -> DataFrame:
-    """Every clip with its eligibility and exact group (rep_id, group_size)."""
-    return (
-        enriched.select("clip_id", "t_hash", "lang", "n_tokens")
-        .withColumn("eligible", _eligible_col())
-        .join(groups, "t_hash")
-    )
-
-
-def _rep_feats(enriched: DataFrame, groups: DataFrame) -> DataFrame:
-    """Slim dedup features of the eligible group representatives — the
-    only rows that enter LSH candidate generation."""
-    return (
-        enriched.join(
-            groups.select(F.col("rep_id").alias("clip_id"), "group_size"),
-            "clip_id",
-            "left_semi",
-        )
-        .filter(_eligible_col())
-        .select("clip_id", "lang", "tok_hashes", "bow", "bands", "minhash_sig")
-    )
-
-
-def _star_edges(members: DataFrame) -> DataFrame:
-    """Exact duplicates as linear star edges (rep, member)."""
-    return (
-        members.filter(
-            F.col("eligible") & (F.col("group_size") >= 2)
-            & (F.col("clip_id") != F.col("rep_id"))
-        )
-        .select(
-            F.col("rep_id").alias("clip_1"),
-            F.col("clip_id").alias("clip_2"),
-            F.lit(100.0).alias("metadata_similarity"),
-            F.lit(100.0).alias("similarity"),
-            F.lit(True).alias("is_duplicate"),
-        )
-    )
-
-
 def _band_windows(exploded: DataFrame) -> DataFrame:
-    """Per-bucket size and leader over exploded (clip_id, lang, band_idx,
-    band_hash) rows.
+    """Per-bucket size and leader over exploded (clip_id, lang, is_new,
+    band_idx, band_hash) rows; ``leader`` is the struct (clip_id, is_new)
+    of the bucket's min clip_id.
 
     Duplicate-cluster skew defusal (north rule): a planted hot cluster
     puts thousands of near-identical clips into ONE band bucket, and the
@@ -252,9 +220,10 @@ def _band_windows(exploded: DataFrame) -> DataFrame:
     worst key's join work is bounded at C(cap, 2) per band — the cap, not
     AQE, is the skew defusal here."""
     bw = Window.partitionBy("band_idx", "band_hash", "lang")
-    return exploded.withColumn("bsize", F.count("*").over(bw)).withColumn(
-        "leader", F.min("clip_id").over(bw)
-    )
+    return exploded.withColumns({
+        "bsize": F.count("*").over(bw),
+        "leader": F.min(F.struct("clip_id", "is_new")).over(bw),
+    })
 
 
 def _verify(cand: DataFrame, feats: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -294,116 +263,78 @@ def _verify(cand: DataFrame, feats: DataFrame) -> tuple[DataFrame, DataFrame]:
     return cos_pairs, cached(verified_dups)
 
 
-def _flags(members: DataFrame, verified_dups: DataFrame) -> DataFrame:
-    """(clip_id, is_dup, dup_of) for ``members``: a clip is a duplicate
-    when its exact group has >= 2 members or its representative is in a
-    verified near-dup pair (symmetric attachment, metadata.py:608-617)."""
-    near_rep_ids = (
-        verified_dups.select(
-            F.explode(F.array("clip_1", "clip_2")).alias("rep_id")
-        )
-        .distinct()
-        .withColumn("rep_near_dup", F.lit(True))
-    )
-    return (
-        members.join(near_rep_ids, "rep_id", "left")
-        .withColumn(
-            "is_dup",
-            F.col("eligible")
-            & (
-                (F.col("group_size") >= 2)
-                | F.coalesce(F.col("rep_near_dup"), F.lit(False))
-            ),
-        )
-        .withColumn(
-            "dup_of",
-            F.when(
-                F.col("is_dup") & (F.col("clip_id") != F.col("rep_id")),
-                F.col("rep_id"),
-            ),
-        )
-        .select("clip_id", "is_dup", "dup_of")
-    )
+def _dedup(marked: DataFrame) -> DedupResult:
+    """The one dedup body: flag the rows of ``marked`` whose ``is_new`` is
+    true against all of its rows, and report only pairs touching a new
+    row.  :func:`dedup` marks every row new (Catalyst folds the literal out
+    of every filter above the caches; the cached ``feats`` carry it as a
+    column that passes every row), :func:`dedup_increment` a landed slice.
 
+    ``marked`` joins the exact groups once, on ``t_hash``, keeping every
+    column: the representatives' features, the star edges and the flagged
+    rows are filters of that one frame.  A join and not a window over
+    ``t_hash``, because a window puts a whole hot exact-duplicate cluster
+    into one task, while the aggregate combines map-side and AQE can split
+    the skewed side of a join.  The representative's and the band leader's
+    new-ness come from the same aggregate and window as their ids
+    (``min(struct(clip_id, is_new))``; clip ids are unique).
 
-def dedup_increment(enriched_all: DataFrame, new_ids: DataFrame) -> DedupResult:
-    """Incremental near-dup detection: flag a NEW slice of clips against
-    the full corpus without recomputing corpus×corpus pairs.
+    Semantics are append-only: a new row that matches an existing
+    representative is flagged as the duplicate; the existing row stays
+    canonical (its historical flag is not rewritten — same asymmetry as
+    the star-edge deviation).  Candidate generation joins ``new-side bands
+    × all bands``, so for a small slice the join and everything downstream
+    scale with |new| × collision rate, not |corpus|²."""
+    # groups feeds the one membership join; feats feed the band explode
+    # and the sig/bow/token attach joins — without a persist each consumer
+    # re-runs the upstream agg/joins (measured ~2x on the whole dedup
+    # stage). Slim columns only; MEMORY_AND_DISK spills at scale.
+    # Every persist goes through caching.cached() so callers can
+    # caching.release_all() once outputs are materialized (paired
+    # persist/unpersist lifecycle — bench, scaling job, catalog runner and
+    # the pytest fixture all release).
+    rep = F.min(F.struct("clip_id", "is_new"))
+    groups = cached(exact_groups(marked, rep["is_new"].alias("rep_is_new")))
+    rows = marked.withColumn("eligible", _eligible_col()).join(groups, "t_hash")
 
-    The production shape for continuously-landing data: the committed
-    enriched table (checkpoint.py) holds every prior slice; each new batch
-    only needs pairs that TOUCH a new row.  Candidate generation therefore
-    joins ``new-side bands × all bands`` — the left side is only the new
-    slice, so the join (and everything downstream) scales with
-    |new| × collision rate, not |corpus|².  Semantics are append-only:
-    a new row that matches an existing representative is flagged as the
-    duplicate; the existing row stays canonical (its historical flag is
-    not rewritten — same asymmetry as the star-edge deviation in
-    :func:`dedup`).
-
-    ``new_ids``: single-column ``clip_id`` frame naming the new slice.
-    Returns a :class:`DedupResult` whose ``flags`` cover ONLY the new
-    rows; pair outputs contain only pairs touching a new row.
-
-    Verified in tests/test_dedup_incremental.py: incremental flags ==
-    full-run flags restricted to the new slice, on a corpus whose planted
-    duplicate clusters straddle the old/new boundary.
-    """
-    new_marked = new_ids.select("clip_id").withColumn("is_new", F.lit(True))
-    groups = cached(exact_groups(enriched_all))
-
-    members = (
-        _members(enriched_all, groups)
-        .join(new_marked, "clip_id", "left")
-        .fillna({"is_new": False})
-    )
-    rep_new = (
-        members.filter(F.col("is_new"))
-        .select(F.col("clip_id").alias("rep_id"))
-        .distinct()
-        .withColumn("rep_is_new", F.lit(True))
+    # exact duplicates as linear star edges (rep, member) touching a new row
+    exact_pairs = rows.filter(
+        F.col("eligible") & (F.col("group_size") >= 2)
+        & (F.col("clip_id") != F.col("rep_id"))
+        & (F.col("is_new") | F.col("rep_is_new"))
+    ).select(
+        F.col("rep_id").alias("clip_1"),
+        F.col("clip_id").alias("clip_2"),
+        F.lit(100.0).alias("metadata_similarity"),
+        F.lit(100.0).alias("similarity"),
+        F.lit(True).alias("is_duplicate"),
     )
 
-    # exact star edges touching a new row (member new, or rep itself new)
-    exact_pairs = _star_edges(
-        members.join(rep_new, "rep_id", "left").filter(
-            F.col("is_new") | F.coalesce("rep_is_new", F.lit(False))
-        )
-    )
-
+    # --- LSH candidates over the eligible representatives ------------------
     feats = cached(
-        _rep_feats(enriched_all, groups)
-        .join(new_marked, "clip_id", "left")
-        .fillna({"is_new": False})
+        rows.filter(F.col("eligible") & (F.col("clip_id") == F.col("rep_id")))
+        .select("clip_id", "lang", "is_new", "tok_hashes", "bow", "bands",
+                "minhash_sig")
     )
-    # Same BUCKET_CAP skew defusal as the full path: a hot band bucket in
-    # the corpus would otherwise make the new-side × all-side join emit
-    # |new-in-bucket| × |bucket| rows from one non-splittable key.
     exploded = _band_windows(feats.select(
         "clip_id", "lang", "is_new",
         F.posexplode("bands").alias("band_idx", "band_hash"),
     ))
     small = exploded.filter(F.col("bsize") <= BUCKET_CAP)
-    leaders_new = (
-        exploded.select(F.col("leader").alias("clip_id")).distinct()
-        .join(new_marked, "clip_id", "left_semi")
-        .select(F.col("clip_id").alias("leader"))
-        .withColumn("leader_is_new", F.lit(True))
-    )
     big_edges = (
         exploded.filter(
-            (F.col("bsize") > BUCKET_CAP) & (F.col("clip_id") != F.col("leader"))
+            (F.col("bsize") > BUCKET_CAP)
+            & (F.col("clip_id") != F.col("leader.clip_id"))
+            & (F.col("is_new") | F.col("leader.is_new"))
         )
-        .join(leaders_new, "leader", "left")
-        .filter(F.col("is_new") | F.coalesce("leader_is_new", F.lit(False)))
         # leader = min(clip_id) in the bucket -> leader < member
-        .select(F.col("leader").alias("id_a"), F.col("clip_id").alias("id_b"),
-                "band_idx")
+        .select(F.col("leader.clip_id").alias("id_a"),
+                F.col("clip_id").alias("id_b"), "band_idx")
     )
     # new-side × all-side band join: output is only pairs touching new
     a = small.filter(F.col("is_new")).alias("a")
     b = small.alias("b")
-    raw_pairs = a.join(
+    small_pairs = a.join(
         b,
         (F.col("a.band_idx") == F.col("b.band_idx"))
         & (F.col("a.band_hash") == F.col("b.band_hash"))
@@ -417,61 +348,6 @@ def dedup_increment(enriched_all: DataFrame, new_ids: DataFrame) -> DedupResult:
     )
     cand = (
         # small and big buckets are disjoint: no (pair, band) is emitted twice
-        raw_pairs.unionByName(big_edges)
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_bands"))
-        .filter(F.col("n_bands") >= MIN_SHARED_BANDS)
-        .select("id_a", "id_b")
-    )
-
-    _, verified_dups = _verify(cand, feats)
-    flags = _flags(members.filter(F.col("is_new")), verified_dups)
-    duplicate_pairs = exact_pairs.unionByName(verified_dups).orderBy(
-        F.desc("similarity"), "clip_1", "clip_2"
-    )
-    return DedupResult(flags, duplicate_pairs, duplicate_pairs)
-
-
-def dedup(enriched: DataFrame) -> DedupResult:
-    # groups feeds members AND feats; feats feeds the band explode and the
-    # sig/bow/token attach joins — without a persist each consumer re-runs
-    # the upstream agg/joins (measured ~2x on the whole dedup stage). Slim
-    # columns only; MEMORY_AND_DISK spills at scale.
-    # Every persist goes through caching.cached() so callers can
-    # caching.release_all() once outputs are materialized (paired
-    # persist/unpersist lifecycle — bench, scaling job, catalog runner and
-    # the pytest fixture all release).
-    groups = cached(exact_groups(enriched))
-    members = _members(enriched, groups)
-    exact_pairs = _star_edges(members)
-
-    # --- LSH candidates over representatives ------------------------------
-    feats = cached(_rep_feats(enriched, groups))
-    exploded = _band_windows(feats.select(
-        "clip_id", "lang", F.posexplode("bands").alias("band_idx", "band_hash")
-    ))
-    small = exploded.filter(F.col("bsize") <= BUCKET_CAP)
-    big_edges = (
-        exploded.filter(
-            (F.col("bsize") > BUCKET_CAP) & (F.col("clip_id") != F.col("leader"))
-        )
-        # leader = min(clip_id) -> leader < member, so ordering holds
-        .select(F.col("leader").alias("id_a"), F.col("clip_id").alias("id_b"),
-                "band_idx")
-    )
-    a = small.alias("a")
-    b = small.alias("b")
-    small_pairs = a.join(
-        b,
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-        & (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.clip_id") < F.col("b.clip_id")),
-    ).select(
-        F.col("a.clip_id").alias("id_a"), F.col("b.clip_id").alias("id_b"),
-        F.col("a.band_idx").alias("band_idx"),
-    )
-    cand = (
         small_pairs.unionByName(big_edges)
         .groupBy("id_a", "id_b")  # A8 pair dedup across bands, counting
         .agg(F.count("*").alias("n_bands"))
@@ -516,12 +392,65 @@ def dedup(enriched: DataFrame) -> DedupResult:
         )
         .orderBy(F.desc("similarity"), "clip_1", "clip_2")  # O2
     )
-
-    flags = _flags(members, verified_dups)
     duplicate_pairs = exact_pairs.unionByName(verified_dups).orderBy(
         F.desc("similarity"), "clip_1", "clip_2"
     )  # O3
-    return DedupResult(flags, duplicate_pairs, similarity_pairs)
+
+    # --- flags: a clip is a duplicate when its exact group has >= 2 members
+    # or its representative is in a verified near-dup pair (symmetric
+    # attachment, metadata.py:608-617)
+    near_rep_ids = (
+        verified_dups.select(
+            F.explode(F.array("clip_1", "clip_2")).alias("rep_id")
+        )
+        .distinct()
+        .withColumn("rep_near_dup", F.lit(True))
+    )
+    is_dup = F.coalesce(F.col("eligible") & (
+        (F.col("group_size") >= 2)
+        | F.coalesce(F.col("rep_near_dup"), F.lit(False))
+    ), F.lit(False))
+    keep = [c for c in marked.columns if c not in ("is_new", "is_dup", "dup_of")]
+    flagged = (
+        rows.filter(F.col("is_new"))
+        .join(near_rep_ids, "rep_id", "left")
+        .select(
+            *keep,
+            is_dup.alias("is_dup"),
+            F.when(is_dup & (F.col("clip_id") != F.col("rep_id")),
+                   F.col("rep_id")).alias("dup_of"),
+        )
+    )
+    return DedupResult(flagged, duplicate_pairs, similarity_pairs)
+
+
+def dedup(enriched: DataFrame) -> DedupResult:
+    """Near-dup detection over a whole corpus: the increment with every
+    clip new."""
+    return _dedup(enriched.withColumn("is_new", F.lit(True)))
+
+
+def dedup_increment(enriched_all: DataFrame, new_ids: DataFrame) -> DedupResult:
+    """Incremental near-dup detection: flag a NEW slice of clips against
+    the full corpus without recomputing corpus×corpus pairs.
+
+    The production shape for continuously-landing data: the committed
+    enriched table (checkpoint.py) holds every prior slice; each new batch
+    only needs pairs that TOUCH a new row.
+
+    ``new_ids``: single-column ``clip_id`` frame naming the new slice.
+    Returns a :class:`DedupResult` whose ``flagged`` rows are ONLY the new
+    rows; both pair outputs contain only pairs touching a new row, and
+    equal the full run's outputs restricted to those pairs.
+
+    Verified in tests/test_dedup_incremental.py: incremental flags and
+    pairs == the full run's restricted to the new slice, on a corpus whose
+    planted duplicate clusters straddle the old/new boundary.
+    """
+    new = new_ids.select("clip_id").withColumn("is_new", F.lit(True))
+    return _dedup(
+        enriched_all.join(new, "clip_id", "left").fillna({"is_new": False})
+    )
 
 
 def connected_components(

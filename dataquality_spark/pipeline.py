@@ -54,13 +54,10 @@ def score_rows(frame: DataFrame, run_ts: dt.datetime,
 
 def score_and_report(enriched: DataFrame, run_ts: dt.datetime,
                      include_evidence: bool = True) -> PipelineResult:
-    """dedup → flags join → :func:`score_rows` → results + run_metrics,
+    """dedup's flagged rows → :func:`score_rows` → results + run_metrics,
     over an already-enriched frame."""
     dd = dedup(enriched)
-    scored = score_rows(
-        enriched.join(dd.flags, "clip_id", "left").fillna({"is_dup": False}),
-        run_ts, include_evidence,
-    )
+    scored = score_rows(dd.flagged, run_ts, include_evidence)
     results = scored.select(*RESULT_COLUMNS)
 
     # Run-level metrics (reference consolidated record, metadata.py:639-677):

@@ -131,6 +131,7 @@ def test_funnel_invariant_to_shuffle_partitions(spark):
             "similarity_pairs": full.similarity_pairs,
             "increment_flags": inc.flags,
             "increment_pairs": inc.duplicate_pairs,
+            "increment_similarity_pairs": inc.similarity_pairs,
         }
         got = {}
         for name, df in out.items():

@@ -50,4 +50,15 @@ def test_incremental_pairs_touch_new_rows_only(spark):
     assert pairs, "expected pairs touching the new slice"
     for r in pairs:
         assert r["clip_1"] >= boundary or r["clip_2"] >= boundary
+
+    # both pair outputs equal the full run's, restricted to pairs touching
+    # a new row (the similarity report included: not the duplicate pairs)
+    full = dedup(enriched)
+    touches_new = (F.col("clip_1") >= boundary) | (F.col("clip_2") >= boundary)
+    for name in ("duplicate_pairs", "similarity_pairs"):
+        got = getattr(inc, name)
+        want = getattr(full, name).filter(touches_new)
+        assert want.count(), name
+        assert got.exceptAll(want).count() == 0, name
+        assert want.exceptAll(got).count() == 0, name
     enriched.unpersist()

@@ -80,6 +80,24 @@ def test_pipeline_never_shuffles_audio_bytes(spark):
         )
 
 
+def test_pipeline_results_branch_exchange_count(spark):
+    """Shuffle rounds in the results branch at 200 clips, as
+    tools/plan_report.py counts them for PLANS.md. Dedup joins the exact
+    groups once and scoring reads ``is_dup`` from that join, with no flags
+    join-back, which leaves 15. Update the pin when a change moves it on
+    purpose."""
+    from dataquality_spark.datagen.clips import DEFAULT_RUN_TS, clips_df
+    from dataquality_spark.pipeline import run_pipeline
+    from dataquality_spark.plan_utils import formatted_plan
+    from tools.plan_report import facts
+
+    # a frame another test left persisted (the same clips_df input, say)
+    # would be substituted into this plan and change its shape
+    spark.catalog.clearCache()
+    res = run_pipeline(clips_df(spark, 200), DEFAULT_RUN_TS)
+    assert facts(formatted_plan(res.results, execute=True))["exchanges"] == 15
+
+
 def test_events_top_recent_is_take_ordered(spark):
     plan = _plan(CATALOG["events_top_recent"].run(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan  # top-k, not a global sort
