@@ -109,7 +109,13 @@ def main() -> None:
     # min over N is monotone in N, so extra repeats only cost bench wall.
     repeats = max(1, int(os.environ.get("BENCH_REPEATS", "6")))
     clips = spark.read.parquet(CLIPS_CACHE)
-    repeat_secs = [round(harness.timed_pass(clips), 3) for _ in range(repeats)]
+    # Classes compiled during each repeat: near zero once the warm-up has
+    # filled the codegen cache, so a thrashing cache shows here.
+    repeat_secs, codegen_compiles = [], []
+    for _ in range(repeats):
+        before = harness.codegen_compiles(spark)
+        repeat_secs.append(round(harness.timed_pass(clips), 3))
+        codegen_compiles.append(harness.codegen_compiles(spark) - before)
     clip_sec = min(repeat_secs)
     timings["clips_pipeline"] = round(clip_sec, 3)
     clips_per_sec = round(N_CLIPS / clip_sec, 1)
@@ -183,6 +189,7 @@ def main() -> None:
         "cpus": CPUS,
         "pipeline_repeats": repeats,
         "pipeline_repeat_secs": repeat_secs,
+        "codegen_compiles": codegen_compiles,
         "host_load_at_start": load_at_start,
         "host_load_at_end": _host_load(),
     }))

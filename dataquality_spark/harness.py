@@ -62,7 +62,24 @@ def timed_session(app_name: str, input_path: str, cores: int,
                          # materialization (event-log measured); timed
                          # sessions never read explain output, so cap it.
                          "spark.sql.maxPlanStringLength": "8192",
+                         # PySpark's call-site capture adds py4j round
+                         # trips to every column expression: the median
+                         # run_pipeline() build at 5,000 clips fell from
+                         # 2.1-2.2 s to 1.0-1.6 s with it off. Off here
+                         # only, as it drops call-site context from error
+                         # messages. PySpark reads the flag once per
+                         # process, at the first wrapped call, so it holds
+                         # only when this is the process's first session
+                         # (bench.py and the scaling job).
+                         "spark.python.sql.dataFrameDebugging.enabled": "false",
                      })
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far: a warm pass whose
+    generated code is all cached adds (nearly) none."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def force(df: DataFrame) -> None:

@@ -50,6 +50,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _driver_memory())
         .config("spark.ui.enabled", "false")
+        # Generated classes are compiled once per JVM and cached by source;
+        # the default cache holds 100. Counted at sf0.01 on 4 cores: a
+        # flagship pass generates ~134 classes, one bench.py run 429, a
+        # pipeline pass plus all 88 catalog queries 1,342. At 100, every
+        # warm pass recompiled nearly all of its classes. A static conf:
+        # only a JVM's first session sets it.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # Python workers fork from this engine's daemon (workerd.py). It
         # starts before --py-files reach sys.path, so the engine root goes
         # on the workers' PYTHONPATH.

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from dataquality_spark.caching import cached
 from dataquality_spark.checkpoint import run_checkpointed
 from dataquality_spark.datagen.clips import DEFAULT_RUN_TS, clips_df
 from dataquality_spark.io.tableio import Manifest
@@ -23,7 +24,7 @@ def _labels(res):
 
 
 def test_resume_after_crash_matches_clean_run(spark, tmp_path):
-    clips = clips_df(spark, N).cache()
+    clips = cached(clips_df(spark, N))
 
     clean = run_checkpointed(
         clips, DEFAULT_RUN_TS, str(tmp_path / "clean"), n_batches=N_BATCHES
@@ -103,7 +104,7 @@ def test_resume_scans_only_missing_batches(spark, tmp_path):
 
     n = 200
     d = str(tmp_path / "resume_scan")
-    clips = clips_df(spark, n).cache()
+    clips = cached(clips_df(spark, n))
     clips.count()
     with pytest.raises(RuntimeError, match="simulated failure"):
         run_checkpointed(clips, DEFAULT_RUN_TS, d, n_batches=4,
@@ -130,7 +131,7 @@ def test_empty_hash_buckets_do_not_poison_the_manifest(spark, tmp_path):
     """With fewer clips than hash buckets, some batch ids get zero rows;
     partitionBy writes no dir for them, yet the commit (n_rows=0) must
     not break read_table on this run or any resume."""
-    clips = clips_df(spark, 12).cache()
+    clips = cached(clips_df(spark, 12))
     d = str(tmp_path / "sparse")
     first = run_checkpointed(clips, DEFAULT_RUN_TS, d, n_batches=16)
     assert first.result.results.count() == 12
@@ -143,7 +144,6 @@ def test_empty_hash_buckets_do_not_poison_the_manifest(spark, tmp_path):
     second = run_checkpointed(clips, DEFAULT_RUN_TS, d, n_batches=16)
     assert not second.batches_run
     assert second.result.results.count() == 12
-    clips.unpersist()
 
 
 def test_time_travel_read_as_of_sequence(spark, tmp_path):
@@ -152,7 +152,7 @@ def test_time_travel_read_as_of_sequence(spark, tmp_path):
     the latest read is unchanged."""
     from dataquality_spark.io.tableio import read_table
 
-    clips = clips_df(spark, N).cache()
+    clips = cached(clips_df(spark, N))
     d = str(tmp_path / "tt")
     run_checkpointed(clips, DEFAULT_RUN_TS, d, n_batches=N_BATCHES)
     m = Manifest(d + "/enriched")

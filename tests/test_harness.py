@@ -1,7 +1,8 @@
 """The timed-run harness behind bench.py and the spark-submit scaling job:
 a failed sink must fail the pass, a warmed, timed pass must report a
-wall and leave no cached frame behind, and the scaling job's record must
-keep its task-span fields."""
+wall and leave no cached frame behind, a repeated pass must reuse the
+code the first one generated, and the scaling job's record must keep its
+task-span fields."""
 
 from __future__ import annotations
 
@@ -32,6 +33,22 @@ def test_warm_up_then_timed_pass_releases_every_frame(spark):
     wall = harness.timed_pass(clips_df(spark, 64))
     assert wall > 0
     assert release_all() == 0
+
+
+def test_repeated_pass_reuses_generated_code(spark):
+    # A pass generates ~134 classes; the session's codegen cache must hold
+    # them, or every warm pass recompiles them (at the 100-class default a
+    # second pass compiled 128-134). The first pass compiles what earlier
+    # tests left uncached, so the bound is a quarter of a pass's classes,
+    # not of the first pass's count; not zero, as a few plans differ from
+    # pass to pass.
+    clips = clips_df(spark, 200)
+    compiled = []
+    for _ in range(2):
+        before = harness.codegen_compiles(spark)
+        harness.timed_pass(clips)
+        compiled.append(harness.codegen_compiles(spark) - before)
+    assert compiled[1] < 134 / 4, compiled
 
 
 def test_scaling_job_writes_its_task_span_fields():
