@@ -1,6 +1,7 @@
 """Benchmark harness (driver contract): runs the headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` (default: the host's CPU count) and prints
+ONE JSON line:
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <sf>, "clips_per_sec": ...}
@@ -21,8 +22,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from dataquality_spark.session import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 N_CLIPS = int(os.environ.get("BENCH_N_CLIPS", "0")) or (
     20000 if "0.1" in SF_DIR else (5000 if "0.01" in SF_DIR else 2000)
 )
@@ -94,9 +97,6 @@ def main() -> None:
 
     timings: dict[str, float] = {}
 
-    # --- warmup: spin up executor threads, Python workers, codegen -------
-    harness.warm_up(spark)
-
     # --- flagship: clips quality-filter pipeline -------------------------
     # best-of-REPEATS: this virtualized host shows 2-3x wall variance from
     # hypervisor neighbors (see BENCH.md); best-of converges on the
@@ -109,6 +109,9 @@ def main() -> None:
     # min over N is monotone in N, so extra repeats only cost bench wall.
     repeats = max(1, int(os.environ.get("BENCH_REPEATS", "6")))
     clips = spark.read.parquet(CLIPS_CACHE)
+    # warm-up: one untimed pass over the timed input starts the Python
+    # workers, builds the scorer models and compiles the pass's classes
+    harness.timed_pass(clips)
     # Classes compiled during each repeat: near zero once the warm-up has
     # filled the codegen cache, so a thrashing cache shows here.
     repeat_secs, codegen_compiles = [], []

@@ -139,15 +139,17 @@ def clips_pdf(
 
 
 def clips_df(spark, n: int, seed: int = DEFAULT_SEED, run_ts: dt.datetime = DEFAULT_RUN_TS,
-             n_files: int | None = None):
-    """Distributed generation: spark.range(n) -> mapInPandas(row_for).
+             n_files: int | None = None, row=row_for):
+    """Distributed generation: spark.range(n) -> mapInPandas(row).
 
     Generation itself parallelizes across executors — at 10^12 rows nothing
-    ever materializes on the driver.
+    ever materializes on the driver. ``row`` builds clip i
+    (:func:`row_for`, or :func:`mixed_codec_row_for` for the mixed-codec
+    corpus).
     """
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield pd.DataFrame([row_for(int(i), seed, run_ts) for i in pdf["id"]])
+            yield pd.DataFrame([row(int(i), seed, run_ts) for i in pdf["id"]])
 
     # ~500 clips (~14 MB of WAV) per output file: a 40k-clip input yields 80
     # splits, so a 32-core scan always has >2 task waves (a 20x56MB layout
@@ -188,16 +190,3 @@ def mixed_codec_row_for(
         r["codec"] = "pcm_mulaw"
     return r
 
-
-def mixed_clips_df(
-    spark, n: int, seed: int = DEFAULT_SEED, run_ts: dt.datetime = DEFAULT_RUN_TS
-):
-    """Distributed mixed-codec generation (same sharding as clips_df)."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [mixed_codec_row_for(int(i), seed, run_ts) for i in pdf["id"]]
-            )
-
-    parts = max(8, min(1024, n // 500))
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, schema=CLIPS_SCHEMA)

@@ -2,9 +2,11 @@
 spark-submit scaling job ``tools/scaling_job.py``.
 
 Both time the same thing — read → enrich → dedup → policy → noop sinks,
-with input generation and cold planning left out — so the session shape,
-the warm-up and the sink pass are declared here once.  The module sits
-inside the package because the scaling job ships only
+with input generation left out — so the session shape and the sink pass
+are declared here once.  Each caller runs one untimed ``timed_pass`` over
+the frame it then times, so the timed passes start with the Python
+workers up, the scorer models built and that frame's classes compiled.
+The module sits inside the package because the scaling job ships only
 ``dataquality_spark/`` to ``--py-files``.
 """
 
@@ -17,11 +19,9 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 
 from .caching import release_all
-from .datagen.clips import DEFAULT_RUN_TS, clips_df
+from .datagen.clips import DEFAULT_RUN_TS
 from .pipeline import PipelineResult, run_pipeline
 from .session import get_spark
-
-WARM_CLIPS = 512
 
 
 def input_bytes(path: str) -> int:
@@ -111,11 +111,3 @@ def timed_pass(clips: DataFrame) -> float:
     release_all()
     return wall
 
-
-def warm_up(spark: SparkSession) -> None:
-    """One untimed pass that starts the Python workers, builds the scorer
-    models and compiles the plan, so cold planning (a per-process
-    constant) stays out of the timed passes."""
-    # Generated, not clips.limit(512): a GlobalLimit over the scan
-    # launches every input split and shuffles rows from each.
-    timed_pass(clips_df(spark, WARM_CLIPS))

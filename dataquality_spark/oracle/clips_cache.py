@@ -1,31 +1,35 @@
 """Materialized pure-Python inputs for the clips/media DuckDB oracles.
 
-The clips catalog queries (``clips_quality_labels``, ``clips_duplicate_
-pairs``, ``clips_audio_invariants``, ``media_feature_extract``) run over
-DETERMINISTIC generated data, so their DuckDB oracles can be real: this
-module generates the same clips locally (pure pandas/numpy — no Spark) and
-writes the *intermediate* frames to parquet files whose paths are baked
-into the oracle SQL strings:
+The clips catalog queries run over DETERMINISTIC generated data, so their
+DuckDB oracles can be real: this module generates the same clips locally
+(pure pandas/numpy — no Spark) and writes the *intermediate* frames to
+parquet files whose paths are baked into the oracle SQL strings:
 
-* ``enriched_n{N}.parquet`` — the per-row enrichment signals (model
-  outputs, token lists, hashed-BoW vectors, content hashes).  The oracle
-  then re-derives EVERYTHING downstream in SQL: exact-group windows,
-  exhaustive near-dup pairs (token-set Jaccard gate + BoW cosine — an
-  all-pairs recompute the distributed LSH funnel must match exactly,
+* ``enriched_{VERSION}_n{N}.parquet`` — the per-row enrichment signals
+  (model outputs, token lists, hashed-BoW vectors, content hashes).  The
+  oracle then re-derives EVERYTHING downstream in SQL: exact-group
+  windows, exhaustive near-dup pairs (token-set Jaccard gate + BoW cosine
+  — an all-pairs recompute the distributed LSH funnel must match exactly,
   which also verifies the funnel's recall), the 17-dimension policy CASE
   tree, overall/action/keep.  Spark's distributed ``enrich`` is checked
   against this pure-Python enrichment bit-for-bit, and Spark's
   dedup+policy against the SQL recompute.
-* ``invariants_n{N}.parquet`` — per-clip decoded-PCM SNR from the same
-  shared decode helper the Spark query ships to executors; the oracle
-  re-derives decode_ok / snr_pass from clip-index arithmetic (the planted
-  failure cases are index-determined) and checks the SNR >= 30 dB
-  invariant on every decodable row.
-* ``media_features.parquet`` — the multimodal extractor's outputs
-  recomputed locally over identically-constructed media bytes.
+* one file per :class:`PerClip` check (SNR, spectral tone, VAD,
+  fingerprint pairs, transcode, chunks, loudness, alignment, mixed-codec
+  decode) — the check's row function run over its generated clips.  The
+  Spark query ships the SAME row function to its executors
+  (``queries._per_clip``), and the oracle re-derives the planted
+  expectations (decode failures, tone matches, segment counts, clipping
+  verdicts) from clip-index arithmetic.
+* ``media_{VERSION}_…parquet`` — the multimodal extractor's outputs
+  recomputed locally over identically-constructed media bytes, and
+  ``doc_models_{VERSION}_sf001.parquet`` — the real scorer models over the
+  driver's documents table.
 
-Files are content-versioned (bump ``VERSION`` when enrichment semantics
-change) and written atomically (tmp + rename), so the Spark query fn and
+Files live in ``$DQ_ORACLE_CACHE`` (default ``/tmp/dq_oracle_cache``) and
+are keyed by ``VERSION``, not by content: bump ``VERSION`` whenever a row
+function or the enrichment semantics change, or a stale file is read back.
+They are written atomically (tmp + rename), so the Spark query fn and
 ``oracle_sql()`` can both "ensure" them in any order.
 """
 
@@ -33,31 +37,37 @@ from __future__ import annotations
 
 import os
 import zlib
+from typing import Callable, NamedTuple
 
 import numpy as np
+import pandas as pd
+
+from ..datagen.clips import (
+    DEFAULT_RUN_TS,
+    clips_pdf,
+    mixed_codec_row_for,
+    reference_waveform,
+    row_for,
+)
+from ..functions import audiofeat as af
+from ..functions.audio import decode_clip, decode_wav_pcm16, encode_wav_pcm16
 
 VERSION = "v2"
 CACHE_DIR = os.environ.get("DQ_ORACLE_CACHE", "/tmp/dq_oracle_cache")
 
 N_LABELS = 4000      # clips_quality_labels corpus size
 N_PAIRS = 2000       # clips_duplicate_pairs corpus size
-N_INVARIANTS = 1000  # clips_audio_invariants corpus size
 N_MEDIA_CLIPS = 300  # media_feature_extract: audio rows
 N_MEDIA_BLOBS = 200  # media_feature_extract: image/video rows
-N_SPECTRAL = 800     # clips_spectral_features corpus size
-N_VAD = 900          # clips_vad_segments corpus size
-N_FP = 500           # clips_fingerprint_dups originals (x2 with copies)
-N_TRANSCODE = 700    # clips_transcode_8k corpus size
-N_CHUNKS = 600       # clips_speech_chunks corpus size
 NORM_PEAK = 0.70794578438413791  # -3 dBFS = 10^(-3/20) target peak
 
 
+def cache_path(stem: str, n: int) -> str:
+    return os.path.join(CACHE_DIR, f"{stem}_{VERSION}_n{n}.parquet")
+
+
 def enriched_path(n: int) -> str:
-    return os.path.join(CACHE_DIR, f"enriched_{VERSION}_n{n}.parquet")
-
-
-def invariants_path(n: int) -> str:
-    return os.path.join(CACHE_DIR, f"invariants_{VERSION}_n{n}.parquet")
+    return cache_path("enriched", n)
 
 
 def media_path() -> str:
@@ -76,22 +86,51 @@ def _atomic_write(pdf, path: str) -> None:
     os.replace(tmp, path)
 
 
+class PerClip(NamedTuple):
+    """One per-clip check, declared once for both engines: ``rows`` maps
+    one generated clip's ``inputs`` columns to its output rows, and runs
+    verbatim on the Spark executors and in the local oracle mirror."""
+
+    stem: str | None  # cache-file stem; None when it writes no cache
+    n: int            # clips generated, indexes 0..n-1
+    rows: Callable[..., list]
+    ddl: str          # Spark output schema; its names are the frame columns
+    inputs: tuple[str, ...] = ("clip_id", "bytes")
+    clip: Callable[[int], dict] = row_for  # clip index -> generated row
+
+    @property
+    def columns(self) -> list[str]:
+        return [col.split()[0] for col in self.ddl.split(",")]
+
+    @property
+    def path(self) -> str:
+        return cache_path(self.stem, self.n)
+
+
+def frame(spec: PerClip) -> pd.DataFrame:
+    """The check's rows over its clips, computed locally."""
+    rows = []
+    for i in range(spec.n):
+        r = spec.clip(i)
+        rows.extend(spec.rows(*(r[c] for c in spec.inputs)))
+    return pd.DataFrame(rows, columns=spec.columns)
+
+
+def ensure(spec: PerClip) -> str:
+    """Write the check's oracle input unless it is cached; returns its path."""
+    path = spec.path
+    if not os.path.exists(path):
+        _atomic_write(frame(spec), path)
+    return path
+
+
 # ----------------------------------------------------------------- enriched
-
-_ENRICHED_COLS = [
-    "clip_id", "sr_hz", "dur_ms", "codec", "decode_ok", "n_samples",
-    "header_sr_hz", "clip_ratio", "is_silent", "lang", "lang_conf", "ppl",
-    "pii_hits", "toxic_hits", "n_chars", "n_tokens", "n_distinct",
-    "alpha_space_ratio", "t_hash", "tokens", "bow_vec", "age_days",
-]
-
 
 def ensure_enriched(n: int) -> str:
     """Generate + enrich n clips locally; write the signals parquet."""
     path = enriched_path(n)
     if os.path.exists(path):
         return path
-    from ..datagen.clips import DEFAULT_RUN_TS, clips_pdf
     from ..functions.langid import get_model as get_langid
     from ..functions.minhash import unpack_bow
     from ..functions.perplexity import get_model as get_charlm
@@ -113,26 +152,21 @@ def ensure_enriched(n: int) -> str:
     from ..functions.texthash import tokenize
 
     enr["tokens"] = [tokenize(t or "") for t in pdf["transcript"].tolist()]
-    _atomic_write(enr[_ENRICHED_COLS], path)
+    _atomic_write(enr[[
+        "clip_id", "sr_hz", "dur_ms", "codec", "decode_ok", "n_samples",
+        "header_sr_hz", "clip_ratio", "is_silent", "lang", "lang_conf", "ppl",
+        "pii_hits", "toxic_hits", "n_chars", "n_tokens", "n_distinct",
+        "alpha_space_ratio", "t_hash", "tokens", "bow_vec", "age_days",
+    ]], path)
     return path
 
 
 # --------------------------------------------------------------- invariants
 
-def snr_row(clip_id: str, raw: bytes) -> tuple[int, float, int]:
-    """(decode_ok, snr_db, snr_pass) for one clip — decode the WAV bytes,
-    recompute the analytic reference waveform from the clip index, SNR in
-    dB (input_hint: >= 30 dB per decodable row).  Shared by the Spark
-    ``clips_audio_invariants`` executors and the local oracle mirror, so
-    the two sides run literally the same arithmetic."""
-    from ..datagen.clips import reference_waveform
-    from ..functions.audio import decode_wav_pcm16
-
-    idx = int(clip_id.split("_")[1])
-    try:
-        dec = decode_wav_pcm16(bytes(raw))
-    except ValueError:
-        return 0, 0.0, 0
+def _snr(idx: int, dec) -> tuple[float, int]:
+    """(snr_db, snr_pass) of a decoded clip against the analytic reference
+    waveform recomputed from its index (input_hint: >= 30 dB; silent
+    references pass by the zero-power rule)."""
     sig = dec.pcm.astype(np.float64) / 32767.0  # invert encode scale
     ref = reference_waveform(idx, int(len(sig) * 1000 / dec.sr_hz))
     m = min(len(ref), len(sig))
@@ -140,27 +174,21 @@ def snr_row(clip_id: str, raw: bytes) -> tuple[int, float, int]:
     p_sig = float(np.mean(ref[:m] ** 2))
     p_noise = float(np.mean(noise**2)) or 1e-12
     snr = 10.0 * np.log10(p_sig / p_noise) if p_sig > 0 else 99.0
-    return 1, round(float(snr), 2), int(snr >= 30.0 or p_sig == 0)
+    return round(float(snr), 2), int(snr >= 30.0 or p_sig == 0)
 
 
-def ensure_invariants(n: int) -> str:
-    path = invariants_path(n)
-    if os.path.exists(path):
-        return path
-    import pandas as pd
-
-    from ..datagen.clips import row_for
-
-    rows = []
-    for i in range(n):
-        r = row_for(i)
-        ok, snr, ok_pass = snr_row(r["clip_id"], r["bytes"])
-        rows.append((r["clip_id"], ok, snr, ok_pass))
-    pdf = pd.DataFrame(
-        rows, columns=["clip_id", "decode_ok", "snr_db", "snr_pass"]
-    )
-    _atomic_write(pdf, path)
-    return path
+def snr_row(clip_id: str, raw: bytes) -> tuple[int, float, int]:
+    """(decode_ok, snr_db, snr_pass) for one clip — decode the WAV bytes,
+    recompute the analytic reference waveform from the clip index, SNR in
+    dB (input_hint: >= 30 dB per decodable row).  Shared by the Spark
+    ``clips_audio_invariants`` executors and the local oracle mirror, so
+    the two sides run literally the same arithmetic."""
+    idx = int(clip_id.split("_")[1])
+    try:
+        dec = decode_wav_pcm16(bytes(raw))
+    except ValueError:
+        return 0, 0.0, 0
+    return (1, *_snr(idx, dec))
 
 
 # -------------------------------------------------------------------- media
@@ -176,10 +204,6 @@ def ensure_media() -> str:
     path = media_path()
     if os.path.exists(path):
         return path
-    import pandas as pd
-
-    from ..datagen.clips import row_for
-    from ..functions.audio import decode_wav_pcm16
     from ..functions.multimodal import FEATURE_DIM, _fake_decode, _fake_feature
 
     rows = []
@@ -209,24 +233,6 @@ def ensure_media() -> str:
 
 # ---------------------------------------------------------- audio features
 
-def spectral_path(n: int) -> str:
-    return os.path.join(CACHE_DIR, f"spectral_{VERSION}_n{n}.parquet")
-
-
-def vad_path(n: int) -> str:
-    return os.path.join(CACHE_DIR, f"vad_{VERSION}_n{n}.parquet")
-
-
-def fp_pairs_path(n: int) -> str:
-    return os.path.join(CACHE_DIR, f"fp_pairs_{VERSION}_n{n}.parquet")
-
-
-_SPECTRAL_COLS = [
-    "clip_id", "decode_ok", "n_samples", "rms_db", "zcr", "dominant_hz",
-    "centroid_hz", "rolloff85_hz", "flatness", "dominant_hz_8k", "tone_match",
-]
-
-
 def spectral_row(clip_id: str, raw: bytes) -> tuple:
     """Per-clip spectral descriptors + the planted-tone invariant.
 
@@ -237,12 +243,6 @@ def spectral_row(clip_id: str, raw: bytes) -> tuple:
     against index arithmetic, not against itself.  Decode failures emit
     zeros (the invariants-row convention).  Shared verbatim by the Spark
     executors and the local oracle mirror."""
-    import numpy as np
-
-    from ..datagen.clips import SR
-    from ..functions import audiofeat as af
-    from ..functions.audio import decode_wav_pcm16
-
     idx = int(clip_id.split("_")[1])
     try:
         dec = decode_wav_pcm16(bytes(raw))
@@ -266,26 +266,19 @@ def spectral_row(clip_id: str, raw: bytes) -> tuple:
     )
 
 
-def ensure_spectral(n: int) -> str:
-    path = spectral_path(n)
-    if os.path.exists(path):
-        return path
-    import pandas as pd
-
-    from ..datagen.clips import row_for
-
-    rows = []
-    for i in range(n):
-        r = row_for(i)
-        rows.append(spectral_row(r["clip_id"], r["bytes"]))
-    _atomic_write(pd.DataFrame(rows, columns=_SPECTRAL_COLS), path)
-    return path
-
-
-_VAD_COLS = [
-    "clip_id", "decode_ok", "n_frames", "speech_ratio", "n_segments",
-    "longest_speech_ms",
-]
+def _gapped_pcm(clip_id: str, raw: bytes):
+    """(float PCM, sr_hz) of a clip with the planted silence gap — samples
+    [0.4n, 0.6n) zeroed when index i % 3 == 0 — or None when the bytes do
+    not decode.  The gap makes VAD segment counts index-derivable."""
+    idx = int(clip_id.split("_")[1])
+    try:
+        dec = decode_wav_pcm16(bytes(raw))
+    except ValueError:
+        return None
+    x = dec.pcm.astype(np.float64) / 32767.0
+    if idx % 3 == 0:
+        x[int(0.4 * x.size):int(0.6 * x.size)] = 0.0
+    return x, dec.sr_hz
 
 
 def vad_row(clip_id: str, raw: bytes) -> tuple:
@@ -294,41 +287,14 @@ def vad_row(clip_id: str, raw: bytes) -> tuple:
     expected segment count is index-derivable (0 silent / 2 gapped / 1
     otherwise) — the oracle checks the segmenter against arithmetic, not
     against itself.  Shared verbatim by executors and the oracle mirror."""
-    import numpy as np
-
-    from ..functions import audiofeat as af
-    from ..functions.audio import decode_wav_pcm16
-
-    idx = int(clip_id.split("_")[1])
-    try:
-        dec = decode_wav_pcm16(bytes(raw))
-    except ValueError:
+    got = _gapped_pcm(clip_id, raw)
+    if got is None:
         return (clip_id, 0, 0, 0.0, 0, 0.0)
-    x = dec.pcm.astype(np.float64) / 32767.0
-    if idx % 3 == 0:
-        x = x.copy()
-        x[int(0.4 * x.size):int(0.6 * x.size)] = 0.0
-    v = af.vad_stats(x, dec.sr_hz)
+    v = af.vad_stats(*got)
     return (
         clip_id, 1, v["n_frames"], v["speech_ratio"], v["n_segments"],
         v["longest_speech_ms"],
     )
-
-
-def ensure_vad(n: int) -> str:
-    path = vad_path(n)
-    if os.path.exists(path):
-        return path
-    import pandas as pd
-
-    from ..datagen.clips import row_for
-
-    rows = []
-    for i in range(n):
-        r = row_for(i)
-        rows.append(vad_row(r["clip_id"], r["bytes"]))
-    _atomic_write(pd.DataFrame(rows, columns=_VAD_COLS), path)
-    return path
 
 
 def scaled_pcm16(pcm) -> "np.ndarray":
@@ -366,10 +332,6 @@ def fp_pair_row(clip_id: str, raw: bytes) -> tuple:
     fraction of differing fingerprint bits — integer popcount over the
     xor'd words divided by 16*n_words, bit-identical to the Spark-side
     native `aggregate(zip_with(...bit_count(x ^ y)...))` expression."""
-    import numpy as np
-
-    from ..functions import audiofeat as af
-
     suffix = clip_id.split("_")[1]
     got = af.voiced_fingerprint(raw)
     if got is None:
@@ -380,37 +342,59 @@ def fp_pair_row(clip_id: str, raw: bytes) -> tuple:
     return (clip_id, f"dupc_{suffix}", af.hamming_frac(fa, fb), 1)
 
 
-def ensure_fp_pairs(n: int) -> str:
-    path = fp_pairs_path(n)
-    if os.path.exists(path):
-        return path
-    import pandas as pd
-
-    from ..datagen.clips import row_for
-
-    rows = []
-    for i in range(n):
-        r = row_for(i)
-        rows.append(fp_pair_row(r["clip_id"], r["bytes"]))
-    _atomic_write(
-        pd.DataFrame(rows, columns=["clip_1", "clip_2", "hamming", "eligible"]),
-        path,
-    )
-    return path
+def scaled_copy_rows(clip_id: str, raw: bytes) -> list:
+    """(clip_id, bytes) for a clip and for its 'dupc_' copy — decoded,
+    scaled_pcm16, re-encoded: the corpus clips_fingerprint_dups runs its
+    funnel over.  An undecodable clip keeps its row but gets no copy."""
+    rows = [(clip_id, bytes(raw))]
+    try:
+        dec = decode_wav_pcm16(bytes(raw))
+    except ValueError:
+        return rows
+    copy = encode_wav_pcm16(scaled_pcm16(dec.pcm), dec.sr_hz)
+    return rows + [(f"dupc_{clip_id.split('_')[1]}", copy)]
 
 
-def transcode_path(n: int) -> str:
-    return os.path.join(CACHE_DIR, f"transcode_{VERSION}_n{n}.parquet")
+def offset_fp_rows(clip_id: str, raw: bytes) -> list:
+    """(fp_id, n_words, words) for a voiced clip and for its 'shft_' copy
+    (4 + i%5 fingerprint hops of leader silence, then the 0.7x
+    requantization — shifted_scaled_pcm16): the corpus the offset
+    matcher of clips_offset_align_dups runs over.  Silent and undecodable
+    clips emit no rows."""
+    got = af.voiced_fingerprint(raw)
+    if got is None:
+        return []
+    dec, w = got
+    suffix = clip_id.split("_")[1]
+    shifted = shifted_scaled_pcm16(dec.pcm, 4 + int(suffix) % 5)
+    w2 = af.band_fingerprint(shifted.astype(np.float64) / 32767.0, dec.sr_hz)
+    return [
+        (fid, int(words.size), [int(v) for v in words])
+        for fid, words in ((clip_id, w), (f"shft_{suffix}", w2))
+    ]
 
 
-def chunks_path(n: int) -> str:
-    return os.path.join(CACHE_DIR, f"chunks_{VERSION}_n{n}.parquet")
-
-
-_TRANSCODE_COLS = [
-    "clip_id", "decode_ok", "out_sr", "out_n_samples", "gain_db",
-    "out_peak", "out_crc32",
-]
+def trim_row(clip_id: str, raw: bytes) -> list:
+    """(clip_id, lead_frames, trail_frames, restored) for a padded variant
+    of the clip — 4 + i%5 leading and 2 + i%3 trailing fingerprint hops of
+    digital silence — after the frame-quantized exact-zero trim;
+    `restored` is crc32 equality between the trimmed variant and the
+    identically-trimmed original.  Undecodable clips emit no row."""
+    try:
+        dec = decode_wav_pcm16(bytes(raw))
+    except ValueError:
+        return []
+    i = int(clip_id.split("_")[1])
+    s, t = 4 + i % 5, 2 + i % 3
+    padded = np.concatenate([
+        np.zeros(s * af.FP_HOP, dtype=np.int16),
+        dec.pcm,
+        np.zeros(t * af.FP_HOP, dtype=np.int16),
+    ])
+    trm, lead, trail = af.trim_zero_frames(padded)
+    base, _, _ = af.trim_zero_frames(dec.pcm)
+    restored = int(zlib.crc32(trm.tobytes()) == zlib.crc32(base.tobytes()))
+    return [(clip_id, lead, trail, restored)]
 
 
 def transcode_row(clip_id: str, raw: bytes) -> tuple:
@@ -420,11 +404,6 @@ def transcode_row(clip_id: str, raw: bytes) -> tuple:
     decode/resample/normalize/encode chain), the gain applied, and the
     achieved peak.  Silent clips get unity gain.  Shared verbatim by the
     Spark executors and the oracle mirror."""
-    import numpy as np
-
-    from ..functions import audiofeat as af
-    from ..functions.audio import decode_wav_pcm16, encode_wav_pcm16
-
     try:
         dec = decode_wav_pcm16(bytes(raw))
     except ValueError:
@@ -445,77 +424,18 @@ def transcode_row(clip_id: str, raw: bytes) -> tuple:
     )
 
 
-def ensure_transcode(n: int) -> str:
-    path = transcode_path(n)
-    if os.path.exists(path):
-        return path
-    import pandas as pd
-
-    from ..datagen.clips import row_for
-
-    rows = []
-    for i in range(n):
-        r = row_for(i)
-        rows.append(transcode_row(r["clip_id"], r["bytes"]))
-    _atomic_write(pd.DataFrame(rows, columns=_TRANSCODE_COLS), path)
-    return path
-
-
-_CHUNK_COLS = ["clip_id", "seg_idx", "start_ms", "end_ms", "seg_rms_db"]
-
-
 def chunk_rows(clip_id: str, raw: bytes) -> list:
     """Chunk extraction: one row per VAD speech segment (the gapped-clip
     convention from vad_row applies, so segment counts stay index-
     derivable: 0 silent / 2 gapped / 1 plain; decode failures emit no
     rows).  Shared verbatim by executors and the oracle mirror."""
-    import numpy as np
-
-    from ..functions import audiofeat as af
-    from ..functions.audio import decode_wav_pcm16
-
-    idx = int(clip_id.split("_")[1])
-    try:
-        dec = decode_wav_pcm16(bytes(raw))
-    except ValueError:
+    got = _gapped_pcm(clip_id, raw)
+    if got is None:
         return []
-    x = dec.pcm.astype(np.float64) / 32767.0
-    if idx % 3 == 0:
-        x = x.copy()
-        x[int(0.4 * x.size):int(0.6 * x.size)] = 0.0
     return [
         (clip_id, j, s, e, r)
-        for j, (s, e, r) in enumerate(af.speech_segments(x, dec.sr_hz))
+        for j, (s, e, r) in enumerate(af.speech_segments(*got))
     ]
-
-
-def ensure_chunks(n: int) -> str:
-    path = chunks_path(n)
-    if os.path.exists(path):
-        return path
-    import pandas as pd
-
-    from ..datagen.clips import row_for
-
-    rows = []
-    for i in range(n):
-        r = row_for(i)
-        rows.extend(chunk_rows(r["clip_id"], r["bytes"]))
-    _atomic_write(pd.DataFrame(rows, columns=_CHUNK_COLS), path)
-    return path
-
-
-N_LOUD = 800  # clips_loudness_stats corpus size (x2 with hot4 variants)
-
-
-def loudness_path(n: int) -> str:
-    return os.path.join(CACHE_DIR, f"loudness_{VERSION}_n{n}.parquet")
-
-
-_LOUD_COLS = [
-    "clip_id", "variant", "decode_ok", "peak", "rms_db", "crest_db",
-    "clip_ratio", "is_clipped",
-]
 
 
 def _pcm_loudness(pcm_int: "np.ndarray") -> tuple:
@@ -525,8 +445,6 @@ def _pcm_loudness(pcm_int: "np.ndarray") -> tuple:
     saturates at -32768, which abs() still catches); is_clipped uses the
     1% ratio the policy's Accuracy dimension gates on (operators/
     scoring.py, metadata.py:419-433)."""
-    import numpy as np
-
     x = pcm_int.astype(np.float64) / 32767.0
     if x.size == 0:
         return (0.0, -120.0, 0.0, 0.0, 0)
@@ -550,10 +468,6 @@ def loudness_rows(clip_id: str, raw: bytes) -> list:
     failures emit zeroed rows.  All expectations are index-derivable,
     which is what the DuckDB oracle re-derives.  Shared verbatim by the
     Spark executors and the local oracle mirror."""
-    import numpy as np
-
-    from ..functions.audio import decode_wav_pcm16
-
     try:
         dec = decode_wav_pcm16(bytes(raw))
     except ValueError:
@@ -569,22 +483,6 @@ def loudness_rows(clip_id: str, raw: bytes) -> list:
         (clip_id, "orig", 1) + _pcm_loudness(dec.pcm),
         (clip_id, "hot4", 1) + _pcm_loudness(hot),
     ]
-
-
-def ensure_loudness(n: int) -> str:
-    path = loudness_path(n)
-    if os.path.exists(path):
-        return path
-    import pandas as pd
-
-    from ..datagen.clips import row_for
-
-    rows = []
-    for i in range(n):
-        r = row_for(i)
-        rows.extend(loudness_rows(r["clip_id"], r["bytes"]))
-    _atomic_write(pd.DataFrame(rows, columns=_LOUD_COLS), path)
-    return path
 
 
 DOC_SF_DIR = "/root/testdata/sf0.01"  # the driver's correctness scale
@@ -604,7 +502,6 @@ def ensure_doc_models() -> str:
     path = doc_models_path()
     if os.path.exists(path):
         return path
-    import pandas as pd
     import pyarrow.parquet as pq
 
     from ..functions.langid import get_model as get_langid
@@ -629,20 +526,6 @@ def ensure_doc_models() -> str:
     return path
 
 
-
-
-N_ALIGN = 500  # clips_word_alignment corpus size
-
-
-def align_path(n: int) -> str:
-    return os.path.join(CACHE_DIR, f"align_{VERSION}_n{n}.parquet")
-
-
-_ALIGN_COLS = [
-    "clip_id", "seg_idx", "start_ms", "end_ms", "w_start", "w_end",
-]
-
-
 def align_rows(clip_id: str, raw: bytes, transcript: str) -> list:
     """Proportional word-to-segment alignment (the forced-alignment stub
     an ASR data-prep pipeline runs before per-segment training pairs):
@@ -653,21 +536,10 @@ def align_rows(clip_id: str, raw: bytes, transcript: str) -> list:
     the last segment ends at W, ranges are contiguous and monotone —
     invariants the DuckDB oracle RE-DERIVES in SQL rather than trusts.
     Gapped/silent/undecodable conventions follow chunk_rows."""
-    import numpy as np
-
-    from ..functions import audiofeat as af
-    from ..functions.audio import decode_wav_pcm16
-
-    idx = int(clip_id.split("_")[1])
-    try:
-        dec = decode_wav_pcm16(bytes(raw))
-    except ValueError:
+    got = _gapped_pcm(clip_id, raw)
+    if got is None:
         return []
-    x = dec.pcm.astype(np.float64) / 32767.0
-    if idx % 3 == 0:
-        x = x.copy()
-        x[int(0.4 * x.size):int(0.6 * x.size)] = 0.0
-    segs = af.speech_segments(x, dec.sr_hz)
+    segs = af.speech_segments(*got)
     if not segs:
         return []
     words = [w for w in (transcript or "").split() if w]
@@ -685,34 +557,6 @@ def align_rows(clip_id: str, raw: bytes, transcript: str) -> list:
     return rows
 
 
-def ensure_align(n: int) -> str:
-    path = align_path(n)
-    if os.path.exists(path):
-        return path
-    import pandas as pd
-
-    from ..datagen.clips import row_for
-
-    rows = []
-    for i in range(n):
-        r = row_for(i)
-        rows.extend(align_rows(r["clip_id"], r["bytes"], r["transcript"]))
-    _atomic_write(pd.DataFrame(rows, columns=_ALIGN_COLS), path)
-    return path
-
-
-N_MIXED = 600  # clips_mixed_codec_decode corpus size
-
-
-def mixed_path(n: int) -> str:
-    return os.path.join(CACHE_DIR, f"mixed_{VERSION}_n{n}.parquet")
-
-
-_MIXED_COLS = [
-    "clip_id", "codec", "decode_ok", "n_samples", "snr_db", "snr_pass",
-]
-
-
 def mixed_codec_row(clip_id: str, raw: bytes, codec: str) -> tuple:
     """(clip_id, codec, decode_ok, n_samples, snr_db, snr_pass) for one
     mixed-codec clip: codec-dispatched decode (PCM16 or G.711 mu-law —
@@ -723,55 +567,87 @@ def mixed_codec_row(clip_id: str, raw: bytes, codec: str) -> tuple:
     error-routed.  Mu-law companding error is ~35-38 dB SNR — above the
     input_hint's 30 dB floor, which snr_pass asserts per row.  Shared
     verbatim by the Spark executors and the local oracle mirror."""
-    from ..datagen.clips import reference_waveform
-    from ..functions.audio import decode_clip
-
     idx = int(clip_id.split("_")[1])
     try:
         dec = decode_clip(bytes(raw), codec)
     except (ValueError, NotImplementedError):
         return (clip_id, codec, 0, 0, 0.0, 0)
-    sig = dec.pcm.astype(np.float64) / 32767.0
-    ref = reference_waveform(idx, int(len(sig) * 1000 / dec.sr_hz))
-    m = min(len(ref), len(sig))
-    noise = ref[:m] - sig[:m]
-    p_sig = float(np.mean(ref[:m] ** 2))
-    p_noise = float(np.mean(noise**2)) or 1e-12
-    snr = 10.0 * np.log10(p_sig / p_noise) if p_sig > 0 else 99.0
-    return (
-        clip_id, codec, 1, int(dec.pcm.size), round(float(snr), 2),
-        int(snr >= 30.0 or p_sig == 0),
-    )
+    return (clip_id, codec, 1, int(dec.pcm.size), *_snr(idx, dec))
 
 
-def ensure_mixed(n: int) -> str:
-    path = mixed_path(n)
-    if os.path.exists(path):
-        return path
-    import pandas as pd
+# ------------------------------------------------------- the per-clip checks
 
-    from ..datagen.clips import mixed_codec_row_for
-
-    rows = []
-    for i in range(n):
-        r = mixed_codec_row_for(i)
-        rows.append(mixed_codec_row(r["clip_id"], r["bytes"], r["codec"]))
-    _atomic_write(pd.DataFrame(rows, columns=_MIXED_COLS), path)
-    return path
+INVARIANTS = PerClip(
+    "invariants", 1000, lambda cid, raw: [(cid, *snr_row(cid, raw))],
+    "clip_id string, decode_ok int, snr_db double, snr_pass int",
+)
+SPECTRAL = PerClip(
+    "spectral", 800, lambda cid, raw: [spectral_row(cid, raw)],
+    "clip_id string, decode_ok int, n_samples int, rms_db double, "
+    "zcr double, dominant_hz double, centroid_hz double, "
+    "rolloff85_hz double, flatness double, dominant_hz_8k double, "
+    "tone_match int",
+)
+VAD = PerClip(
+    "vad", 900, lambda cid, raw: [vad_row(cid, raw)],
+    "clip_id string, decode_ok int, n_frames int, "
+    "speech_ratio double, n_segments int, longest_speech_ms double",
+)
+# The cache only: the Spark side of clips_fingerprint_dups is the
+# fingerprint funnel over every clip plus its scaled copy.
+FP_PAIRS = PerClip(
+    "fp_pairs", 500, lambda cid, raw: [fp_pair_row(cid, raw)],
+    "clip_1 string, clip_2 string, hamming double, eligible int",
+)
+TRANSCODE = PerClip(
+    "transcode", 700, lambda cid, raw: [transcode_row(cid, raw)],
+    "clip_id string, decode_ok int, out_sr int, out_n_samples int, "
+    "gain_db double, out_peak double, out_crc32 bigint",
+)
+CHUNKS = PerClip(
+    "chunks", 600, chunk_rows,
+    "clip_id string, seg_idx bigint, start_ms double, "
+    "end_ms double, seg_rms_db double",
+)
+LOUDNESS = PerClip(  # 2 rows per clip: the original and its hot4 variant
+    "loudness", 800, loudness_rows,
+    "clip_id string, variant string, decode_ok int, peak double, "
+    "rms_db double, crest_db double, clip_ratio double, is_clipped int",
+)
+ALIGN = PerClip(
+    "align", 500, align_rows,
+    "clip_id string, seg_idx int, start_ms int, end_ms int, "
+    "w_start int, w_end int",
+    inputs=("clip_id", "bytes", "transcript"),
+)
+MIXED = PerClip(
+    "mixed", 600, lambda cid, raw, codec: [mixed_codec_row(cid, raw, codec)],
+    "clip_id string, codec string, decode_ok int, "
+    "n_samples bigint, snr_db double, snr_pass int",
+    inputs=("clip_id", "bytes", "codec"), clip=mixed_codec_row_for,
+)
+# No cache of their own: the fingerprint corpus is checked through
+# FP_PAIRS, and the trim and offset oracles are closed-form SQL over
+# clip-index arithmetic.
+FP_CORPUS = PerClip(  # 2 rows per decodable clip: the original and its copy
+    None, FP_PAIRS.n, scaled_copy_rows, "clip_id string, bytes binary",
+)
+TRIM = PerClip(
+    None, 160, trim_row,
+    "clip_id string, lead_frames int, trail_frames int, restored int",
+)
+OFFSET_FP = PerClip(  # 2 rows per voiced clip: the original and its shift
+    None, 180, offset_fp_rows,
+    "fp_id string, n_words int, words array<int>",
+)
 
 
 def ensure_all() -> None:
     """Materialize every oracle input (no-op when cached)."""
     ensure_enriched(N_LABELS)
     ensure_enriched(N_PAIRS)
-    ensure_invariants(N_INVARIANTS)
     ensure_media()
     ensure_doc_models()
-    ensure_spectral(N_SPECTRAL)
-    ensure_vad(N_VAD)
-    ensure_fp_pairs(N_FP)
-    ensure_transcode(N_TRANSCODE)
-    ensure_chunks(N_CHUNKS)
-    ensure_loudness(N_LOUD)
-    ensure_align(N_ALIGN)
-    ensure_mixed(N_MIXED)
+    for spec in (INVARIANTS, SPECTRAL, VAD, FP_PAIRS, TRANSCODE, CHUNKS,
+                 LOUDNESS, ALIGN, MIXED):
+        ensure(spec)

@@ -39,6 +39,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .oracle import clips_cache
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -2305,7 +2307,6 @@ def _fn_doc_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .functions.langid import get_model as get_langid
     from .functions.perplexity import get_model as get_charlm
-    from .oracle import clips_cache
 
     clips_cache.ensure_doc_models()
     _register(spark, sf_dir)
@@ -2494,7 +2495,6 @@ def _clips_pipeline_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from .datagen.clips import DEFAULT_RUN_TS, clips_df
-    from .oracle import clips_cache
     from .pipeline import run_pipeline
 
     clips_cache.ensure_enriched(clips_cache.N_LABELS)
@@ -2624,36 +2624,10 @@ _q(
 )
 
 
-from .oracle.clips_cache import (  # noqa: E402  (paths baked into oracle SQL)
-    N_ALIGN,
-    N_CHUNKS,
-    N_FP,
-    N_INVARIANTS,
-    N_LABELS,
-    N_LOUD,
-    N_MIXED,
-    N_PAIRS,
-    N_SPECTRAL,
-    N_TRANSCODE,
-    N_VAD,
-    align_path,
-    chunks_path,
-    doc_models_path,
-    enriched_path,
-    fp_pairs_path,
-    invariants_path,
-    loudness_path,
-    media_path,
-    mixed_path,
-    spectral_path,
-    transcode_path,
-    vad_path,
-)
-
 _q(
     "doc_model_scores",
     fn=_fn_doc_model_scores,
-    oracle=_duck_doc_models_oracle(doc_models_path()),
+    oracle=_duck_doc_models_oracle(clips_cache.doc_models_path()),
     doc="The REAL langid (hashed-char-trigram NB, broadcast weights) and "
         "perplexity (interpolated-backoff char LM, broadcast count "
         "tables) models over the documents table in one Arrow-batched "
@@ -2666,7 +2640,7 @@ _q(
 _q(
     "clips_quality_labels",
     fn=_clips_pipeline_results,
-    oracle=_duck_clips_labels_oracle(enriched_path(N_LABELS)),
+    oracle=_duck_clips_labels_oracle(clips_cache.enriched_path(clips_cache.N_LABELS)),
     doc="Flagship clips pipeline end-to-end (enrich -> dedup -> 17-dim "
         "policy). Oracle: DuckDB recomputes exact-dup groups, EXHAUSTIVE "
         "near-dup pairs, and the policy CASE tree over the pure-Python "
@@ -2681,7 +2655,6 @@ def _clips_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from .datagen.clips import DEFAULT_RUN_TS, clips_df
-    from .oracle import clips_cache
     from .pipeline import run_pipeline
 
     clips_cache.ensure_enriched(clips_cache.N_PAIRS)
@@ -2696,7 +2669,7 @@ def _clips_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _q(
     "clips_duplicate_pairs",
     fn=_clips_dup_pairs,
-    oracle=_duck_clips_pairs_oracle(enriched_path(N_PAIRS)),
+    oracle=_duck_clips_pairs_oracle(clips_cache.enriched_path(clips_cache.N_PAIRS)),
     doc="Clips near-dup pair list (P5 reporting shape: file_1/file_2/"
         "similarity percent, metadata.py:592-597) from the LSH + native "
         "exact-verify path. Oracle: DuckDB recomputes the exact star edges "
@@ -2706,36 +2679,39 @@ _q(
 )
 
 
+def _per_clip(spark: SparkSession, spec: clips_cache.PerClip) -> DataFrame:
+    """A per-clip check over its generated clips in one Arrow-batched pass:
+    the executors run ``spec.rows``, the same function the local oracle
+    mirror wrote the spec's cache with (written first, when it has one).
+    Input rows fan out to any number of output rows; bytes never shuffle."""
+    from typing import Iterator
+
+    import pandas as pd
+
+    from .datagen.clips import clips_df
+
+    if spec.stem:
+        clips_cache.ensure(spec)
+    rows, inputs, columns = spec.rows, spec.inputs, spec.columns
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for args in zip(*(pdf[c] for c in inputs)):
+                out.extend(rows(*args))
+            yield pd.DataFrame(out, columns=columns)
+
+    clips = clips_df(spark, spec.n, row=spec.clip)
+    return clips.select(*inputs).mapInPandas(run, schema=spec.ddl)
+
+
 def _clips_audio_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decoded-PCM invariant check distributed over executors: decode the
     WAV bytes, recompute the reference waveform from the clip index, emit
     per-clip SNR (input_hint: SNR >= 30 dB). The per-row arithmetic is the
     shared oracle/clips_cache.snr_row helper, so the executors and the
     local oracle mirror run literally the same code."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from .datagen.clips import DEFAULT_RUN_TS, clips_df
-    from .oracle import clips_cache
-    from .oracle.clips_cache import snr_row
-
-    clips_cache.ensure_invariants(clips_cache.N_INVARIANTS)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (cid, *snr_row(cid, raw))
-                for cid, raw in zip(pdf["clip_id"], pdf["bytes"])
-            ]
-            yield pd.DataFrame(
-                rows, columns=["clip_id", "decode_ok", "snr_db", "snr_pass"]
-            )
-
-    clips = clips_df(spark, clips_cache.N_INVARIANTS, run_ts=DEFAULT_RUN_TS)
-    return clips.select("clip_id", "bytes").mapInPandas(
-        stats, schema="clip_id string, decode_ok int, snr_db double, snr_pass int"
-    ).orderBy("clip_id")
+    return _per_clip(spark, clips_cache.INVARIANTS).orderBy("clip_id")
 
 
 def _duck_invariants_oracle(path: str) -> str:
@@ -2759,7 +2735,7 @@ FROM inv ORDER BY clip_id
 _q(
     "clips_audio_invariants",
     fn=_clips_audio_invariants,
-    oracle=_duck_invariants_oracle(invariants_path(N_INVARIANTS)),
+    oracle=_duck_invariants_oracle(clips_cache.INVARIANTS.path),
     doc="Per-row audio invariant (input_hint): decode PCM in an Arrow-"
         "batched pass, SNR vs the analytically recomputed reference "
         "waveform, >= 30 dB. Oracle: local pure-Python decode parquet + "
@@ -2779,7 +2755,6 @@ def _media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .datagen.clips import clips_df
     from .functions.multimodal import extract_features
-    from .oracle import clips_cache
 
     clips_cache.ensure_media()
     clips = clips_df(spark, clips_cache.N_MEDIA_CLIPS).select(
@@ -2843,7 +2818,7 @@ FROM d ORDER BY media_id
 _q(
     "media_feature_extract",
     fn=_media_features,
-    oracle=_duck_media_oracle(media_path()),
+    oracle=_duck_media_oracle(clips_cache.media_path()),
     doc="Multimodal binary columns (audio real, image/video deterministic "
         "fake decode) through the Arrow-batched mapInPandas extractor — "
         "schema/batch-shape/error-routing plumbing for the 100TB "
@@ -2863,32 +2838,7 @@ def _clips_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     110+3*(i%200) Hz tone at BOTH rates) is re-derived by the oracle from
     index arithmetic, so the FFT/resample path is checked against an
     analytic expectation, not against itself."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from .datagen.clips import DEFAULT_RUN_TS, clips_df
-    from .oracle import clips_cache
-    from .oracle.clips_cache import _SPECTRAL_COLS, spectral_row
-
-    clips_cache.ensure_spectral(clips_cache.N_SPECTRAL)
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                spectral_row(cid, raw)
-                for cid, raw in zip(pdf["clip_id"], pdf["bytes"])
-            ]
-            yield pd.DataFrame(rows, columns=_SPECTRAL_COLS)
-
-    clips = clips_df(spark, clips_cache.N_SPECTRAL, run_ts=DEFAULT_RUN_TS)
-    return clips.select("clip_id", "bytes").mapInPandas(
-        feats,
-        schema="clip_id string, decode_ok int, n_samples int, rms_db double, "
-               "zcr double, dominant_hz double, centroid_hz double, "
-               "rolloff85_hz double, flatness double, dominant_hz_8k double, "
-               "tone_match int",
-    ).orderBy("clip_id")
+    return _per_clip(spark, clips_cache.SPECTRAL).orderBy("clip_id")
 
 
 def _duck_spectral_oracle(path: str) -> str:
@@ -2913,7 +2863,7 @@ FROM sp ORDER BY clip_id
 _q(
     "clips_spectral_features",
     fn=_clips_spectral_features,
-    oracle=_duck_spectral_oracle(spectral_path(N_SPECTRAL)),
+    oracle=_duck_spectral_oracle(clips_cache.SPECTRAL.path),
     doc="Audio spectral features (rms/zcr/dominant/centroid/rolloff/"
         "flatness) + resample invariance, Arrow-batched over executors. "
         "Oracle: local recompute parquet + index-derived tone expectations "
@@ -2930,30 +2880,7 @@ def _clips_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-row arithmetic is the shared oracle/clips_cache.vad_row
     helper (audiofeat.vad_stats: 20 ms frames, 10 ms hop, 0.05 full-scale
     RMS gate)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from .datagen.clips import DEFAULT_RUN_TS, clips_df
-    from .oracle import clips_cache
-    from .oracle.clips_cache import _VAD_COLS, vad_row
-
-    clips_cache.ensure_vad(clips_cache.N_VAD)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                vad_row(cid, raw)
-                for cid, raw in zip(pdf["clip_id"], pdf["bytes"])
-            ]
-            yield pd.DataFrame(rows, columns=_VAD_COLS)
-
-    clips = clips_df(spark, clips_cache.N_VAD, run_ts=DEFAULT_RUN_TS)
-    return clips.select("clip_id", "bytes").mapInPandas(
-        stats,
-        schema="clip_id string, decode_ok int, n_frames int, "
-               "speech_ratio double, n_segments int, longest_speech_ms double",
-    ).orderBy("clip_id")
+    return _per_clip(spark, clips_cache.VAD).orderBy("clip_id")
 
 
 def _duck_vad_oracle(path: str) -> str:
@@ -2979,7 +2906,7 @@ FROM v ORDER BY clip_id
 _q(
     "clips_vad_segments",
     fn=_clips_vad_segments,
-    oracle=_duck_vad_oracle(vad_path(N_VAD)),
+    oracle=_duck_vad_oracle(clips_cache.VAD.path),
     doc="Voice-activity segmentation (energy-gate VAD) per clip with a "
         "planted silence gap on every third index. Oracle: local recompute "
         "parquet + index-derived segment counts (0 silent / 2 gapped / 1 "
@@ -3001,47 +2928,13 @@ def _clips_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows); the banded join is an equi-join AQE can plan; silence is
     gated out up front (all-zero fingerprints would otherwise collide).
     """
-    from pyspark.sql import functions as F
-
     from .caching import cached
-    from .datagen.clips import DEFAULT_RUN_TS, clips_df
     from .operators.audiodedup import audio_fingerprints, fingerprint_pairs
-    from .oracle import clips_cache
 
-    clips_cache.ensure_fp_pairs(clips_cache.N_FP)
-
-    clips = clips_df(spark, clips_cache.N_FP, run_ts=DEFAULT_RUN_TS)
+    clips_cache.ensure(clips_cache.FP_PAIRS)
     # corpus: every clip + its 0.7x-gain requantized copy ("dupc_" prefix
     # sorts after "clip_", so pair order is deterministic)
-    corpus = clips.select("clip_id", "bytes").unionByName(
-        clips.select(
-            F.concat(F.lit("dupc_"), F.substring("clip_id", 6, 32)).alias("clip_id"),
-            F.col("bytes"),
-        )
-    )
-    # rebuild each copy's bytes executor-side: decode -> scale -> re-encode
-    from typing import Iterator
-
-    import pandas as pd
-
-    def rescale(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .functions.audio import decode_wav_pcm16, encode_wav_pcm16
-        from .oracle.clips_cache import scaled_pcm16
-
-        for pdf in batches:
-            out_ids, out_bytes = [], []
-            for cid, raw in zip(pdf["clip_id"], pdf["bytes"]):
-                if cid.startswith("dupc_"):
-                    try:
-                        dec = decode_wav_pcm16(bytes(raw))
-                    except ValueError:
-                        continue
-                    raw = encode_wav_pcm16(scaled_pcm16(dec.pcm), dec.sr_hz)
-                out_ids.append(cid)
-                out_bytes.append(bytes(raw))
-            yield pd.DataFrame({"clip_id": out_ids, "bytes": out_bytes})
-
-    corpus = corpus.mapInPandas(rescale, schema="clip_id string, bytes binary")
+    corpus = _per_clip(spark, clips_cache.FP_CORPUS)
     fp = cached(audio_fingerprints(corpus))  # consumed 3x in the funnel
     return fingerprint_pairs(fp).orderBy("clip_1")
 
@@ -3064,7 +2957,7 @@ ORDER BY clip_1
 _q(
     "clips_fingerprint_dups",
     fn=_clips_fingerprint_dups,
-    oracle=_duck_fp_oracle(fp_pairs_path(N_FP)),
+    oracle=_duck_fp_oracle(clips_cache.FP_PAIRS.path),
     doc="Audio-content near-dup dedup: Haitsma-Kalker band-energy sign "
         "fingerprints (amplitude-invariant), chunk-hash LSH banding, "
         "native bit_count hamming verify — no all-pairs, bytes never "
@@ -3083,30 +2976,7 @@ def _clips_transcode_8k(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes on the scan partitions, shuffles nothing (the orderBy is
     presentation-only at the tiny result size).  The per-row arithmetic
     is the shared oracle/clips_cache.transcode_row helper."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from .datagen.clips import DEFAULT_RUN_TS, clips_df
-    from .oracle import clips_cache
-    from .oracle.clips_cache import _TRANSCODE_COLS, transcode_row
-
-    clips_cache.ensure_transcode(clips_cache.N_TRANSCODE)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                transcode_row(cid, raw)
-                for cid, raw in zip(pdf["clip_id"], pdf["bytes"])
-            ]
-            yield pd.DataFrame(rows, columns=_TRANSCODE_COLS)
-
-    clips = clips_df(spark, clips_cache.N_TRANSCODE, run_ts=DEFAULT_RUN_TS)
-    return clips.select("clip_id", "bytes").mapInPandas(
-        run,
-        schema="clip_id string, decode_ok int, out_sr int, out_n_samples int, "
-               "gain_db double, out_peak double, out_crc32 bigint",
-    ).orderBy("clip_id")
+    return _per_clip(spark, clips_cache.TRANSCODE).orderBy("clip_id")
 
 
 def _duck_transcode_oracle(path: str) -> str:
@@ -3130,7 +3000,7 @@ FROM t ORDER BY clip_id
 _q(
     "clips_transcode_8k",
     fn=_clips_transcode_8k,
-    oracle=_duck_transcode_oracle(transcode_path(N_TRANSCODE)),
+    oracle=_duck_transcode_oracle(clips_cache.TRANSCODE.path),
     doc="Audio write-path transform: decode -> 8 kHz linear resample -> "
         "-3 dBFS peak normalize -> WAV re-encode, checked bit-exact via "
         "crc32 of the output payload. Map-only over scan partitions — the "
@@ -3148,29 +3018,7 @@ def _clips_speech_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-clip chunk counts are index-derivable.  flatMap-style mapInPandas:
     input rows fan OUT to 0..2 output rows on the scan partitions; bytes
     never shuffle."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from .datagen.clips import DEFAULT_RUN_TS, clips_df
-    from .oracle import clips_cache
-    from .oracle.clips_cache import _CHUNK_COLS, chunk_rows
-
-    clips_cache.ensure_chunks(clips_cache.N_CHUNKS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cid, raw in zip(pdf["clip_id"], pdf["bytes"]):
-                rows.extend(chunk_rows(cid, raw))
-            yield pd.DataFrame(rows, columns=_CHUNK_COLS)
-
-    clips = clips_df(spark, clips_cache.N_CHUNKS, run_ts=DEFAULT_RUN_TS)
-    return clips.select("clip_id", "bytes").mapInPandas(
-        run,
-        schema="clip_id string, seg_idx bigint, start_ms double, "
-               "end_ms double, seg_rms_db double",
-    ).orderBy("clip_id", "seg_idx")
+    return _per_clip(spark, clips_cache.CHUNKS).orderBy("clip_id", "seg_idx")
 
 
 def _duck_chunks_oracle(path: str) -> str:
@@ -3184,7 +3032,7 @@ ORDER BY clip_id, seg_idx
 _q(
     "clips_speech_chunks",
     fn=_clips_speech_chunks,
-    oracle=_duck_chunks_oracle(chunks_path(N_CHUNKS)),
+    oracle=_duck_chunks_oracle(clips_cache.CHUNKS.path),
     doc="Speech-chunk extraction: fan each clip out to one row per VAD "
         "speech segment (start/end/RMS) — the segment-into-training-"
         "samples operator. Planted gaps make counts index-derivable "
@@ -3206,7 +3054,6 @@ def _clips_speaking_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet, so Spark's \\W+ tokenizer and rate arithmetic are checked
     against the independent Python tokenizer, not against themselves."""
     from .datagen.clips import DEFAULT_RUN_TS, clips_df
-    from .oracle import clips_cache
 
     clips_cache.ensure_enriched(clips_cache.N_LABELS)
     clips = clips_df(spark, clips_cache.N_LABELS, run_ts=DEFAULT_RUN_TS)
@@ -3251,7 +3098,7 @@ FROM read_parquet('{path}') ORDER BY clip_id
 _q(
     "clips_speaking_rate",
     fn=_clips_speaking_rate,
-    oracle=_duck_speaking_rate_oracle(enriched_path(N_LABELS)),
+    oracle=_duck_speaking_rate_oracle(clips_cache.enriched_path(clips_cache.N_LABELS)),
     doc="Cross-modal speaking-rate filter: chars/sec + words/min from "
         "transcript length vs audio duration, flagged with the policy's "
         "40..1000 cps Completeness band — the ASR mislabeled-pair check. "
@@ -3272,30 +3119,7 @@ def _clips_loudness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planted k=26 clipped case), so the oracle can re-derive the
     is_clipped verdicts from clip-index arithmetic — the detector is
     checked against an analytic expectation, not against itself."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from .datagen.clips import DEFAULT_RUN_TS, clips_df
-    from .oracle import clips_cache
-    from .oracle.clips_cache import _LOUD_COLS, loudness_rows
-
-    clips_cache.ensure_loudness(clips_cache.N_LOUD)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cid, raw in zip(pdf["clip_id"], pdf["bytes"]):
-                rows.extend(loudness_rows(cid, raw))
-            yield pd.DataFrame(rows, columns=_LOUD_COLS)
-
-    clips = clips_df(spark, clips_cache.N_LOUD, run_ts=DEFAULT_RUN_TS)
-    return clips.select("clip_id", "bytes").mapInPandas(
-        run,
-        schema="clip_id string, variant string, decode_ok int, peak double, "
-               "rms_db double, crest_db double, clip_ratio double, "
-               "is_clipped int",
-    ).orderBy("clip_id", "variant")
+    return _per_clip(spark, clips_cache.LOUDNESS).orderBy("clip_id", "variant")
 
 
 def _duck_loudness_oracle(path: str) -> str:
@@ -3319,7 +3143,7 @@ FROM l ORDER BY clip_id, variant
 _q(
     "clips_loudness_stats",
     fn=_clips_loudness_stats,
-    oracle=_duck_loudness_oracle(loudness_path(N_LOUD)),
+    oracle=_duck_loudness_oracle(clips_cache.LOUDNESS.path),
     doc="Loudness/clipping gate: peak dBFS, RMS, crest factor and "
         "saturated-code ratio per clip for the original and a 4x-gain "
         "requantized variant (fan-out mapInPandas). Oracle: local "
@@ -3977,32 +3801,9 @@ def _clips_word_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_start (lag over the segment sequence), n_words_seg, and
     words_per_sec in SQL — so the contiguous-partition invariant is
     checked by an independent engine, not replayed."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from .datagen.clips import DEFAULT_RUN_TS, clips_df
-    from .oracle import clips_cache
-    from .oracle.clips_cache import _ALIGN_COLS, align_rows
-
-    clips_cache.ensure_align(clips_cache.N_ALIGN)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cid, raw, tr in zip(pdf["clip_id"], pdf["bytes"],
-                                    pdf["transcript"]):
-                rows.extend(align_rows(cid, raw, tr))
-            yield pd.DataFrame(rows, columns=_ALIGN_COLS)
-
-    clips = clips_df(spark, clips_cache.N_ALIGN, run_ts=DEFAULT_RUN_TS)
-    aligned = clips.select("clip_id", "bytes", "transcript").mapInPandas(
-        run,
-        schema="clip_id string, seg_idx int, start_ms int, end_ms int, "
-               "w_start int, w_end int",
-    )
     from pyspark.sql import functions as F
 
+    aligned = _per_clip(spark, clips_cache.ALIGN)
     return aligned.select(
         "clip_id", "seg_idx", "start_ms", "end_ms", "w_start", "w_end",
         (F.col("w_end") - F.col("w_start")).alias("n_words_seg"),
@@ -4040,7 +3841,7 @@ FROM a ORDER BY clip_id, seg_idx
 _q(
     "clips_word_alignment",
     fn=_clips_word_alignment,
-    oracle=_duck_align_oracle(align_path(N_ALIGN)),
+    oracle=_duck_align_oracle(clips_cache.ALIGN.path),
     doc="Proportional word-to-segment alignment (forced-alignment stub): "
         "transcript words distributed across VAD segments by integer-ms "
         "duration fractions; oracle re-derives w_start/n_words/rate via "
@@ -4175,9 +3976,6 @@ _q(
 )
 
 
-N_TRIM = 160  # clips_silence_trim corpus size (x2 with padded variants)
-
-
 def _clips_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Silence-trim write-path transform with a bit-exact restore proof:
     per clip the fan-out builds a padded variant (4..8 leading + 2..4
@@ -4190,48 +3988,7 @@ def _clips_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame counts and restore verdicts come from clip-index arithmetic
     (planted pad sizes; the k=25 all-silence clip trims to its frame
     remainder; k=23 fails decode and is routed out)."""
-    import zlib
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from .datagen.clips import DEFAULT_RUN_TS, clips_df
-    from .functions import audiofeat as af
-    from .functions.audio import decode_wav_pcm16
-
-    def trim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for cid, raw in zip(pdf["clip_id"], pdf["bytes"]):
-                try:
-                    dec = decode_wav_pcm16(bytes(raw))
-                except ValueError:
-                    continue
-                i = int(cid.split("_")[1])
-                s, t = 4 + i % 5, 2 + i % 3
-                padded = np.concatenate([
-                    np.zeros(s * af.FP_HOP, dtype=np.int16),
-                    dec.pcm,
-                    np.zeros(t * af.FP_HOP, dtype=np.int16),
-                ])
-                trm, lead, trail = af.trim_zero_frames(padded)
-                base, _, _ = af.trim_zero_frames(dec.pcm)
-                restored = int(
-                    zlib.crc32(trm.tobytes()) == zlib.crc32(base.tobytes())
-                )
-                rows.append((cid, lead, trail, restored))
-            yield pd.DataFrame(
-                rows, columns=["clip_id", "lead_frames", "trail_frames", "restored"]
-            )
-
-    clips = clips_df(spark, N_TRIM, run_ts=DEFAULT_RUN_TS)
-    return clips.select("clip_id", "bytes").mapInPandas(
-        trim,
-        schema="clip_id string, lead_frames int, trail_frames int, restored int",
-    ).orderBy("clip_id")
+    return _per_clip(spark, clips_cache.TRIM).orderBy("clip_id")
 
 
 def _sql_silence_trim_oracle(n: int) -> str:
@@ -4262,7 +4019,7 @@ ORDER BY clip_id
 _q(
     "clips_silence_trim",
     fn=_clips_silence_trim,
-    oracle=_sql_silence_trim_oracle(N_TRIM),
+    oracle=_sql_silence_trim_oracle(clips_cache.TRIM.n),
     doc="Frame-quantized digital-silence trim with bit-exact restore "
         "proof: padded variants lose exactly their planted leading/"
         "trailing pad frames and crc-match the identically-trimmed "
@@ -4270,9 +4027,6 @@ _q(
         "arithmetic.",
     tags=("clips", "audio", "quality"),
 )
-
-
-N_OFFSET = 180  # clips_offset_align_dups corpus size (x2 with shifted copies)
 
 
 def _clips_offset_align_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4294,39 +4048,11 @@ def _clips_offset_align_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     Semantics provenance: the reference gates near-dups on metadata
     then verifies content (metadata.py:560-597); this is the
     payload-level analog for time-shifted re-publications."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    from .datagen.clips import DEFAULT_RUN_TS, clips_df
-    from .functions import audiofeat as af
     from .operators.audiodedup import OFF_MAX_HAMMING, offset_align_pairs
-    from .oracle.clips_cache import shifted_scaled_pcm16
 
-    def fps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for cid, raw in zip(pdf["clip_id"], pdf["bytes"]):
-                got = af.voiced_fingerprint(raw)
-                if got is None:
-                    continue
-                dec, w = got
-                suffix = cid.split("_")[1]
-                shifted = shifted_scaled_pcm16(dec.pcm, 4 + int(suffix) % 5)
-                w2 = af.band_fingerprint(shifted.astype(np.float64) / 32767.0,
-                                         dec.sr_hz)
-                for fid, words in ((cid, w), (f"shft_{suffix}", w2)):
-                    rows.append((fid, int(words.size), [int(v) for v in words]))
-            yield pd.DataFrame(rows, columns=["fp_id", "n_words", "words"])
-
-    clips = clips_df(spark, N_OFFSET, run_ts=DEFAULT_RUN_TS)
-    fp = clips.select("clip_id", "bytes").mapInPandas(
-        fps, schema="fp_id string, n_words int, words array<int>"
-    )
-    pairs = offset_align_pairs(fp)
+    pairs = offset_align_pairs(_per_clip(spark, clips_cache.OFFSET_FP))
     return pairs.select(
         "clip_1",
         "clip_2",
@@ -4368,7 +4094,7 @@ ORDER BY clip_1, clip_2
 _q(
     "clips_offset_align_dups",
     fn=_clips_offset_align_dups,
-    oracle=_sql_offset_align_oracle(N_OFFSET),
+    oracle=_sql_offset_align_oracle(clips_cache.OFFSET_FP.n),
     doc="Offset-invariant audio near-dup detection: inverted-index "
         "offset voting over fingerprint bigrams + native aligned-hamming "
         "verify recovers time-shifted (silence-leader) requantized "
@@ -4393,32 +4119,7 @@ def _clips_mixed_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     audio analog of the reference's file-type -> extractor mapping, S5:
     /root/reference/backend/app/services/s3.py:268-294, where each type
     routes to a different decode and unknown types error-route)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from .datagen.clips import mixed_clips_df
-    from .oracle import clips_cache
-    from .oracle.clips_cache import mixed_codec_row
-
-    clips_cache.ensure_mixed(clips_cache.N_MIXED)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                mixed_codec_row(cid, raw, codec)
-                for cid, raw, codec in zip(
-                    pdf["clip_id"], pdf["bytes"], pdf["codec"]
-                )
-            ]
-            yield pd.DataFrame(rows, columns=clips_cache._MIXED_COLS)
-
-    clips = mixed_clips_df(spark, clips_cache.N_MIXED)
-    return clips.select("clip_id", "bytes", "codec").mapInPandas(
-        stats,
-        schema="clip_id string, codec string, decode_ok int, "
-               "n_samples bigint, snr_db double, snr_pass int",
-    ).orderBy("clip_id")
+    return _per_clip(spark, clips_cache.MIXED).orderBy("clip_id")
 
 
 def _duck_mixed_oracle(path: str) -> str:
@@ -4446,7 +4147,7 @@ FROM mx ORDER BY clip_id
 _q(
     "clips_mixed_codec_decode",
     fn=_clips_mixed_codec,
-    oracle=_duck_mixed_oracle(mixed_path(N_MIXED)),
+    oracle=_duck_mixed_oracle(clips_cache.MIXED.path),
     doc="Codec-dispatch seam with a real second codec: G.711 mu-law "
         "(pure-numpy expand, ~35-38 dB companding SNR) mixed with PCM16 "
         "and the planted undecodable rows; per-row SNR vs the analytic "
@@ -4467,7 +4168,6 @@ def _clips_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .datagen.clips import DEFAULT_RUN_TS, clips_df
     from .operators.scoring import DIMENSIONS
-    from .oracle import clips_cache
     from .pipeline import run_pipeline
 
     clips_cache.ensure_enriched(clips_cache.N_LABELS)
@@ -4532,7 +4232,7 @@ FROM flg ORDER BY clip_id
 _q(
     "clips_evidence_strings",
     fn=_clips_evidence,
-    oracle=_duck_evidence_oracle(enriched_path(N_LABELS)),
+    oracle=_duck_evidence_oracle(clips_cache.enriched_path(clips_cache.N_LABELS)),
     doc="All 17 per-dimension evidence strings (C15, metadata.py:399-451) "
         "from the pipeline's native format_string exprs, oracle-checked "
         "against a DuckDB printf recompute of the exact interpolated text "
@@ -4708,9 +4408,7 @@ def oracle_sql() -> dict[str, str]:
     # paths are baked into the SQL; make sure those files exist no matter
     # whether the driver runs the Spark side or the oracle side first
     # (no-op when already cached).
-    from .oracle.clips_cache import ensure_all
-
-    ensure_all()
+    clips_cache.ensure_all()
     return {name: q.oracle for name, q in _ordered_catalog().items() if q.oracle}
 
 

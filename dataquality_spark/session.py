@@ -24,13 +24,19 @@ def _driver_memory() -> str:
     return f"{min(8192, max(1024, kb // 1024 // 4))}m"
 
 
+def default_cores() -> int:
+    """Cores a session uses when not told: ``$SPARK_GRAFT_CPUS``, else the
+    host's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
 def get_spark(
     app_name: str = "dataquality_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    cpus = default_cores()
     master = master or f"local[{cpus}]"
     # In local[N] the effective parallelism is N threads; default shuffle
     # partitions to that instead of Spark's 200 (pitfall: tiny-data
