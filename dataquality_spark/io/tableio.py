@@ -27,25 +27,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _migrate_legacy_layout(table_dir: str, manifest_path: str) -> None:
-    """Upgrade a checkpoint written by the pre-rename layout
-    (``manifest.json`` + ``batch=<id>`` dirs) in place, so old checkpoints
-    resume instead of silently recomputing — and so the new
-    ``partitionBy("batch_id")`` writer never mixes conflicting partition
-    dir names under one table root (Spark partition discovery rejects
-    that).  Pure directory renames; parquet files carry no partition
-    value, it lives in the dir name."""
-    if not os.path.isdir(table_dir):
-        return
-    for name in os.listdir(table_dir):
-        full = os.path.join(table_dir, name)
-        if name.startswith("batch=") and os.path.isdir(full):
-            os.rename(full, os.path.join(table_dir, "batch_id=" + name[6:]))
-    legacy = os.path.join(table_dir, "manifest.json")
-    if os.path.exists(legacy) and not os.path.exists(manifest_path):
-        os.rename(legacy, manifest_path)
-
-
 class Manifest:
     """Append-only commit log for one logical table (snapshot emulation)."""
 
@@ -55,7 +36,6 @@ class Manifest:
         # so the commit log can live inside the table directory without
         # breaking a whole-directory parquet read.
         self.path = os.path.join(table_dir, "_manifest.json")
-        _migrate_legacy_layout(table_dir, self.path)
 
     def entries(self) -> list[dict]:
         if not os.path.exists(self.path):

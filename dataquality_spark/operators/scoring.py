@@ -59,7 +59,19 @@ CREDIBILITY_DEFAULT = 80
 # ---------------------------------------------------------------- Spark side
 
 def _cps() -> Column:
-    return F.col("n_chars") / (F.col("dur_ms") / F.lit(1000.0))
+    """Transcript chars per second of declared duration; 0.0 when the
+    duration is 0, as in the mirror (ANSI division by zero fails the job)."""
+    return F.when(F.col("dur_ms") == 0, F.lit(0.0)).otherwise(
+        F.col("n_chars") / (F.col("dur_ms") / F.lit(1000.0))
+    )
+
+
+def _dur_dec() -> Column:
+    """Decoded duration in ms at the header's sample rate; 0.0 when the
+    header says 0 Hz, as in the mirror."""
+    return F.when(F.col("header_sr_hz") == 0, F.lit(0.0)).otherwise(
+        F.col("n_samples") * F.lit(1000.0) / F.col("header_sr_hz")
+    )
 
 
 def dimension_score_exprs() -> dict[str, Column]:
@@ -106,13 +118,7 @@ def dimension_score_exprs() -> dict[str, Column]:
         "Accessibility": F.when(c("decode_ok"), 95).otherwise(0),
         "Precision": F.when(c("sr_hz").isin(*VALID_SR_HZ), 90).otherwise(30),
         "Integrity": F.when(~c("decode_ok"), 50)
-        .when(
-            F.abs(
-                c("n_samples") * F.lit(1000.0) / c("header_sr_hz") - c("dur_ms")
-            )
-            > DUR_MISMATCH_MS,
-            30,
-        )
+        .when(F.abs(_dur_dec() - c("dur_ms")) > DUR_MISMATCH_MS, 30)
         .otherwise(90),
         "Conformity": F.when(c("codec") == KNOWN_CODEC, 90).otherwise(30),
         "Interpretability": F.when(c("ppl") <= PPL_GOOD, 90)
@@ -177,15 +183,7 @@ def dimension_evidence_exprs() -> dict[str, Column]:
         ),
         "Precision": F.format_string("sr_hz=%d", c("sr_hz")),
         "Integrity": F.format_string(
-            "decoded_ms=%.0f declared_ms=%d",
-            F.round(
-                F.when(
-                    c("header_sr_hz") > 0,
-                    c("n_samples") * F.lit(1000.0) / c("header_sr_hz"),
-                ).otherwise(F.lit(0.0)),
-                0,
-            ),
-            c("dur_ms"),
+            "decoded_ms=%.0f declared_ms=%d", F.round(_dur_dec(), 0), c("dur_ms"),
         ),
         "Conformity": F.format_string("codec=%s", c("codec")),
         "Interpretability": F.format_string("perplexity=%.1f", F.round(c("ppl"), 1)),

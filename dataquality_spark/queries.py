@@ -2357,12 +2357,18 @@ FROM read_parquet('{path}') ORDER BY doc_id
 # checked against the local enrichment bit-for-bit, and Spark's
 # dedup+policy against an independent SQL recompute.
 
+# operators/scoring._cps and _dur_dec: a zero divisor gives 0.0.
+_DUCK_CPS = ("(CASE WHEN dur_ms = 0 THEN 0.0 ELSE CAST(n_chars AS DOUBLE) "
+             "/ (CAST(dur_ms AS DOUBLE) / 1000.0) END)")
+_DUCK_DUR_DEC = ("(CASE WHEN header_sr_hz = 0 THEN 0.0 ELSE CAST(n_samples AS "
+                 "DOUBLE) * 1000.0 / CAST(header_sr_hz AS DOUBLE) END)")
+
+
 def _duck_dim_scores() -> dict[str, str]:
     """The 17 dimension rules of operators/scoring.dimension_score_exprs,
     rendered as DuckDB CASE expressions over the enriched-signals frame
     (same constants: metadata.py:171-178, :387-433)."""
-    cps = "(CAST(n_chars AS DOUBLE) / (CAST(dur_ms AS DOUBLE) / 1000.0))"
-    dur_dec = "(CAST(n_samples AS DOUBLE) * 1000.0 / CAST(header_sr_hz AS DOUBLE))"
+    cps, dur_dec = _DUCK_CPS, _DUCK_DUR_DEC
     sr_ok = "sr_hz IN (8000, 16000, 22050, 24000, 44100, 48000)"
     return {
         "Accuracy": "CASE WHEN NOT decode_ok THEN 50 WHEN is_silent THEN 0 "
@@ -4191,9 +4197,7 @@ def _duck_evidence_oracle(path: str) -> str:
     exact decimal midpoints of the binary double — Java HALF_UP vs fmt
     round-half-even); %d / %s and boolean 'true'/'false' casts agree
     unconditionally."""
-    cps = "(CAST(n_chars AS DOUBLE) / (CAST(dur_ms AS DOUBLE) / 1000.0))"
-    dur_dec = ("CASE WHEN header_sr_hz > 0 THEN CAST(n_samples AS DOUBLE) "
-               "* 1000.0 / header_sr_hz ELSE 0.0 END")
+    cps, dur_dec = _DUCK_CPS, _DUCK_DUR_DEC
     return f"""
 WITH {_duck_clips_dedup_ctes(path)},
 nearids AS (SELECT id_a AS clip_id FROM verified
@@ -4247,8 +4251,8 @@ def _events_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch stream over the driver's events parquet, complete-mode
     into a memory sink — the returned frame is the STREAMING result, and
     the oracle is the plain batch SQL, so a green row proves
-    stream-executes == batch-computes on driver data (the incremental
-    path of streaming/pipeline.py, previously pytest-only evidence)."""
+    stream-executes == batch-computes on driver data. It builds its own
+    file-source stream here and shares no code with streaming/pipeline.py."""
     import hashlib
     import os
     import uuid

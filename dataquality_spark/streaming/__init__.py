@@ -1,37 +1,7 @@
-"""Structured Streaming surface of the engine.
+"""Structured Streaming surface of the engine (:mod:`.pipeline`).
 
-The reference is strictly batch (SURVEY §2.10) — these operators are the
-incremental-ingest counterpart a production deployment needs: new clip
-files land continuously, and the same enrich → score → policy DAG runs
-per micro-batch with exactly-once sinks and checkpoint-based resume.
+The reference is strictly batch (SURVEY §2.10). The one stream path here
+scores newly landed clip files with the batch operators, writes them to a
+checkpointed parquet sink, and leaves near-dup detection to the periodic
+batch job over the accumulated results.
 """
-
-from .pipeline import (
-    CLIPS_STREAM_DDL,
-    CORRECTIONS_STREAM_DDL,
-    approvals_running_state,
-    dedup_stream,
-    join_corrections,
-    lang_running_totals,
-    read_clip_stream,
-    read_correction_stream,
-    run_scoring_query,
-    score_clips,
-    session_quality_stats,
-    windowed_quality_trend,
-)
-
-__all__ = [
-    "CLIPS_STREAM_DDL",
-    "CORRECTIONS_STREAM_DDL",
-    "approvals_running_state",
-    "read_clip_stream",
-    "read_correction_stream",
-    "score_clips",
-    "dedup_stream",
-    "join_corrections",
-    "windowed_quality_trend",
-    "lang_running_totals",
-    "session_quality_stats",
-    "run_scoring_query",
-]

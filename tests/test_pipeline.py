@@ -1,6 +1,7 @@
 """End-to-end ``run_pipeline`` properties: partition-count invariance of
 ``results`` and ``run_metrics``, and hostile inputs (empty run, null
-transcript, null audio bytes) that must be routed, never dropped."""
+transcript, null or malformed audio bytes, zero divisors) that must be
+routed, never dropped."""
 
 import pandas as pd
 
@@ -52,12 +53,20 @@ def test_empty_input_gives_empty_outputs_and_one_metrics_row(spark):
 def test_null_transcript_and_null_bytes_are_routed(spark):
     """A null transcript decodes fine but has no language: success, "und".
     Null audio bytes fail decode: the row is kept with status "error".
-    Both are scored, and every row's score and action match the
-    pure-Python oracle on the same input."""
-    pdf = clips_pdf(20)
+    A zero declared duration and a WAV header saying 0 Hz are zero
+    divisors in the score rules; a truncated RIFF and a data chunk longer
+    than its payload fail decode. Every row is scored, and every row's
+    score and action match the pure-Python oracle on the same input."""
+    pdf = pd.concat([clips_pdf(20), clips_pdf(4, start=30)], ignore_index=True)
     no_text, no_audio = pdf["clip_id"][10], pdf["clip_id"][11]
+    zero_dur, zero_sr, short_riff, long_data = pdf["clip_id"][20:24]
     pdf.loc[10, "transcript"] = None
     pdf.loc[11, "bytes"] = None
+    pdf.loc[20, "dur_ms"] = 0
+    wav = pdf["bytes"][21]
+    pdf.at[21, "bytes"] = wav[:24] + bytes(4) + wav[28:]  # fmt sample rate
+    pdf.at[22, "bytes"] = pdf["bytes"][22][:12]
+    pdf.at[23, "bytes"] = pdf["bytes"][23][:-100]
     res = run_pipeline(spark.createDataFrame(pdf, schema=CLIPS_SCHEMA), DEFAULT_RUN_TS)
     got = _by_clip(res.results).set_index("clip_id")
     truth = label_frame(pdf, DEFAULT_RUN_TS).set_index("clip_id").sort_index()
@@ -66,8 +75,12 @@ def test_null_transcript_and_null_bytes_are_routed(spark):
             got.loc[no_text, "recommended_action"]) == ("success", "und", "QUARANTINE")
     assert (got.loc[no_audio, "status"],
             got.loc[no_audio, "recommended_action"]) == ("error", "QUARANTINE")
-    assert (got.drop([no_audio])["status"] == "success").all()
+    errors = [no_audio, short_riff, long_data]
+    assert (got.loc[errors, "status"] == "error").all()
+    assert (got.drop(errors)["status"] == "success").all()
+    assert got.loc[zero_dur, "dimensions"]["Completeness"]["score"] == 40
+    assert got.loc[zero_sr, "dimensions"]["Integrity"]["score"] == 30
     for col in ("overall_quality_score", "recommended_action", "keep"):
         assert (got[col] == truth[col]).all(), col
     m = res.run_metrics.collect()
-    assert len(m) == 1 and (m[0].n_clips, m[0].n_error) == (20, 1)
+    assert len(m) == 1 and (m[0].n_clips, m[0].n_error) == (24, 3)

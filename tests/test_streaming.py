@@ -1,24 +1,15 @@
-"""Structured Streaming operators: batch/stream parity, checkpoint resume,
-watermarked windows, streaming dedup, custom keyed state."""
+"""The stream scoring path: batch/stream parity, checkpoint resume, and
+stream scoring followed by the periodic batch dedup."""
 
 from __future__ import annotations
 
-import datetime as dt
 import os
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from dataquality_spark.datagen.clips import DEFAULT_RUN_TS, clips_df
-from dataquality_spark.streaming import (
-    dedup_stream,
-    lang_running_totals,
-    read_clip_stream,
-    run_scoring_query,
-    score_clips,
-    windowed_quality_trend,
-)
+from dataquality_spark.streaming.pipeline import run_scoring_query, score_clips
 
 N = 300
 
@@ -92,148 +83,6 @@ def test_stream_incremental_only_new_files(spark, stream_dirs, tmp_path):
     assert got["clip_id"].is_unique  # each clip scored exactly once
 
 
-def test_windowed_trend_append_mode(spark, tmp_path):
-    """Watermarked tumbling windows emit closed windows exactly once in
-    append mode; counts match a batch groupBy over the same input."""
-    inp = str(tmp_path / "in")
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    rows = [
-        ("c%03d" % i, None, 16000, 1000, "pcm_s16le", "hello world test",
-         base + dt.timedelta(minutes=17 * i))
-        for i in range(40)
-    ]
-    spark.createDataFrame(
-        rows, "clip_id string, bytes binary, sr_hz int, dur_ms int, "
-              "codec string, transcript string, ingest_ts timestamp"
-    ).coalesce(1).write.parquet(inp)
-
-    stream = read_clip_stream(spark, inp)
-    trend = windowed_quality_trend(
-        score_clips(stream, DEFAULT_RUN_TS), window="1 hour", watermark="30 minutes"
-    )
-    q = (
-        trend.writeStream.format("memory").queryName("trend")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select * from trend order by window_start").toPandas()
-    # max ingest_ts = base + 663 min; watermark 30 min → windows ending
-    # <= base+633min are closed: hours 0..9 inclusive (window 10 ends at 660).
-    assert len(got) == 10
-    # batch cross-check on the closed windows
-    assert got["n_clips"].sum() == sum(1 for i in range(40) if 17 * i < 600)
-    hours = ((got["window_end"] - got["window_start"]).dt.total_seconds() == 3600).all()
-    assert hours
-
-
-def test_dedup_stream_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark keeps one row per transcript hash."""
-    inp = str(tmp_path / "in")
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    rows = []
-    for i in range(30):
-        text = "duplicate payload" if i % 3 == 0 else f"unique text {i}"
-        rows.append(("c%03d" % i, None, 16000, 1000, "pcm_s16le", text,
-                     base + dt.timedelta(seconds=i)))
-    spark.createDataFrame(
-        rows, "clip_id string, bytes binary, sr_hz int, dur_ms int, "
-              "codec string, transcript string, ingest_ts timestamp"
-    ).coalesce(1).write.parquet(inp)
-
-    deduped = dedup_stream(read_clip_stream(spark, inp), watermark="1 hour")
-    q = (
-        deduped.writeStream.format("memory").queryName("dedup")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select transcript from dedup").toPandas()
-    # 10 copies of the duplicate collapse to 1; 20 uniques survive
-    assert len(got) == 21
-    assert (got["transcript"] == "duplicate payload").sum() == 1
-
-
-def test_lang_running_totals_state(spark, tmp_path):
-    """applyInPandasWithState accumulates totals across micro-batches."""
-    inp = str(tmp_path / "in")
-    clips = clips_df(spark, 200).cache()
-    clips.where("clip_id < 'clip_000000000100'").coalesce(1).write.parquet(
-        inp, mode="append"
-    )
-    clips.where("clip_id >= 'clip_000000000100'").coalesce(1).write.parquet(
-        inp, mode="append"
-    )
-
-    # one file per trigger → the second batch must see the first's state
-    stream = read_clip_stream(spark, inp, max_files_per_trigger=1)
-    totals = lang_running_totals(score_clips(stream, DEFAULT_RUN_TS))
-    q = (
-        totals.writeStream.format("memory").queryName("langtot")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    # last emitted row per lang = final running total
-    got = spark.sql(
-        "select lang, max(n_clips) as n_clips, max(n_keep) as n_keep "
-        "from langtot group by lang"
-    ).toPandas().set_index("lang")
-
-    want = (
-        score_clips(spark.read.parquet(inp), DEFAULT_RUN_TS)
-        .groupBy("lang").count().toPandas().set_index("lang")
-    )
-    clips.unpersist()
-    assert got["n_clips"].sum() == 200
-    for lang, row in want.iterrows():
-        assert got.loc[lang, "n_clips"] == row["count"]
-
-
-def test_approvals_running_state_promotes_across_batches(spark, tmp_path):
-    """P7 streaming twin: the approvals keyed state folds events across
-    micro-batches; promotion flips exactly when the 7th distinct dimension
-    is approved, and a later rejection demotes."""
-    from dataquality_spark.streaming import approvals_running_state
-
-    inp = str(tmp_path / "appr_in")
-    ddl = "file_key string, dimension string, status string, ts timestamp"
-    t0 = dt.datetime(2026, 1, 10, 12, 0, 0)
-
-    def drop(rows):
-        spark.createDataFrame(
-            [(f, d, s, t0 + dt.timedelta(minutes=m)) for f, d, s, m in rows],
-            ddl,
-        ).coalesce(1).write.parquet(inp, mode="append")
-
-    # batch 1: 6 approvals -> not promoted yet
-    drop([("A", f"dim{i}", "approved", i) for i in range(6)])
-    # batch 2: the 7th approval promotes; B gets a rejection
-    drop([("A", "dim6", "approved", 10), ("B", "dim0", "rejected", 11)])
-    # batch 3: rejection of an approved dim drops A to 6 -> demoted
-    drop([("A", "dim2", "rejected", 20)])
-    # batch 4: LATE arrival with an older ts than batch 3's rejection —
-    # latest-wins by EVENT time, so this must not resurrect dim2
-    drop([("A", "dim2", "approved", 15)])
-
-    stream = (
-        spark.readStream.schema(ddl)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inp)
-    )
-    q = (
-        approvals_running_state(stream)
-        .writeStream.format("memory").queryName("apprst")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("select * from apprst").toPandas()
-    a_hist = rows[rows.file_key == "A"].reset_index(drop=True)
-    # 4 triggers touched A: 6 -> 7 (promoted) -> 6 (demoted) -> 6 (late
-    # out-of-order approval ignored by event-time latest-wins)
-    assert list(a_hist["approvals"]) == [6, 7, 6, 6]
-    assert list(a_hist["promoted"]) == [False, True, False, False]
-    b = rows[rows.file_key == "B"].iloc[0]
-    assert b["rejections"] == 1 and not b["promoted"]
-
-
 def test_hybrid_stream_scoring_then_batch_dedup(spark, tmp_path):
     """The hybrid pattern end-to-end: the stream scores clips on arrival
     (is_dup=False, dedup features persisted), then the periodic batch
@@ -269,115 +118,3 @@ def test_hybrid_stream_scoring_then_batch_dedup(spark, tmp_path):
     }
     clips.unpersist()
     assert got == want
-
-
-def test_session_window_quality_stats(spark, tmp_path):
-    """Native session_window aggregation: clips arriving within the gap
-    merge into one session; a quiet period closes it (append mode emits
-    each closed session exactly once)."""
-    from dataquality_spark.streaming import session_quality_stats
-
-    inp = str(tmp_path / "sess_in")
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    # two bursts 2h apart -> two sessions; watermark far past both
-    offs = [0, 5, 10, 120, 125, 1500]
-    rows = [
-        ("c%03d" % i, None, 16000, 1000, "pcm_s16le", "hello world test",
-         base + dt.timedelta(minutes=m))
-        for i, m in enumerate(offs)
-    ]
-    spark.createDataFrame(
-        rows, "clip_id string, bytes binary, sr_hz int, dur_ms int, "
-              "codec string, transcript string, ingest_ts timestamp"
-    ).coalesce(1).write.parquet(inp)
-
-    stream = read_clip_stream(spark, inp)
-    stats = session_quality_stats(
-        score_clips(stream, DEFAULT_RUN_TS), gap="30 minutes",
-        watermark="10 minutes",
-    )
-    q = (
-        stats.writeStream.format("memory").queryName("sess")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.sql(
-        "select * from sess order by session_start"
-    ).toPandas()
-    # sessions at [0,40), [120,155) closed; the 1500 one is still open
-    assert list(got["n_clips"]) == [3, 2]
-    assert got["session_start"].iloc[0] == base
-    assert got["session_end"].iloc[0] == base + dt.timedelta(minutes=40)
-    assert got["session_start"].iloc[1] == base + dt.timedelta(minutes=120)
-
-
-def test_stream_stream_join_corrections(spark, tmp_path):
-    """Stream-stream inner join with watermarks + event-time range: each
-    clip pairs with corrections arriving within 1 hour of ingest on a
-    separate feed; a correction outside the lag window never matches.
-    Result must equal the identical batch join."""
-    from dataquality_spark.streaming import (
-        join_corrections,
-        read_clip_stream,
-        read_correction_stream,
-    )
-
-    clips_in = str(tmp_path / "clips_in")
-    corr_in = str(tmp_path / "corr_in")
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    clip_rows = [
-        ("c%03d" % i, None, 16000, 1000, "pcm_s16le", f"text {i}",
-         base + dt.timedelta(minutes=10 * i))
-        for i in range(12)
-    ]
-    # corrections: even clips corrected 30 min after ingest (inside lag),
-    # clips 1 and 3 corrected 2 hours after (outside), others never
-    corr_rows = [
-        ("c%03d" % i, f"fixed {i}",
-         base + dt.timedelta(minutes=10 * i + 30))
-        for i in range(0, 12, 2)
-    ] + [
-        ("c%03d" % i, f"late {i}",
-         base + dt.timedelta(minutes=10 * i + 120))
-        for i in (1, 3)
-    ]
-    spark.createDataFrame(
-        clip_rows,
-        "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
-        "transcript string, ingest_ts timestamp",
-    ).coalesce(1).write.parquet(clips_in)
-    spark.createDataFrame(
-        corr_rows,
-        "corr_clip_id string, corrected_transcript string, corr_ts timestamp",
-    ).coalesce(1).write.parquet(corr_in)
-
-    joined = join_corrections(
-        read_clip_stream(spark, clips_in),
-        read_correction_stream(spark, corr_in),
-        watermark="10 minutes",
-    )
-    q = (
-        joined.writeStream.format("memory").queryName("corr_join")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.sql(
-        "select clip_id, corrected_transcript from corr_join order by clip_id"
-    ).toPandas()
-
-    # batch twin over the same inputs and predicate
-    bc = spark.read.parquet(clips_in)
-    br = spark.read.parquet(corr_in)
-    want = (
-        bc.join(
-            br,
-            (bc.clip_id == br.corr_clip_id)
-            & (br.corr_ts >= bc.ingest_ts)
-            & (br.corr_ts <= bc.ingest_ts + F.expr("INTERVAL 1 HOUR")),
-        )
-        .select("clip_id", "corrected_transcript")
-        .orderBy("clip_id")
-        .toPandas()
-    )
-    assert got.values.tolist() == want.values.tolist()
-    assert set(got.clip_id) == {"c%03d" % i for i in range(0, 12, 2)}
