@@ -30,7 +30,7 @@ from pyspark.storagelevel import StorageLevel
 _LIVE: dict[int, DataFrame] = {}
 
 
-def cached(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+def cached(df: DataFrame) -> DataFrame:
     """persist() with registration; MEMORY_AND_DISK so big intermediates
     spill instead of evicting each other at scale.
 
@@ -62,7 +62,7 @@ def cached(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
             return df
     except Exception:
         pass
-    df = df.persist(level or StorageLevel.MEMORY_AND_DISK)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _LIVE[h] = df
     return df
 

@@ -216,7 +216,7 @@ def audio_stats_batch(raws, codecs) -> dict[str, np.ndarray]:
     out = {
         "decode_ok": np.zeros(m, dtype=bool),
         "n_samples": np.zeros(m, dtype=np.int64),
-        "header_sr_hz": np.zeros(m, dtype=np.int32),
+        "header_sr_hz": np.zeros(m, dtype=np.int64),  # unsigned 32-bit field
         "rms": np.zeros(m, dtype=np.float64),
         "clip_ratio": np.zeros(m, dtype=np.float64),
         "is_silent": np.ones(m, dtype=bool),

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from ..functions import audiofeat as af
 
 
-def audio_fingerprints(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
+def audio_fingerprints(clips: DataFrame) -> DataFrame:
     """clip_id/bytes -> (fp_id, n_words, words array<int>, chunks
     array<bigint>) slim fingerprint rows; undecodable and silent clips
     are dropped (error routing happens upstream in the enrich pass)."""
@@ -48,7 +48,7 @@ def audio_fingerprints(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
     def fps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for cid, raw in zip(pdf[id_col], pdf["bytes"]):
+            for cid, raw in zip(pdf["clip_id"], pdf["bytes"]):
                 got = af.voiced_fingerprint(raw)
                 if got is None:
                     continue
@@ -61,15 +61,13 @@ def audio_fingerprints(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
                 ))
             yield pd.DataFrame(rows, columns=["fp_id", "n_words", "words", "chunks"])
 
-    return clips.select(F.col(id_col).alias(id_col), "bytes").mapInPandas(
+    return clips.select("clip_id", "bytes").mapInPandas(
         fps,
         schema="fp_id string, n_words int, words array<int>, chunks array<bigint>",
     )
 
 
-def fingerprint_pairs(
-    fp: DataFrame, max_hamming: float = af.FP_HAMMING_MAX
-) -> DataFrame:
+def fingerprint_pairs(fp: DataFrame) -> DataFrame:
     """Banded-LSH candidate generation + native hamming verify over a
     fingerprint frame (caller persists `fp` if it is expensive — it is
     consumed three times)."""
@@ -108,7 +106,7 @@ def fingerprint_pairs(
             F.col("id_b").alias("clip_2"),
             hamming.alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= af.FP_HAMMING_MAX)
     )
 
 
@@ -134,21 +132,15 @@ OFF_MIN_WORDS = 14     # min aligned overlap (words); 13 possible votes
 OFF_MAX_HAMMING = 0.05  # verify: bit-flip budget at the aligned overlap
 
 
-def offset_fingerprints(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
+def offset_fingerprints(clips: DataFrame) -> DataFrame:
     """The fingerprint frame the offset-invariant matcher reads: exactly
     ``audio_fingerprints(clips)``, so when that frame is persisted the
     matcher's internal ``cached()`` resolves to it and both matchers
     share one decode."""
-    return audio_fingerprints(clips, id_col)
+    return audio_fingerprints(clips)
 
 
-def offset_align_pairs(
-    fp: DataFrame,
-    min_votes: int = OFF_MIN_VOTES,
-    min_words: int = OFF_MIN_WORDS,
-    max_hamming: float = OFF_MAX_HAMMING,
-    bigram_cap: int = OFF_BIGRAM_CAP,
-) -> DataFrame:
+def offset_align_pairs(fp: DataFrame, bigram_cap: int = OFF_BIGRAM_CAP) -> DataFrame:
     """Modal-offset candidate generation + native aligned-hamming verify.
 
     Stages (all equi-joins / keyed aggregations — no all-pairs, no
@@ -228,7 +220,7 @@ def offset_align_pairs(
                 )
             ),
         )
-        .filter((F.col("rn") == 1) & (F.col("votes") >= min_votes))
+        .filter((F.col("rn") == 1) & (F.col("votes") >= OFF_MIN_VOTES))
         .drop("rn")
     )
 
@@ -244,7 +236,7 @@ def offset_align_pairs(
             "overlap",
             F.least(F.col("na") - F.col("skip_a"), F.col("nb") - F.col("skip_b")),
         )
-        .filter(F.col("overlap") >= min_words)
+        .filter(F.col("overlap") >= OFF_MIN_WORDS)
         .withColumn(
             "hamming",
             F.expr(
@@ -254,7 +246,7 @@ def offset_align_pairs(
                 "  (x, y) -> bit_count(x ^ y)), 0, (s, v) -> s + v) AS DOUBLE)"
             ) / (16.0 * F.col("overlap").cast("double")),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= OFF_MAX_HAMMING)
     )
     return aligned.select(
         F.col("id_a").alias("clip_1"),

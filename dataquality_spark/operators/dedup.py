@@ -19,28 +19,30 @@ payload attached only after banding has shrunk the pair count:
    shuffle — and equi-self-join on the band key.  ``lang`` rides in the join
    key because the reference's gate needs 0.5*exact-type-match and 0.5 < 0.7
    makes cross-lang duplicates impossible (P6, metadata.py:213-243).
-3. **Estimate prefilter and cosine in one pass**: two equi-joins attach
-   each side's packed 64-perm MinHash signature (512 B) and hashed-BoW
-   vector (1 KB) together (Catalyst picks broadcast/shuffle-hash; AQE
-   splits skew), and ONE vectorized Arrow pass computes, per pair, the
-   Jaccard estimate (the fraction of agreeing signature slots) and the
-   float64 einsum cosine.  est sigma ~= sqrt(J(1-J)/64) ~= 0.06; pairs
-   under EST_PREFILTER cannot reach the exact gate (J >= 0.4) and are
-   dropped.  The BoW is not held back for estimate survivors only: after
-   the MIN_SHARED_BANDS filter the estimate drops few candidates
-   (measured 7 of 1,371 at 5,000 clips, 95 of 20,280 at 20,000), so a
-   second attach round would cost two joins and a Python crossing for
-   no saved traffic.  Only pairs with cos >= DUP_COS_MIN — the rule's
-   rarest predicate — continue.
-4. **Native exact verification** on those few: two equi-joins attach each
-   side's sorted-distinct token-hash array and ``array_intersect``/``size``
-   compute exact set Jaccard inside whole-stage codegen — zero Python, and
-   the tokens scan prunes to participating ids (AQE broadcasts the small
-   pairs side).  Exact set Jaccard decides gate >= 0.7, so the decision is
-   exact on every surviving pair — LSH banding and the estimate prefilter
-   affect recall only (SURVEY §7.3), and both sit multiple sigma below what
-   a true duplicate (cos >= 0.95 implies near-identical token sets) can
-   evade.
+3. **One attach, then the native exact Jaccard**: two equi-joins attach
+   each side's sorted-distinct token-hash array, packed 64-perm MinHash
+   signature (512 B) and hashed-BoW vector (1 KB) together (Catalyst
+   picks broadcast/shuffle-hash; AQE splits skew), and
+   ``array_intersect``/``size`` compute the exact set Jaccard inside
+   whole-stage codegen before the token arrays are dropped.
+4. **One Arrow pass and the rule in one place**: ONE vectorized pass
+   computes, per pair, the Jaccard estimate (the fraction of agreeing
+   signature slots) and the float64 einsum cosine, passing the exact
+   Jaccard through.  est sigma ~= sqrt(J(1-J)/64) ~= 0.06; pairs under
+   EST_PREFILTER cannot reach the exact gate (J >= 0.4) and are dropped.
+   Each survivor then carries the exact gate (0.5 + 0.5*J) and
+   ``is_duplicate`` (gate >= 0.7 and cos >= 0.95) in one persisted frame
+   of decided pairs that both reports and the flags filter.  The payload
+   is not held back for later survivors: after the MIN_SHARED_BANDS
+   filter the estimate drops few candidates (measured 7 of 1,371 at
+   5,000 clips, 95 of 20,280 at 20,000), and the token arrays are small
+   next to the signature and BoW (~390 B a pair against ~3 KB at 5,000
+   clips), so a second attach round would cost two joins for no saved
+   traffic.  Exact set Jaccard decides the gate, so the decision is
+   exact on every surviving pair — LSH banding and the estimate
+   prefilter affect recall only (SURVEY §7.3), and both sit multiple
+   sigma below what a true duplicate (cos >= 0.95 implies near-identical
+   token sets) can evade.
 
 One body (:func:`_dedup`) runs every stage for both :func:`dedup` and
 :func:`dedup_increment`: the full run is the increment with every clip
@@ -53,11 +55,11 @@ reference appends EVERY compared pair to its report unconditionally before
 the gate check (metadata.py:592-599), which is the O(n^2) pair list itself
 and cannot exist at scale.  This operator reports the pairs whose
 (estimated or exact) gate reaches the 0.7 decision threshold, with exact
-gate values where the exact path ran (cos >= 0.95 survivors) and the
-64-slot signature estimate elsewhere.  Every ``is_duplicate`` pair is
-guaranteed present (the verified pairs are a subset of the estimate
-survivors the report left-joins them onto, and are kept regardless of
-their estimated gate), so the two outputs can never disagree.
+gate values on the verified pairs and the 64-slot signature estimate
+elsewhere.  Every ``is_duplicate`` pair is guaranteed present (both
+reports filter the same frame of decided pairs, and the similarity
+report keeps a verified pair regardless of its estimated gate), so the
+two outputs can never disagree.
 
 Hot band buckets are defused by BUCKET_CAP star edges (see
 :func:`_band_windows`); AQE skew-join handles residual skew in the payload
@@ -134,9 +136,10 @@ def _attach_both(pairs: DataFrame, feats: DataFrame, cols: list[str]) -> DataFra
     return pairs.join(side("a"), "id_a").join(side("b"), "id_b")
 
 
-def _est_cos_pairs(pairs: DataFrame) -> DataFrame:
+def _est_cos(pairs: DataFrame) -> DataFrame:
     """One vectorized Arrow pass over each pair's (sig, bow) blobs: the
-    MinHash-agreement estimate of Jaccard and the hashed-BoW cosine."""
+    MinHash-agreement estimate of Jaccard and the hashed-BoW cosine, with
+    the exact ``jaccard`` passed through."""
 
     def est_cos(batches):
         for pdf in batches:
@@ -151,6 +154,7 @@ def _est_cos_pairs(pairs: DataFrame) -> DataFrame:
                 {
                     "id_a": pdf["id_a"].values,
                     "id_b": pdf["id_b"].values,
+                    "jaccard": pdf["jaccard"].values,
                     "est_jaccard": (sig_a == sig_b).mean(axis=1),
                     # float64 accumulation: keeps the dot bit-comparable with
                     # the float64 list-arithmetic the DuckDB oracle runs on
@@ -162,35 +166,9 @@ def _est_cos_pairs(pairs: DataFrame) -> DataFrame:
             )
 
     return pairs.mapInPandas(
-        est_cos, schema="id_a string, id_b string, est_jaccard double, cos double"
-    )
-
-
-def _exact_jaccard_native(pairs: DataFrame, feats: DataFrame) -> DataFrame:
-    """Exact token-set Jaccard for (id_a, id_b, cos) pairs, entirely
-    JVM-side: two equi-joins attach each side's ``tok_hashes`` (sorted
-    distinct token hashes, already computed for MinHash), then native
-    ``array_intersect``/``size`` compute |A∩B| and |A∪B| inside
-    whole-stage codegen.
-
-    Why joins and not a cogroup (``applyInPandas``) that ships each token
-    array once per bucket instead of once per pair: the cogroup sends the
-    ENTIRE tokens table through the Arrow boundary twice, while the pairs
-    reaching this stage are the cos>=0.95 survivors of a star-capped LSH
-    funnel, so the per-pair amplification is small and bounded
-    (BUCKET_CAP).  Profiled at 640k clips / 8 pinned cores the cogroup
-    cost ~26 s of wall; the join form prunes the tokens
-    scan to participating ids (AQE broadcasts the small pairs side) and
-    keeps the set math in codegen — no Python in the loop at all.
-    Per-clip hash arrays are distinct, and ``array_intersect`` returns
-    distinct elements, so the intersection size is exact."""
-    j = _attach_both(pairs, feats, ["tok_hashes"])
-    a_h, b_h = F.col("tok_hashes_a"), F.col("tok_hashes_b")
-    inter = F.size(F.array_intersect(a_h, b_h)).cast("double")
-    union = F.size(a_h).cast("double") + F.size(b_h).cast("double") - inter
-    return j.select(
-        "id_a", "id_b", "cos",
-        F.when(union > 0, inter / union).otherwise(F.lit(0.0)).alias("jaccard"),
+        est_cos,
+        schema="id_a string, id_b string, jaccard double, est_jaccard double, "
+               "cos double",
     )
 
 
@@ -226,41 +204,36 @@ def _band_windows(exploded: DataFrame) -> DataFrame:
     })
 
 
-def _verify(cand: DataFrame, feats: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Funnel stages 3-4 over candidate pairs (id_a < id_b): one attach of
-    both blobs and one Arrow pass for the estimate and cosine, the
-    estimate prefilter, then the native exact verify.
+def _verify(cand: DataFrame, feats: DataFrame) -> DataFrame:
+    """Funnel stages 3-4 over candidate pairs (id_a < id_b): one persisted
+    frame of decided pairs (clip_1, clip_2, est_jaccard, cos, gate,
+    is_duplicate) — ``gate`` exact (P6), ``is_duplicate`` the P5 rule —
+    that both reports and the flags filter.
 
-    Returns ``(cos_pairs, verified_dups)``: every estimate survivor with
-    its est_jaccard and cos, and the pairs passing the exact P5 rule in
-    the duplicate-pair shape (a subset of ``cos_pairs``).  Both are
-    persisted — ``cos_pairs`` feeds the verify and the similarity report,
-    ``verified_dups`` the pairs, the report and the flags."""
-    # --- stage 3: estimate + cosine in one pass (512 B + 1 KB per side) ----
-    with_blobs = _attach_both(cand, feats, ["minhash_sig", "bow"])
-    cos_pairs = cached(
-        _est_cos_pairs(with_blobs).filter(F.col("est_jaccard") >= EST_PREFILTER)
-    )
-
-    # --- stage 4: exact gate on the cos-qualified few ----------------------
-    dup_elig = cos_pairs.filter(F.col("cos") >= DUP_COS_MIN).select(
-        "id_a", "id_b", "cos"
-    )
-    exact = _exact_jaccard_native(dup_elig, feats)
+    The exact Jaccard runs before the Arrow pass, in codegen: per-clip
+    hash arrays are distinct and ``array_intersect`` returns distinct
+    elements, so |A∩B| is exact.  Joins and not a cogroup
+    (``applyInPandas``), which would send the whole tokens table through
+    the Arrow boundary twice (~26 s of wall at 640k clips / 8 cores)."""
+    j = _attach_both(cand, feats, ["tok_hashes", "minhash_sig", "bow"])
+    a_h, b_h = F.col("tok_hashes_a"), F.col("tok_hashes_b")
+    inter = F.size(F.array_intersect(a_h, b_h)).cast("double")
+    union = F.size(a_h).cast("double") + F.size(b_h).cast("double") - inter
+    jaccard = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    est = _est_cos(
+        j.withColumn("jaccard", jaccard).drop("tok_hashes_a", "tok_hashes_b")
+    ).filter(F.col("est_jaccard") >= EST_PREFILTER)
     # P6: lang equality is guaranteed by the band join key -> 0.5 + 0.5*jac
-    verified_dups = (
-        exact.withColumn("gate", F.lit(0.5) + F.lit(0.5) * F.col("jaccard"))
-        .filter(F.col("gate") >= DUP_GATE_MIN)
-        .select(
-            F.col("id_a").alias("clip_1"),
-            F.col("id_b").alias("clip_2"),
-            # C7 percent formatting — metadata.py:595-596
-            F.round(F.col("gate") * 100.0, 2).alias("metadata_similarity"),
-            F.round(F.col("cos") * 100.0, 2).alias("similarity"),
-            F.lit(True).alias("is_duplicate"),
+    gate = F.lit(0.5) + F.lit(0.5) * F.col("jaccard")
+    return cached(
+        est.select(
+            F.col("id_a").alias("clip_1"), F.col("id_b").alias("clip_2"),
+            "est_jaccard", "cos", gate.alias("gate"),
+        ).withColumn(
+            "is_duplicate",
+            (F.col("cos") >= DUP_COS_MIN) & (F.col("gate") >= DUP_GATE_MIN),
         )
     )
-    return cos_pairs, cached(verified_dups)
 
 
 def _dedup(marked: DataFrame) -> DedupResult:
@@ -286,9 +259,10 @@ def _dedup(marked: DataFrame) -> DedupResult:
     × all bands``, so for a small slice the join and everything downstream
     scale with |new| × collision rate, not |corpus|²."""
     # groups feeds the one membership join; feats feed the band explode
-    # and the sig/bow/token attach joins — without a persist each consumer
-    # re-runs the upstream agg/joins (measured ~2x on the whole dedup
-    # stage). Slim columns only; MEMORY_AND_DISK spills at scale.
+    # and both sides of the one attach; the decided pairs (_verify) feed
+    # both reports and the flags — without a persist each consumer re-runs
+    # the upstream agg/joins (measured ~2x on the whole dedup stage). Slim
+    # columns only; MEMORY_AND_DISK spills at scale.
     # Every persist goes through caching.cached() so callers can
     # caching.release_all() once outputs are materialized (paired
     # persist/unpersist lifecycle — bench, scaling job, catalog runner and
@@ -359,48 +333,43 @@ def _dedup(marked: DataFrame) -> DedupResult:
         .filter(F.col("n_bands") >= MIN_SHARED_BANDS)
         .select("id_a", "id_b")
     )
-    cos_pairs, verified_dups = _verify(cand, feats)
+    pairs = _verify(cand, feats)
 
-    # --- P5 reporting: gate >= 0.7 pairs with their cosine -----------------
-    # verified_dups is derived from cos_pairs, so a LEFT join keeps every
-    # verified pair — including one whose signature-ESTIMATED gate fell
-    # under 0.7 (possible for repetitive transcripts: exact set-Jaccard
-    # just above 0.4 while the estimate dips below): duplicate_pairs and
-    # similarity_pairs can never disagree on membership.
+    # --- P5 reporting: one select over the decided pairs --------------------
+    # similarity_pairs keeps the pairs whose estimated gate reaches 0.7 and
+    # every verified pair, even one whose estimate dips under 0.7 (possible
+    # for repetitive transcripts: exact set-Jaccard just above 0.4), so the
+    # two reports can never disagree on membership.  A verified pair
+    # reports its exact gate, every other pair the estimate.
+    near = F.col("is_duplicate")
     est_gate = F.lit(0.5) + F.lit(0.5) * F.col("est_jaccard")
-    similarity_pairs = (
-        cos_pairs.select(
-            F.col("id_a").alias("clip_1"), F.col("id_b").alias("clip_2"),
-            "est_jaccard", "cos",
-        )
-        .join(
-            verified_dups.select(
-                "clip_1", "clip_2",
-                F.col("metadata_similarity").alias("exact_gate_pct"),
-                "is_duplicate",
-            ),
-            ["clip_1", "clip_2"],
-            "left",
-        )
-        .filter((est_gate >= DUP_GATE_MIN) | F.col("is_duplicate").isNotNull())
-        .select(
+
+    def report(keep: F.Column) -> DataFrame:
+        return pairs.filter(keep).select(
             "clip_1", "clip_2",
-            F.coalesce("exact_gate_pct", F.round(est_gate * 100.0, 2))
+            # C7 percent formatting — metadata.py:595-596
+            F.round(F.when(near, F.col("gate")).otherwise(est_gate) * 100.0, 2)
             .alias("metadata_similarity"),
             F.round(F.col("cos") * 100.0, 2).alias("similarity"),
-            F.coalesce("is_duplicate", F.lit(False)).alias("is_duplicate"),
+            "is_duplicate",
         )
-        .orderBy(F.desc("similarity"), "clip_1", "clip_2")  # O2
-    )
-    duplicate_pairs = exact_pairs.unionByName(verified_dups).orderBy(
+
+    verified = report(near)
+    similarity_pairs = report((est_gate >= DUP_GATE_MIN) | near).orderBy(
+        F.desc("similarity"), "clip_1", "clip_2"
+    )  # O2
+    duplicate_pairs = exact_pairs.unionByName(verified).orderBy(
         F.desc("similarity"), "clip_1", "clip_2"
     )  # O3
 
     # --- flags: a clip is a duplicate when its exact group has >= 2 members
     # or its representative is in a verified near-dup pair (symmetric
-    # attachment, metadata.py:608-617)
-    near_rep_ids = (
-        verified_dups.select(
+    # attachment, metadata.py:608-617).  Broadcast by plan, not by AQE at
+    # run time: two ids per verified pair, and AQE's choice depended on
+    # whether the rows' shuffle had started before the decided pairs were
+    # materialized, so the rows were shuffled on rep_id in some runs only.
+    near_rep_ids = F.broadcast(
+        verified.select(
             F.explode(F.array("clip_1", "clip_2")).alias("rep_id")
         )
         .distinct()

@@ -40,7 +40,7 @@ from ..functions.pii import scrub_batch
 ENRICHED_SCHEMA = (
     "clip_id string, sr_hz int, dur_ms int, codec string, transcript string, "
     "ingest_ts timestamp, decode_ok boolean, n_samples bigint, "
-    "header_sr_hz int, rms double, clip_ratio double, is_silent boolean, "
+    "header_sr_hz bigint, rms double, clip_ratio double, is_silent boolean, "
     "lang string, lang_conf double, ppl double, pii_hits int, toxic_hits int, "
     "scrubbed_transcript string, n_chars int, n_tokens int, n_distinct int, "
     "alpha_space_ratio double, t_hash bigint, "

@@ -2409,7 +2409,8 @@ def _duck_clips_dedup_ctes(path: str) -> str:
     eligible reps -> exhaustive near-dup verification (the all-pairs truth
     the reference computes, metadata.py:514-624, made tractable through a
     token inverted index; gate = 0.5 + 0.5*J >= 0.7 then BoW cosine >=
-    0.95 — operators/dedup.py P5/P6 constants)."""
+    0.95 — operators/dedup.py P5/P6 constants) -> per-row ``is_dup``
+    flags (``flg``)."""
     return f"""
 enr AS (SELECT * FROM read_parquet('{path}')),
 grp AS (SELECT t_hash, min(clip_id) AS rep_id, count(*) AS gsize
@@ -2440,7 +2441,12 @@ cosv AS (
            p -> p[1] * p[2])) AS cos
   FROM jac JOIN feats fa ON jac.id_a = fa.clip_id
            JOIN feats fb ON jac.id_b = fb.clip_id),
-verified AS (SELECT * FROM cosv WHERE cos >= 0.95)
+verified AS (SELECT * FROM cosv WHERE cos >= 0.95),
+nearids AS (SELECT id_a AS clip_id FROM verified
+            UNION SELECT id_b FROM verified),
+flg AS (
+  SELECT m.*, (m.eligible AND (m.gsize >= 2 OR n.clip_id IS NOT NULL)) AS is_dup
+  FROM mem m LEFT JOIN nearids n ON m.rep_id = n.clip_id)
 """
 
 
@@ -2452,11 +2458,6 @@ def _duck_clips_labels_oracle(path: str) -> str:
     total = " + ".join(f"s_{name.lower()}" for name in scores)
     return f"""
 WITH {_duck_clips_dedup_ctes(path)},
-nearids AS (SELECT id_a AS clip_id FROM verified
-            UNION SELECT id_b FROM verified),
-flg AS (
-  SELECT m.*, (m.eligible AND (m.gsize >= 2 OR n.clip_id IS NOT NULL)) AS is_dup
-  FROM mem m LEFT JOIN nearids n ON m.rep_id = n.clip_id),
 sc AS (SELECT clip_id, decode_ok, lang, ppl, pii_hits, toxic_hits, is_dup,
               {score_cols}
        FROM flg),
@@ -4199,12 +4200,7 @@ def _duck_evidence_oracle(path: str) -> str:
     unconditionally."""
     cps, dur_dec = _DUCK_CPS, _DUCK_DUR_DEC
     return f"""
-WITH {_duck_clips_dedup_ctes(path)},
-nearids AS (SELECT id_a AS clip_id FROM verified
-            UNION SELECT id_b FROM verified),
-flg AS (
-  SELECT m.*, (m.eligible AND (m.gsize >= 2 OR n.clip_id IS NOT NULL)) AS is_dup
-  FROM mem m LEFT JOIN nearids n ON m.rep_id = n.clip_id)
+WITH {_duck_clips_dedup_ctes(path)}
 SELECT clip_id,
   printf('decode_ok=%s silent=%s clip_ratio=%.4f',
          decode_ok::VARCHAR, is_silent::VARCHAR, round(clip_ratio, 4)) AS ev_accuracy,

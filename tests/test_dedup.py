@@ -67,6 +67,21 @@ def test_duplicate_pairs_thresholds(dd):
     assert (dpairs["similarity"] >= 95.0).all()
 
 
+def test_verified_pairs_are_in_the_similarity_report(dd):
+    # every near-dup pair (not an exact-group star edge) is reported as a
+    # duplicate with the same sims in similarity_pairs: both reports read
+    # the one frame of decided pairs
+    flags, dpairs, spairs = dd
+    star = dpairs["clip_2"].map(flags["dup_of"]) == dpairs["clip_1"]
+    near = dpairs[~star]
+    assert len(near) > 0
+    got = near.merge(spairs, on=["clip_1", "clip_2"], how="left",
+                     suffixes=("", "_sim"))
+    assert got["is_duplicate_sim"].eq(True).all()  # NaN where absent
+    for col in ("metadata_similarity", "similarity"):
+        assert (got[col] == got[f"{col}_sim"]).all(), col
+
+
 def test_dup_of_points_to_representative(dd):
     flags, _, _ = dd
     hot = flags.loc[[f"clip_{i:012d}" for i in range(300) if i % 100 < 5]]

@@ -55,11 +55,13 @@ def test_null_transcript_and_null_bytes_are_routed(spark):
     Null audio bytes fail decode: the row is kept with status "error".
     A zero declared duration and a WAV header saying 0 Hz are zero
     divisors in the score rules; a truncated RIFF and a data chunk longer
-    than its payload fail decode. Every row is scored, and every row's
-    score and action match the pure-Python oracle on the same input."""
-    pdf = pd.concat([clips_pdf(20), clips_pdf(4, start=30)], ignore_index=True)
+    than its payload fail decode. A header rate of 0xFFFFFFFF Hz is an
+    unsigned 32-bit value and must not wrap negative. Every row is scored,
+    and every row's score and action match the pure-Python oracle on the
+    same input."""
+    pdf = pd.concat([clips_pdf(20), clips_pdf(5, start=30)], ignore_index=True)
     no_text, no_audio = pdf["clip_id"][10], pdf["clip_id"][11]
-    zero_dur, zero_sr, short_riff, long_data = pdf["clip_id"][20:24]
+    zero_dur, zero_sr, short_riff, long_data, max_sr = pdf["clip_id"][20:25]
     pdf.loc[10, "transcript"] = None
     pdf.loc[11, "bytes"] = None
     pdf.loc[20, "dur_ms"] = 0
@@ -67,6 +69,8 @@ def test_null_transcript_and_null_bytes_are_routed(spark):
     pdf.at[21, "bytes"] = wav[:24] + bytes(4) + wav[28:]  # fmt sample rate
     pdf.at[22, "bytes"] = pdf["bytes"][22][:12]
     pdf.at[23, "bytes"] = pdf["bytes"][23][:-100]
+    wav = pdf["bytes"][24]
+    pdf.at[24, "bytes"] = wav[:24] + b"\xff" * 4 + wav[28:]
     res = run_pipeline(spark.createDataFrame(pdf, schema=CLIPS_SCHEMA), DEFAULT_RUN_TS)
     got = _by_clip(res.results).set_index("clip_id")
     truth = label_frame(pdf, DEFAULT_RUN_TS).set_index("clip_id").sort_index()
@@ -80,7 +84,10 @@ def test_null_transcript_and_null_bytes_are_routed(spark):
     assert (got.drop(errors)["status"] == "success").all()
     assert got.loc[zero_dur, "dimensions"]["Completeness"]["score"] == 40
     assert got.loc[zero_sr, "dimensions"]["Integrity"]["score"] == 30
+    integrity = got.loc[max_sr, "dimensions"]["Integrity"]
+    assert integrity["score"] == 30
+    assert integrity["evidence"].startswith("decoded_ms=0 "), integrity["evidence"]
     for col in ("overall_quality_score", "recommended_action", "keep"):
         assert (got[col] == truth[col]).all(), col
     m = res.run_metrics.collect()
-    assert len(m) == 1 and (m[0].n_clips, m[0].n_error) == (24, 3)
+    assert len(m) == 1 and (m[0].n_clips, m[0].n_error) == (25, 3)

@@ -82,9 +82,11 @@ def test_pipeline_never_shuffles_audio_bytes(spark):
 
 def test_pipeline_results_branch_exchange_count(spark):
     """Shuffle rounds in the results branch at 200 clips, as
-    tools/plan_report.py counts them for PLANS.md. Dedup joins the exact
-    groups once and scoring reads ``is_dup`` from that join, with no flags
-    join-back, which leaves 15. Update the pin when a change moves it on
+    tools/plan_report.py counts them for PLANS.md (initial and final
+    plan). Dedup joins the exact groups once and scoring reads ``is_dup``
+    from that join, with no flags join-back; the flag join broadcasts the
+    near-duplicate ids by plan, so the rows are never shuffled on
+    ``rep_id``, which leaves 14. Update the pin when a change moves it on
     purpose."""
     from dataquality_spark.datagen.clips import DEFAULT_RUN_TS, clips_df
     from dataquality_spark.pipeline import run_pipeline
@@ -95,7 +97,21 @@ def test_pipeline_results_branch_exchange_count(spark):
     # would be substituted into this plan and change its shape
     spark.catalog.clearCache()
     res = run_pipeline(clips_df(spark, 200), DEFAULT_RUN_TS)
-    assert facts(formatted_plan(res.results, execute=True))["exchanges"] == 15
+    assert facts(formatted_plan(res.results, execute=True))["exchanges"] == 14
+
+
+def test_pipeline_persists_four_frames(spark):
+    """A build persists ``enriched`` plus dedup's exact groups, its
+    representatives' features and its one frame of decided pairs; both
+    pair reports and the flags read that frame, so nothing else is
+    cached."""
+    from dataquality_spark.caching import release_all
+    from dataquality_spark.datagen.clips import DEFAULT_RUN_TS, clips_df
+    from dataquality_spark.pipeline import run_pipeline
+
+    release_all()
+    run_pipeline(clips_df(spark, 50), DEFAULT_RUN_TS)
+    assert release_all() == 4
 
 
 def test_events_top_recent_is_take_ordered(spark):
@@ -167,11 +183,11 @@ def test_audio_matchers_share_one_decode(spark):
 
 
 def test_exact_verify_is_jvm_native(spark):
-    """The dedup funnel crosses into Python once: one mapInPandas pass
-    computes the signature estimate and the cosine together, and the
-    exact set-Jaccard verify on its cos>=0.95 survivors stays in
-    whole-stage codegen (two equi-joins + array_intersect, no
-    cogroup/applyInPandas round-trip). So the duplicate pairs plan holds
+    """The dedup funnel crosses into Python once: the exact set Jaccard
+    runs natively in whole-stage codegen (array_intersect/size over the
+    token hashes the one attach joined, no cogroup/applyInPandas
+    round-trip) before the one mapInPandas pass (``est_cos``) computes the
+    signature estimate and the cosine. So the duplicate pairs plan holds
     exactly one dedup Python-boundary operator (plus the datagen and
     enrich passes upstream) and no FlatMapCoGroupsInPandas anywhere."""
     import re as _re
