@@ -112,13 +112,18 @@ def main() -> None:
     # warm-up: one untimed pass over the timed input starts the Python
     # workers, builds the scorer models and compiles the pass's classes
     harness.timed_pass(clips)
-    # Classes compiled during each repeat: near zero once the warm-up has
-    # filled the codegen cache, so a thrashing cache shows here.
-    repeat_secs, codegen_compiles = [], []
+    # JVM work during each repeat: classes compiled (near zero once the
+    # warm-up has filled the codegen cache, so a thrashing cache shows
+    # here), and JIT and GC seconds (the repeat walls keep falling while
+    # HotSpot still compiles).
+    counters = {"codegen_compiles": harness.codegen_compiles,
+                "jit_s": harness.jit_seconds, "gc_s": harness.gc_seconds}
+    repeat_secs, jvm_work = [], {k: [] for k in counters}
     for _ in range(repeats):
-        before = harness.codegen_compiles(spark)
+        before = {k: read(spark) for k, read in counters.items()}
         repeat_secs.append(round(harness.timed_pass(clips), 3))
-        codegen_compiles.append(harness.codegen_compiles(spark) - before)
+        for k, read in counters.items():
+            jvm_work[k].append(round(read(spark) - before[k], 3))
     clip_sec = min(repeat_secs)
     timings["clips_pipeline"] = round(clip_sec, 3)
     clips_per_sec = round(N_CLIPS / clip_sec, 1)
@@ -192,7 +197,7 @@ def main() -> None:
         "cpus": CPUS,
         "pipeline_repeats": repeats,
         "pipeline_repeat_secs": repeat_secs,
-        "codegen_compiles": codegen_compiles,
+        **jvm_work,
         "host_load_at_start": load_at_start,
         "host_load_at_end": _host_load(),
     }))

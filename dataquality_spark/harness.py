@@ -82,6 +82,19 @@ def codegen_compiles(spark: SparkSession) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+def jit_seconds(spark: SparkSession) -> float:
+    """Seconds HotSpot's JIT compilers have spent in this JVM so far,
+    summed over their threads."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    return mf.getCompilationMXBean().getTotalCompilationTime() / 1000
+
+
+def gc_seconds(spark: SparkSession) -> float:
+    """Seconds this JVM's garbage collectors have spent so far."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    return sum(gc.getCollectionTime() for gc in mf.getGarbageCollectorMXBeans()) / 1000
+
+
 def force(df: DataFrame) -> None:
     """Fully execute a DataFrame without driver-side collection cost."""
     df.write.format("noop").mode("overwrite").save()

@@ -1,7 +1,8 @@
 """The timed-run harness behind bench.py and the spark-submit scaling job:
 a failed sink must fail the pass, a warmed, timed pass must report a
 wall and leave no cached frame behind, a repeated pass must reuse the
-code the first one generated, and the scaling job's record must keep its
+code the first one generated, a pass must show in the JIT and GC
+counters bench.py records, and the scaling job's record must keep its
 task-span fields."""
 
 from __future__ import annotations
@@ -52,6 +53,16 @@ def test_repeated_pass_reuses_generated_code(spark):
         harness.timed_pass(clips)
         compiled.append(harness.codegen_compiles(spark) - before)
     assert compiled[1] < 134 / 4, compiled
+
+
+def test_timed_pass_adds_jit_and_gc_seconds(spark):
+    # bench.py records both per repeat: a pass plans and runs on the
+    # driver JVM, so HotSpot compiles and the collectors run during it.
+    clips = clips_df(spark, 64)
+    jit, gc = harness.jit_seconds(spark), harness.gc_seconds(spark)
+    harness.timed_pass(clips)
+    assert harness.jit_seconds(spark) > jit
+    assert harness.gc_seconds(spark) > gc
 
 
 def test_scaling_job_writes_its_task_span_fields():
