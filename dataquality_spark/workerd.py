@@ -12,7 +12,7 @@ so, it:
   (a cluster without PySpark installed) it keeps the archives;
 * imports the modules worker tasks use (``WARM_IMPORTS``) once, before
   the first fork, so each worker starts with them imported and shares
-  their pages with the daemon;
+  their pages with the daemon, and freezes them out of the collector;
 * drops, before every task, the zipimporters of the archives on
   ``PYTHONPATH``. PySpark's worker calls ``importlib.invalidate_caches()``
   before every task; on Python 3.11/3.12 that re-reads every cached
@@ -24,6 +24,7 @@ Imported as a library it changes nothing.
 
 from __future__ import annotations
 
+import gc
 import importlib
 import importlib.machinery
 import os
@@ -100,6 +101,10 @@ def main() -> None:
         return worker_main(infile, outfile)
 
     daemon.worker_main = _worker_main
+    # What the daemon holds now outlives every worker: frozen, the full
+    # gc.collect() PySpark runs in a worker after each task neither walks
+    # it nor copies the pages the worker shares with the daemon.
+    gc.freeze()
     daemon.manager()
 
 

@@ -1,9 +1,9 @@
 """The engine's Python worker daemon (dataquality_spark/workerd.py): the
 session forks its workers from it, they import the installed PySpark
 when its version is the archive's and the archive otherwise, the daemon
-pre-imports every module the engine's tasks import, its purge leaves
-imports working, and it starts under spark-submit --py-files with
-PYTHONPATH unset."""
+pre-imports every module the engine's tasks import and freezes them
+out of the collector, its purge leaves imports working, and it starts
+under spark-submit --py-files with PYTHONPATH unset."""
 
 from __future__ import annotations
 
@@ -13,7 +13,9 @@ import os
 import subprocess
 import sys
 import textwrap
+import zipfile
 
+import pyspark
 import pytest
 
 from tools.scaling_job import build_zip
@@ -27,54 +29,41 @@ SPARK_CORE_JAR = glob.glob(os.path.join(SPARK_HOME, "jars", "spark-core_*.jar"))
 SPARK_ZIP = os.path.join(SPARK_LIB, "pyspark.zip")
 
 
-def _installed_matches_archive() -> bool:
-    import zipfile
-
-    import pyspark
-
-    with open(os.path.join(os.path.dirname(pyspark.__file__), "version.py"), "rb") as f:
-        installed = f.read()
-    with zipfile.ZipFile(SPARK_ZIP) as z:
-        return z.read("pyspark/version.py") == installed
-
-
 def _worker_pyspark() -> str:
     """The ``pyspark/__init__.py`` a worker should import: the installed
     package's when its version.py is the archive's, else the archive's."""
-    import pyspark
-
-    if _installed_matches_archive():
-        return pyspark.__file__
+    with open(os.path.join(os.path.dirname(pyspark.__file__), "version.py"), "rb") as f:
+        installed = f.read()
+    with zipfile.ZipFile(SPARK_ZIP) as z:
+        if z.read("pyspark/version.py") == installed:
+            return pyspark.__file__
     return os.path.join(SPARK_ZIP, "pyspark", "__init__.py")
 
 
 def test_python_workers_fork_from_the_engine_daemon(spark):
-    def argv0(batches):
+    def worker(batches):
+        import gc
         import sys
 
-        import pandas as pd
-        for b in batches:
-            yield pd.DataFrame({"argv0": [sys.argv[0]] * len(b)})
-
-    def pyspark_file(batches):
         import pandas as pd
         import pyspark
 
         for b in batches:
-            yield pd.DataFrame({"f": [pyspark.__file__] * len(b)})
+            yield pd.DataFrame({"argv0": [sys.argv[0]] * len(b),
+                                "f": [pyspark.__file__] * len(b),
+                                "frozen": [gc.get_freeze_count()] * len(b)})
 
-    rows = spark.range(1).mapInPandas(argv0, "argv0 string").collect()
-    assert rows[0].argv0.endswith("dataquality_spark/workerd.py")
-    f = spark.range(1).mapInPandas(pyspark_file, "f string").first().f
-    assert f == _worker_pyspark(), f
+    w = spark.range(1).mapInPandas(worker, "argv0 string, f string, frozen long").first()
+    assert w.argv0.endswith("dataquality_spark/workerd.py"), w.argv0
+    assert w.f == _worker_pyspark(), w.f
+    # the daemon froze what it imported before forking this worker
+    assert w.frozen > 0
 
 
 def test_path_choice_keeps_the_archive_unless_its_version_is_installed(tmp_path):
     # A fresh interpreter with a stand-in archive first on its path, as
     # Spark puts pyspark.zip: the installed copy replaces it only when
     # the two version.py files are the same.
-    import zipfile
-
     archive = str(tmp_path / "pyspark.zip")
     with zipfile.ZipFile(archive, "w") as z:
         z.writestr("pyspark/__init__.py", "")
@@ -145,20 +134,19 @@ def test_daemon_pre_imports_what_the_engine_tasks_import(tmp_path):
         from dataquality_spark.session import get_spark
 
         WATCHED = ("pandas", "pyarrow", "dataquality_spark")
-        LIST = ("import json, sys; print(json.dumps(sorted("
-                "m for m in sys.modules if m.split('.')[0] in %r)))" % (WATCHED,))
+        # a fresh interpreter in the daemon's environment, started as the
+        # daemon starts
+        DAEMON = ("import json, sys; from dataquality_spark import workerd; "
+                  "workerd.warm(); print(json.dumps("
+                  "[m for m in sys.modules if m.split('.')[0] in %r]))" % (WATCHED,))
 
-        def own_modules(batches):
-            mods = sorted(m for m in sys.modules if m.split(".")[0] in WATCHED)
+        def worker_modules(batches):
+            mods = [m for m in sys.modules if m.split(".")[0] in WATCHED]
             for b in batches:
                 yield pd.DataFrame({"m": [json.dumps(mods)] * len(b)})
 
         def daemon_modules(batches):
-            # a fresh interpreter in the daemon's environment, started as
-            # the daemon starts
-            code = ("from dataquality_spark import workerd; workerd.warm(); "
-                    + LIST)
-            out = subprocess.run([sys.executable, "-c", code],
+            out = subprocess.run([sys.executable, "-c", DAEMON],
                                  capture_output=True, text=True, check=True)
             for b in batches:
                 yield pd.DataFrame({"m": [out.stdout] * len(b)})
@@ -171,7 +159,7 @@ def test_daemon_pre_imports_what_the_engine_tasks_import(tmp_path):
         harness.force(offset_align_pairs(offset_fingerprints(clips)))
         release_all()
         seen = set()
-        for r in spark.range(0, 8, 1, 8).mapInPandas(own_modules, "m string").collect():
+        for r in spark.range(0, 8, 1, 8).mapInPandas(worker_modules, "m string").collect():
             seen.update(json.loads(r.m))
         daemon = spark.range(1).mapInPandas(daemon_modules, "m string").first().m
         print(json.dumps({"workers": sorted(seen), "daemon": json.loads(daemon)}))
